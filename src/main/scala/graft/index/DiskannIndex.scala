@@ -1156,9 +1156,11 @@ object DiskannIndex {
       val cached = tombstoneCache.get(indexPath)
       if (cached != null && cached._1 == fp) return cached._2
       try {
-        val set = spark.read.option("ignoreMissingFiles", "true")
+        // the declared schema (deleteRows writes row_id LONG) skips the
+        // schema-inference job Spark runs for every read of new files
+        val set = spark.read.schema("row_id LONG")
+          .option("ignoreMissingFiles", "true")
           .parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
-          .select(col("row_id").cast(LongType))
           .collect().map(_.getLong(0)).toSet
         tombstoneCache.put(indexPath, (fp, set))
         return set
@@ -1446,9 +1448,16 @@ object DiskannIndex {
       searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty,
       metrics: Option[SearchMetrics] = None,
-      nProbe: Int = 0): DataFrame = {
+      nProbe: Int = 0): DataFrame =
+    searchRows(spark, path0, queryRows(queries), k, searchListSize, rescore,
+      tombstones, metrics, nProbe)
+
+  /** Collect a (qid, qvec [, qlabels]) query frame to driver rows; labels
+    * normalized, a null qlabels means unfiltered. */
+  private def queryRows(
+      queries: DataFrame): Array[(Long, Array[Float], Array[Short])] = {
     val hasQLabels = queries.columns.contains("qlabels")
-    val qRows: Array[(Long, Array[Float], Array[Short])] = queries.collect().map { r =>
+    queries.collect().map { r =>
       // null query vector => zero-vector search (labels/mod.rs:214-216)
       val qv = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
       val ql = if (hasQLabels) r.getAs[mutable.Seq[Short]]("qlabels") match {
@@ -1457,29 +1466,29 @@ object DiskannIndex {
       } else null
       (r.getAs[Long]("qid"), qv, ql)
     }
-    searchRows(spark, path0, qRows, k, searchListSize, rescore, tombstones,
-      metrics, nProbe)
   }
 
   /**
    * Low-latency POINT query — the reference's primary operation (one
    * `ORDER BY embedding <=> q LIMIT k` per client call) as a driver API:
    * returns the k (row_id, dist) pairs directly. When every probed shard's
-   * searcher is warm in this JVM, the entire call is driver-side — no
-   * Spark job, no DataFrame round-trip — which is what makes ms-scale
-   * serving possible from a long-lived session (ServingBench measures it;
-   * cold shards fall back to the scan path transparently).
+   * searcher is warm in this JVM, the entire call is driver-side
+   * ([[searchWarm]]) — no Spark job, no broadcast, no DataFrame — which is
+   * what makes ms-scale serving possible from a long-lived session (the
+   * benchmark's `ann_serve` measures it; cold shards fall back to the scan
+   * path transparently).
    */
   def searchPoint(spark: SparkSession, path0: String, qvec: Array[Float],
       k: Int, searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
       qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
-    val ql = Option(qlabels).map(LabelSets.normalize).orNull
-    searchRows(spark, path0, Array((0L, qvec, ql)), k, searchListSize,
-      rescore, tombstones, None, nProbe)
-      .collect()
-      .map(r => (r.getLong(1), r.getDouble(2)))
-      .sortBy { case (rid, d) => (d, rid) }.toSeq
+    val q = Array((0L, qvec, Option(qlabels).map(LabelSets.normalize).orNull))
+    searchWarm(spark, path0, q, k, searchListSize, rescore, tombstones, nProbe)
+      .getOrElse(searchRows(spark, path0, q, k, searchListSize, rescore,
+        tombstones, None, nProbe).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
+      .map(h => (h._2, h._3))
+      .sortBy { case (rid, d) => (d, rid) }
   }
 
   /** Memoized serving RDD per index path: one partition per shard over the
@@ -1637,14 +1646,8 @@ object DiskannIndex {
               hasLabels, dims))
         }
         if (searcher == null) Iterator.empty
-        else qBc.value.iterator
-          .filter { case (qid, _, _) =>
-            probeBc.value.get(qid).forall(_.contains(shard)) }
-          .flatMap { case (qid, qv, ql) =>
-            searcher.search(qv, k, searchListSize, rescore, ql,
-              rid => tombBc.value.contains(rid), report, null)
-              .take(k).map { case (rid, d) => (qid, rid, d) }
-          }
+        else searchShard(searcher, shard, qBc.value.iterator, k,
+          searchListSize, rescore, tombBc.value, probeBc.value, report, None)
       }
     }
     // submit ONLY the probed partitions (partition id == shard id by the
@@ -1659,31 +1662,20 @@ object DiskannIndex {
     }.toSeq.sortBy(h => (h._1, h._3, h._2))
   }
 
-  /** [[search]] after query collection — the shared kernel for the
-    * DataFrame path and [[searchPoint]]. */
-  private[graft] def searchRows(spark: SparkSession, path0: String,
-      qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
-      searchListSize: Int, rescore: Int, tombstones: Set[Long],
-      metrics: Option[SearchMetrics], nProbe: Int): DataFrame = {
-    // resolve the active generation ONCE: meta and nodes must come from the
-    // same version even if a compaction swap lands mid-query
+  /** Resolve the active generation ONCE per query set — meta and nodes must
+    * come from the same version even if a compaction swap lands mid-query —
+    * with the per-query IVF probe sets (absent = every shard) and the
+    * shards some query needs. */
+  private def planSearch(spark: SparkSession, path0: String,
+      qRows: Array[(Long, Array[Float], Array[Short])], nProbe: Int)
+      : (String, IndexMeta, Map[Long, Array[Int]], Seq[Int]) = {
     val path = resolveRoot(spark, path0)
     val meta = loadMeta(spark, path)
     val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
-    // IVF routing: per-query probe set computed once on the driver from the
-    // meta centroids (tiny); absent = query searches every shard
     val probeOf: Map[Long, Array[Int]] =
       qRows.flatMap { case (qid, qv, _) =>
         probeShardsFor(meta, metric, qv, nProbe).map(qid -> _)
       }.toMap
-    val probeBc = spark.sparkContext.broadcast(probeOf)
-    val qBc = spark.sparkContext.broadcast(qRows)
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val report = reportDistFn(metric)
-
     // IVF routing also prunes the SCAN: only shards some query probes are
     // read at all (partition-pruned by the shard directory key) — at
     // thousands of shards a probe touches O(queries × nProbe) shards, not
@@ -1692,53 +1684,113 @@ object DiskannIndex {
       if (probeOf.nonEmpty && probeOf.size == qRows.length)
         probeOf.values.flatten.toSet.toSeq.sorted
       else 0 until meta.numShards
+    (path, meta, probeOf, neededShards)
+  }
+
+  /** Searcher cache key: the CALLER's index path + the per-shard epoch. The
+    * resolved generation dir changes on every compaction, but an untouched
+    * shard keeps its epoch, so its decoded graph stays warm across
+    * incremental compactions. */
+  private def shardKey(path0: String, meta: IndexMeta, shard: Int): String =
+    s"$path0#$shard#${meta.shardBuildIds(shard)}"
+
+  /** Answer queries on one shard's decoded searcher: per query whose IVF
+    * probe set includes the shard, the shard's k best (qid, row_id, dist). */
+  private def searchShard(searcher: GraphSearcher, shard: Int,
+      qs: Iterator[(Long, Array[Float], Array[Short])], k: Int,
+      searchListSize: Int, rescore: Int, tomb: Set[Long],
+      probes: Map[Long, Array[Int]],
+      report: (Array[Float], Array[Float]) => Double,
+      metrics: Option[SearchMetrics]): Iterator[(Long, Long, Double)] =
+    qs.filter { case (qid, _, _) => probes.get(qid).forall(_.contains(shard)) }
+      .flatMap { case (qid, qvec, qlabels) =>
+        val st = if (metrics.isDefined) new SearchStats else null
+        val hits = searcher.search(qvec, k, searchListSize, rescore, qlabels,
+          rid => tomb.contains(rid), report, st)
+        metrics.foreach { m =>
+          m.nodesVisited.add(st.nodesVisited)
+          m.quantizedCmps.add(st.quantizedCmps)
+          m.exactCmps.add(st.exactCmps)
+        }
+        hits.iterator.take(k).map { case (rid, d) => (qid, rid, d) }
+      }
+
+  /** The driver-only serving kernel: when every probed shard's decoded
+    * searcher lives in THIS JVM's cache, answer here — per query the top-k
+    * (qid, row_id, dist) in the scan path's (dist, row_id) order — with no
+    * Spark job, broadcast or DataFrame; None when any probed shard is cold
+    * (always, in cluster mode, where the driver's cache is empty). The
+    * analog of a reference backend serving from shared buffers. */
+  private[graft] def searchWarm(spark: SparkSession, path0: String,
+      qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
+      searchListSize: Int, rescore: Int, tombstones: Set[Long], nProbe: Int,
+      metrics: Option[SearchMetrics] = None): Option[Seq[(Long, Long, Double)]] = {
+    val (_, meta, probeOf, neededShards) = planSearch(spark, path0, qRows, nProbe)
+    val warm = neededShards.flatMap(sh =>
+      GraphSearcher.peek(shardKey(path0, meta, sh)).map(sh -> _))
+    if (warm.length < neededShards.length) None
+    else {
+      val report = reportDistFn(Metric(meta.metric))
+      Some(warm.flatMap { case (shard, searcher) =>
+        searchShard(searcher, shard, qRows.iterator, k, searchListSize,
+          rescore, tombstones, probeOf, report, metrics)
+      }.groupBy(_._1).valuesIterator
+        .flatMap(_.sortBy(h => (h._3, h._2)).take(k)).toSeq)
+    }
+  }
+
+  /** [[search]] after query collection — the shared kernel for the
+    * DataFrame path and [[searchPoint]]'s cold fallback. */
+  private[graft] def searchRows(spark: SparkSession, path0: String,
+      qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
+      searchListSize: Int, rescore: Int, tombstones: Set[Long],
+      metrics: Option[SearchMetrics], nProbe: Int): DataFrame = {
     val resultSchema = StructType(Seq(
       StructField("qid", LongType, nullable = false),
       StructField("row_id", LongType, nullable = false),
       StructField("dist", DoubleType, nullable = false)))
+    def localDf(hits: Seq[(Long, Long, Double)]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(
+        hits.map(h => Row(h._1, h._2, h._3)): _*), resultSchema)
 
-    // cache keys use the CALLER's index path + the per-shard epoch: the
-    // resolved generation dir changes on every compaction, but an untouched
-    // shard keeps its epoch, so its decoded graph stays warm across
-    // incremental compactions
-    val shardIds = meta.shardBuildIds
-    val cachePath = path0
+    // All-warm serving fast path, gated to small query batches (large ones
+    // belong to searchDistributed): the per-query top-k merge is over ≤
+    // nShards×k driver-local rows, so return them as a LocalRelation.
+    // Routing them through the window merge below would spend a full Spark
+    // job + shuffle on rows already in hand (measured: single-query p50
+    // ~190 ms through the window vs low-ms driver-side).
+    if (qRows.length <= 128) {
+      val warm = searchWarm(spark, path0, qRows, k, searchListSize, rescore,
+        tombstones, nProbe, metrics)
+      if (warm.isDefined) return localDf(warm.get)
+    }
 
-    def searchShard(searcher: GraphSearcher, shard: Int,
-        qs: Iterator[(Long, Array[Float], Array[Short])],
-        tomb: Set[Long], probes: Map[Long, Array[Int]]): Iterator[Row] =
-      qs.filter { case (qid, _, _) => probes.get(qid).forall(_.contains(shard)) }
-        .flatMap { case (qid, qvec, qlabels) =>
-          val st = if (metrics.isDefined) new SearchStats else null
-          val hits = searcher.search(qvec, k, searchListSize, rescore, qlabels,
-            rid => tomb.contains(rid), report, st)
-          metrics.foreach { m =>
-            m.nodesVisited.add(st.nodesVisited)
-            m.quantizedCmps.add(st.quantizedCmps)
-            m.exactCmps.add(st.exactCmps)
-          }
-          hits.take(k).map { case (rid, d) => Row(qid, rid, d) }
-        }
+    val (path, meta, probeOf, neededShards) = planSearch(spark, path0, qRows, nProbe)
+    val metric = Metric(meta.metric)
+    val model =
+      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
+      else null
+    val probeBc = spark.sparkContext.broadcast(probeOf)
+    val qBc = spark.sparkContext.broadcast(qRows)
+    val tombBc = spark.sparkContext.broadcast(tombstones)
+    val report = reportDistFn(metric)
 
-    // Serving warm path: a shard whose decoded searcher already lives in
-    // THIS JVM's cache is answered directly, with no nodes scan at all — the
-    // analog of a reference backend serving from shared buffers instead of
-    // re-reading index pages. In local mode (and any serving node colocated
-    // with its executor cache) repeat point queries skip Parquet entirely; in
-    // cluster mode the query-issuing driver has an empty cache, every shard
-    // is cold, and the scan path below is unchanged. Gated to small query
-    // batches — large batches belong to searchDistributed anyway.
+    // Partly warm: a shard whose decoded searcher already lives in this
+    // JVM's cache is answered directly, with no nodes scan at all; only the
+    // cold shards are read.
     val warmPairs: Seq[(Int, GraphSearcher)] =
       if (qRows.length <= 128)
         neededShards.flatMap(sh =>
-          GraphSearcher.peek(s"$cachePath#$sh#${shardIds(sh)}").map(sh -> _))
+          GraphSearcher.peek(shardKey(path0, meta, sh)).map(sh -> _))
       else Seq.empty
     val warmSet = warmPairs.map(_._1).toSet
     val coldShards = neededShards.filterNot(warmSet)
-    val warmShards = warmPairs.map(_._1)
-    val warmRows: Seq[Row] = warmPairs.flatMap { case (shard, searcher) =>
-      searchShard(searcher, shard, qRows.iterator, tombstones, probeOf).toSeq
-    }
+    val warmPartial: Option[DataFrame] =
+      if (warmPairs.isEmpty) None
+      else Some(localDf(warmPairs.flatMap { case (shard, searcher) =>
+        searchShard(searcher, shard, qRows.iterator, k, searchListSize,
+          rescore, tombstones, probeOf, report, metrics)
+      }))
 
     val coldPartial: Option[DataFrame] = if (coldShards.isEmpty) None else {
       val coldNodes =
@@ -1747,43 +1799,21 @@ object DiskannIndex {
         val rows = it.toArray
         if (rows.isEmpty) Iterator.empty
         else rows.groupBy(_.getAs[Int]("shard")).iterator.flatMap { case (shard, shardRows) =>
-          val searcher = GraphSearcher.getOrBuild(
-            s"$cachePath#$shard#${shardIds(shard)}",
+          val searcher = GraphSearcher.getOrBuild(shardKey(path0, meta, shard),
             () => buildShardSearcher(path, shard, shardRows, metric, model,
               meta.hasLabels, meta.dimsToIndex))
-          searchShard(searcher, shard, qBc.value.iterator, tombBc.value, probeBc.value)
+          searchShard(searcher, shard, qBc.value.iterator, k, searchListSize,
+            rescore, tombBc.value, probeBc.value, report, metrics)
+            .map(h => Row(h._1, h._2, h._3))
         }
       }(org.apache.spark.sql.Encoders.row(resultSchema)))
     }
-
-    // All-warm serving fast path: every probed shard answered from this
-    // JVM's decoded searchers, so the per-query top-k merge is over ≤
-    // nShards×k DRIVER-LOCAL rows — do it here and return a LocalRelation.
-    // Routing it through the window merge below would spend a full Spark
-    // job + shuffle on rows already in hand (measured: single-query p50
-    // ~190 ms through the window vs low-ms driver-side; the reference
-    // analog is answering from shared buffers without planning a scan).
-    // Same ordering rule as the window ((dist, row_id) ascending), so the
-    // result content is bit-identical.
-    if (coldShards.isEmpty) {
-      val topk = warmRows.groupBy(_.getLong(0)).iterator.flatMap {
-        case (_, rs) => rs.sortBy(r => (r.getDouble(2), r.getLong(1))).take(k)
-      }.toSeq
-      return spark.createDataFrame(
-        java.util.Arrays.asList(topk: _*), resultSchema)
-    }
-
-    val warmPartial: Option[DataFrame] =
-      if (warmShards.isEmpty) None
-      else Some(spark.createDataFrame(
-        java.util.Arrays.asList(warmRows: _*), resultSchema))
 
     val partial = (warmPartial, coldPartial) match {
       case (Some(w), Some(c)) => w.unionByName(c)
       case (Some(w), None) => w
       case (None, Some(c)) => c
-      case (None, None) =>
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), resultSchema)
+      case (None, None) => localDf(Seq.empty)
     }
 
     // final top-k merge per query
@@ -2438,27 +2468,7 @@ object DiskannIndex {
     val report = reportDistFn(Metric(meta.metric))
     // SNAPSHOT the delta before the main search resolves its generation
     // (the race-with-compact invariant — see searchDistributedFresh)
-    val hasDLabels = delta.columns.contains("labels")
-    // enforced, not advisory (the knnGraph guard discipline): the limit
-    // caps what can reach the driver, one extra row proves oversize
-    val maxDeltaBc = spark.conf
-      .get("graft.delta.maxBroadcastRows", "2000000").toInt
-    val collected = delta.limit(maxDeltaBc + 1).collect()
-    require(collected.length <= maxDeltaBc,
-      s"rangeSearchDistributedFresh: pending delta exceeds " +
-        s"graft.delta.maxBroadcastRows ($maxDeltaBc) — the fresh batch " +
-        "paths broadcast the delta, which the compaction contract keeps " +
-        "small; fold it with StreamingIngest.compactNow (or enable " +
-        "autoCompact), or raise the knob if the driver can hold it")
-    val deltaRows: Array[(Long, Array[Float], Array[Short])] =
-      collected.map { r =>
-        (r.getAs[Long]("row_id"),
-          Option(r.getAs[mutable.Seq[Float]]("vec")).map(_.toArray).orNull,
-          if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray))
-            .getOrElse(Array.emptyShortArray)
-          else null)
-      }
+    val deltaRows = collectDelta(spark, delta, "rangeSearchDistributedFresh")
     val main = rangeSearchDistributed(spark, path0, queries, radius,
       searchListSize, rescore, tombstones, maxResults, strict)
     val dBc = spark.sparkContext.broadcast(deltaRows)
@@ -2480,8 +2490,8 @@ object DiskannIndex {
         val ql = Option(r.getAs[mutable.Seq[Short]]("qlabels"))
           .map(s => LabelSets.normalize(s.toArray)).orNull
         dr.iterator.flatMap { case (rid, v, lbs) =>
-          deltaRadiusMatch(rid, v, lbs, qv0, ql, radius, tomb.contains,
-            report).map(d => Row(qid, rid, d)).iterator
+          deltaScore(rid, v, lbs, qv0, ql, tomb.contains, report)
+            .filter(_ <= radius).map(d => Row(qid, rid, d)).iterator
         }
       }
     }(org.apache.spark.sql.Encoders.row(resultSchema))
@@ -2499,22 +2509,12 @@ object DiskannIndex {
       tombstones: Set[Long] = Set.empty,
       metrics: Option[SearchMetrics] = None, nProbe: Int = 0): DataFrame = {
     val meta = loadMeta(spark, path)
-    val metric = Metric(meta.metric)
-    val report = reportDistFn(metric)
-    val main = search(spark, path, queries, k, searchListSize, rescore,
+    val report = reportDistFn(Metric(meta.metric))
+    // the queries are collected ONCE, for the main search and the delta pass
+    val qRows = queryRows(queries)
+    val main = searchRows(spark, path, qRows, k, searchListSize, rescore,
       tombstones, metrics, nProbe)
-
-    val hasQLabels = queries.columns.contains("qlabels")
     val hasDLabels = delta.columns.contains("labels")
-    val qRows = queries.collect().map { r =>
-      (r.getAs[Long]("qid"),
-        // null query vector => zero-vector search, same as the main path
-        // (labels/mod.rs:214-216)
-        Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull,
-        if (hasQLabels) Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull
-        else null)
-    }
     val qBc = spark.sparkContext.broadcast(qRows)
     val tombBc = spark.sparkContext.broadcast(tombstones)
     val resultSchema = StructType(Seq(
@@ -2524,19 +2524,10 @@ object DiskannIndex {
 
     val deltaHits = delta.mapPartitions { it =>
       val tomb = tombBc.value
-      it.flatMap { r =>
-        val rid = r.getAs[Long]("row_id")
-        if (tomb.contains(rid)) Iterator.empty
-        else {
-          val v = r.getAs[mutable.Seq[Float]]("vec").toArray
-          val lbs = if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray)).getOrElse(Array.emptyShortArray)
-          else null
-          qBc.value.iterator.flatMap { case (qid, qv0, ql) =>
-            val qv = if (qv0 == null) new Array[Float](v.length) else qv0
-            val ok = ql == null || (lbs != null && LabelSets.overlaps(lbs, ql))
-            if (ok) Iterator.single(Row(qid, rid, report(v, qv))) else Iterator.empty
-          }
+      liveDeltaRows(it, hasDLabels, tomb).flatMap { case (rid, v, lbs) =>
+        qBc.value.iterator.flatMap { case (qid, qv0, ql) =>
+          deltaScore(rid, v, lbs, qv0, ql, tomb.contains, report)
+            .map(Row(qid, rid, _)).iterator
         }
       }
     }(org.apache.spark.sql.Encoders.row(resultSchema))
@@ -2552,6 +2543,63 @@ object DiskannIndex {
       .drop("rnk")
   }
 
+  /** Score one delta row against one query — THE definition of the
+    * delta-side semantics, shared by every fresh path (top-k and radius,
+    * point, online and batch) so they can never drift: a tombstoned or
+    * null-vector row never matches; a labeled query matches only rows whose
+    * labels overlap it, so an unlabeled delta row (null `lbs` = the delta
+    * has no labels column) never matches a labeled query; a null query
+    * vector searches the zero vector (labels/mod.rs:214-216). `lbs` and
+    * `ql` must already be normalized. Returns the REPORT distance. */
+  private[graft] def deltaScore(rid: Long, v: Array[Float],
+      lbs: Array[Short], qv0: Array[Float], ql: Array[Short],
+      tombstoned: Long => Boolean,
+      report: (Array[Float], Array[Float]) => Double): Option[Double] =
+    if (tombstoned(rid) || v == null) None
+    else if (!(ql == null || (lbs != null && LabelSets.overlaps(lbs, ql))))
+      None
+    else Some(report(v, if (qv0 == null) new Array[Float](v.length) else qv0))
+
+  /** Decode a delta scan's (row_id, vec [, labels]) rows for [[deltaScore]],
+    * skipping tombstoned rows BEFORE materializing the vector and labels: a
+    * heavily-tombstoned delta would otherwise pay an array copy + label
+    * normalize per masked row for no output. */
+  private[graft] def liveDeltaRows(it: Iterator[Row], hasDLabels: Boolean,
+      tomb: Set[Long]): Iterator[(Long, Array[Float], Array[Short])] =
+    it.filterNot(r => tomb.contains(r.getAs[Long]("row_id"))).map { r =>
+      (r.getAs[Long]("row_id"),
+        Option(r.getAs[mutable.Seq[Float]]("vec")).map(_.toArray).orNull,
+        if (hasDLabels) LabelSets.normalize(
+          Option(r.getAs[mutable.Seq[Short]]("labels")).map(_.toArray).orNull)
+        else null)
+    }
+
+  /** The pending delta as driver rows for [[deltaScore]], null-vector rows
+    * (which never match) dropped. Enforced, not advisory (the knnGraph guard
+    * discipline): the limit caps what can reach the driver, and one extra
+    * row proves oversize and fails by the knob's name. A known bound
+    * `rowsAtMost` within the cap (footer counts) skips the limit: a plain
+    * collect is one job, the limit's incremental take up to log4(parts). */
+  private[graft] def collectDelta(spark: SparkSession, delta: DataFrame,
+      caller: String,
+      rowsAtMost: Long = Long.MaxValue): Array[(Long, Array[Float], Array[Short])] = {
+    val cap = maxDeltaRows(spark)
+    val live = delta.filter(col("vec").isNotNull)
+    val collected =
+      if (rowsAtMost <= cap) live.collect() else live.limit(cap + 1).collect()
+    require(collected.length <= cap,
+      s"$caller: pending delta exceeds graft.delta.maxBroadcastRows " +
+        s"($cap) — the fresh paths hold the delta on the driver (the batch " +
+        "ones broadcast it), which the compaction contract keeps small; " +
+        "fold it with StreamingIngest.compactNow (or enable autoCompact), " +
+        "or raise the knob if the driver can hold it")
+    liveDeltaRows(collected.iterator, delta.columns.contains("labels"),
+      Set.empty).toArray
+  }
+
+  private[graft] def maxDeltaRows(spark: SparkSession): Int =
+    spark.conf.get("graft.delta.maxBroadcastRows", "2000000").toInt
+
   /**
    * Exact radius pass over an UNINDEXED delta (the radius twin of
    * [[searchWithDelta]]'s delta kernel): every delta row within `radius`
@@ -2563,26 +2611,6 @@ object DiskannIndex {
    * it with the driver-side graph hits — both are bounded by the
    * maxResults discipline above this.
    */
-  /** Score one delta row against one radius query — THE definition of the
-    * delta-side radius semantics (tombstone mask, null-vector row skip,
-    * searchWithDelta's label rules incl. unlabeled-delta-vs-labeled-query
-    * = no match, null query = zero-vector search, labels/mod.rs:214-216),
-    * shared by [[rangeOverDelta]] and [[rangeSearchDistributedFresh]] so
-    * the two fresh radius paths can never drift. `lbs` must already be
-    * normalized (null = delta has no labels column), `ql` likewise. */
-  private def deltaRadiusMatch(rid: Long, v: Array[Float],
-      lbs: Array[Short], qv0: Array[Float], ql: Array[Short],
-      radius: Double, tombstoned: Long => Boolean,
-      report: (Array[Float], Array[Float]) => Double): Option[Double] =
-    if (tombstoned(rid) || v == null) None
-    else if (!(ql == null || (lbs != null && LabelSets.overlaps(lbs, ql))))
-      None
-    else {
-      val qv = if (qv0 == null) new Array[Float](v.length) else qv0
-      val d = report(v, qv)
-      if (d <= radius) Some(d) else None
-    }
-
   private[graft] def rangeOverDelta(spark: SparkSession, path: String,
       delta: DataFrame, qvec: Array[Float], radius: Double,
       qlabels: Array[Short] = null,
@@ -2602,22 +2630,9 @@ object DiskannIndex {
     val qv0 = qvec
     val hitsDs = delta.mapPartitions { it =>
       val tomb = tombBc.value
-      it.flatMap { r =>
-        val rid = r.getAs[Long]("row_id")
-        // tombstone short-circuit BEFORE materializing the vector/labels:
-        // a heavily-tombstoned delta would otherwise pay an array copy +
-        // label normalize per masked row for no output (the kernel
-        // re-checks — harmless)
-        if (tomb.contains(rid)) Iterator.empty
-        else {
-          val v = Option(r.getAs[mutable.Seq[Float]]("vec")).map(_.toArray).orNull
-          val lbs = if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray))
-            .getOrElse(Array.emptyShortArray)
-          else null
-          deltaRadiusMatch(rid, v, lbs, qv0, nq, radius, tomb.contains, report)
-            .map(rid -> _).iterator
-        }
+      liveDeltaRows(it, hasDLabels, tomb).flatMap { case (rid, v, lbs) =>
+        deltaScore(rid, v, lbs, qv0, nq, tomb.contains, report)
+          .filter(_ <= radius).map(rid -> _).iterator
       }
     }(org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.scalaLong,
@@ -2649,33 +2664,15 @@ object DiskannIndex {
     // compact landing after this collect moves these same rows into the
     // generation the main search then resolves — duplicates collapse below,
     // nothing is lost. Collecting after resolving can lose rows.
-    val hasDLabels = delta.columns.contains("labels")
     val hasQLabels = queries.columns.contains("qlabels")
     // sort + dedup by row_id: foreachBatch ingest is at-least-once, so a
     // retried micro-batch appends the same row twice — without the dedup,
     // both copies enter the bounded heap and can evict a DISTINCT true
     // neighbor from the top-k (the online twin collapses by row_id before
     // ranking and is immune)
-    // enforced, not advisory (the knnGraph guard discipline): the limit
-    // caps what can reach the driver, one extra row proves oversize
-    val maxDeltaBc = spark.conf
-      .get("graft.delta.maxBroadcastRows", "2000000").toInt
-    val collected =
-      delta.filter(col("vec").isNotNull).limit(maxDeltaBc + 1).collect()
-    require(collected.length <= maxDeltaBc,
-      s"searchDistributedFresh: pending delta exceeds " +
-        s"graft.delta.maxBroadcastRows ($maxDeltaBc) — the fresh batch " +
-        "paths broadcast the delta, which the compaction contract keeps " +
-        "small; fold it with StreamingIngest.compactNow (or enable " +
-        "autoCompact), or raise the knob if the driver can hold it")
-    val deltaRows: Array[(Long, Array[Float], Array[Short])] =
-      collected.map { r =>
-        (r.getAs[Long]("row_id"), r.getAs[mutable.Seq[Float]]("vec").toArray,
-          if (hasDLabels) Option(r.getAs[mutable.Seq[Short]]("labels"))
-            .map(s => LabelSets.normalize(s.toArray)).getOrElse(Array.emptyShortArray)
-          else null)
-      }.filterNot { case (rid, _, _) => tombstones.contains(rid) }
-        .sortBy(_._1).distinctBy(_._1)
+    val deltaRows = collectDelta(spark, delta, "searchDistributedFresh")
+      .filterNot { case (rid, _, _) => tombstones.contains(rid) }
+      .sortBy(_._1).distinctBy(_._1)
 
     val meta = loadMeta(spark, path0)
     val report = reportDistFn(Metric(meta.metric))
@@ -2697,10 +2694,8 @@ object DiskannIndex {
         // bounded per-query heap: only k delta rows leave the partition
         val heap = mutable.PriorityQueue.empty[(Double, Long)](ord)
         d.foreach { case (rid, v, lbs) =>
-          val ok = ql == null || (lbs != null && LabelSets.overlaps(lbs, ql))
-          if (ok) {
-            val qv = if (qv0 == null) new Array[Float](v.length) else qv0
-            val dist = report(v, qv)
+          // tombstones were masked at collect time
+          deltaScore(rid, v, lbs, qv0, ql, _ => false, report).foreach { dist =>
             if (heap.size < k) heap.enqueue((dist, rid))
             else if (ord.lt((dist, rid), heap.head)) {
               heap.dequeue(); heap.enqueue((dist, rid))

@@ -177,8 +177,25 @@ object StreamingIngest {
    * truncation, so a lost partition FAILS loud rather than silently
    * recomputing-to-empty from deleted files (see [[searchFresh]]).
    */
-  // per-JVM memo of the EAGER (checkpointed) delta snapshot, keyed by the
-  // session instance + the delta listing's fingerprint (names + sizes +
+  private def readDeltaSnapshot(spark: SparkSession, indexPath: String,
+      eager: Boolean): Option[DataFrame] =
+    if (eager) snapshotDelta(spark, indexPath, "")(_.localCheckpoint(true))
+    else snapshotDelta(spark, indexPath, "#lazy")(identity)
+
+  /** [[searchPointFresh]]'s snapshot: the delta as capped driver rows. The
+    * cap is in the memo key, so a changed knob re-collects. The footer
+    * count, listed after the snapshot's listing, can only over-count its
+    * files: one a compact consumed in between is gone for the collect too. */
+  private def readDeltaRows(spark: SparkSession, indexPath: String)
+      : Option[Array[(Long, Array[Float], Array[Short])]] =
+    snapshotDelta(spark, indexPath,
+      s"#rows${DiskannIndex.maxDeltaRows(spark)}")(
+      DiskannIndex.collectDelta(spark, _, "searchPointFresh",
+        deltaRowCount(spark, indexPath)))
+
+  // per-JVM memo of the delta snapshots (the EAGER checkpointed frame, the
+  // lazy read, the point path's driver rows), keyed by the session
+  // instance + form + the delta listing's fingerprint (names + sizes +
   // mtimes — delta files are write-once, renamed in; the deltaCountCache
   // discipline): every fresh-serving query was re-reading and
   // re-checkpointing an UNCHANGED delta — one eager Spark job of fixed
@@ -192,14 +209,19 @@ object StreamingIngest {
   // an unbounded map pins one localCheckpointed snapshot per dead
   // (session, index) pair on the driver for the JVM's life.
   private val deltaSnapshotCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, (String, AnyRef)](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
+          e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
         size() > 16
     })
 
-  private def readDeltaSnapshot(spark: SparkSession, indexPath: String,
-      eager: Boolean): Option[DataFrame] = {
+  /** Read the current delta listing and turn it into one snapshot `form`
+    * (`materialize` runs once per listing fingerprint), or None when the
+    * delta is empty; the re-list-on-AnalysisException loop documented at
+    * [[readDeltaSnapshot]]. Each form is memoized under its own key. */
+  private def snapshotDelta[T <: AnyRef](spark: SparkSession,
+      indexPath: String, form: String)(
+      materialize: DataFrame => T): Option[T] = {
     val maxAttempts = 4
     var lastErr: Throwable = null
     var attempt = 0
@@ -208,31 +230,24 @@ object StreamingIngest {
       val sts = deltaFileStatuses(spark, indexPath)
       if (sts.isEmpty) return None
       val files = sts.map(_.getPath)
-      // eager and lazy snapshots are cached under distinct keys: the eager
-      // entry is a localCheckpointed DataFrame, the lazy one (round 16) is
-      // just the RESOLVED read — un-memoized, every distributed fresh
-      // search re-paid the schema-inference Spark job + file-index build
-      // for an UNCHANGED delta. A hit requires the CURRENT listing to
-      // match, so the race-with-compact window is identical to a fresh
-      // list-then-read.
-      val key = s"${spark.sparkContext.applicationId}#$indexPath" +
-        (if (eager) "" else "#lazy")
+      // each form is cached under its own key: the eager entry is a
+      // localCheckpointed DataFrame, the lazy one (round 16) is just the
+      // RESOLVED read — un-memoized, every distributed fresh search re-paid
+      // the schema-inference Spark job + file-index build for an UNCHANGED
+      // delta — and the rows entry is the point path's driver array. A hit
+      // requires the CURRENT listing to match, so the race-with-compact
+      // window is identical to a fresh list-then-read.
+      val key = s"${spark.sparkContext.applicationId}#$indexPath$form"
       val fp = sts.map(s =>
           s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .sorted.mkString("|")
       val hit = deltaSnapshotCache.get(key)
-      if (hit != null && hit._1 == fp) return Some(hit._2)
+      if (hit != null && hit._1 == fp) return Some(hit._2.asInstanceOf[T])
       try {
-        val df = spark.read.option("ignoreMissingFiles", "true")
-          .parquet(files.map(_.toString).toIndexedSeq: _*)
-        return Some(if (eager) {
-          val snap = df.localCheckpoint(true)
-          deltaSnapshotCache.put(key, (fp, snap))
-          snap
-        } else {
-          deltaSnapshotCache.put(key, (fp, df))
-          df
-        })
+        val snap = materialize(spark.read.option("ignoreMissingFiles", "true")
+          .parquet(files.map(_.toString).toIndexedSeq: _*))
+        deltaSnapshotCache.put(key, (fp, snap))
+        return Some(snap)
       } catch {
         // plan-time path-not-exist from the list-then-read race; re-list
         case e: org.apache.spark.sql.AnalysisException => lastErr = e
@@ -327,12 +342,13 @@ object StreamingIngest {
 
   /**
    * Freshness-aware twin of [[DiskannIndex.searchPoint]]: sees
-   * delta-appended rows and masks tombstoned ones, like [[searchFresh]].
-   * With no delta pending (the steady state between appends and right
-   * after a compact) it degrades to the warm driver-side fast path plus
-   * two FS listings (delta probe + tombstone registry); with a delta it
-   * pays the [[searchFresh]] DataFrame path — the delta must be scored,
-   * which is a job regardless. The pair (searchPoint for raw speed,
+   * delta-appended rows and masks tombstoned ones, with [[searchFresh]]'s
+   * exact results. Warm, it runs no Spark job: tombstones and delta rows
+   * come from listing-fingerprinted memos (only the first read after a
+   * write collects them), and the delta is scored on the driver and merged
+   * under [[DiskannIndex.searchWithDelta]]'s rule. The delta is snapshotted
+   * BEFORE searchPoint resolves the generation ([[searchFresh]]'s
+   * race-with-compact invariant). The pair (searchPoint for raw speed,
    * searchPointFresh for read-your-writes) mirrors the reference's scan
    * visibility semantics (scan.rs:229-235) at the point-query API.
    */
@@ -341,22 +357,21 @@ object StreamingIngest {
       rescore: Int = 50, nProbe: Int = 0, qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    if (!hasDelta(spark, indexPath))
-      DiskannIndex.searchPoint(spark, indexPath, qvec, k, searchListSize,
-        rescore, nProbe, qlabels, tombs)
-    else {
-      import spark.implicits._
-      val base = Seq((0L, qvec)).toDF("qid", "qvec")
-      val q = if (qlabels == null) base
-        else base.withColumn("qlabels",
-          lit(graft.index.LabelSets.normalize(qlabels)).cast(
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.ShortType)))
-      searchFresh(spark, indexPath, q, k, searchListSize, rescore, tombs,
-          None, nProbe)
-        .collect()
-        .map(r => (r.getLong(1), r.getDouble(2)))
-        .sortBy { case (rid, d) => (d, rid) }.toSeq
+    val delta = readDeltaRows(spark, indexPath)
+    val main = DiskannIndex.searchPoint(spark, indexPath, qvec, k,
+      searchListSize, rescore, nProbe, qlabels, tombs)
+    delta.fold(main) { rows =>
+      val report = DiskannIndex.reportDistFn(
+        graft.index.Metric(DiskannIndex.loadMeta(spark, indexPath).metric))
+      val ql = Option(qlabels).map(graft.index.LabelSets.normalize).orNull
+      val hits = rows.iterator.flatMap { case (rid, v, lbs) =>
+        DiskannIndex.deltaScore(rid, v, lbs, qvec, ql, tombs.contains, report)
+          .map(rid -> _)
+      }
+      // each row_id once at its minimum distance, then (dist, row_id)
+      (main.iterator ++ hits).toSeq
+        .groupMapReduce(_._1)(_._2)(Ordering.Double.TotalOrdering.min)
+        .toSeq.sortBy { case (rid, d) => (d, rid) }.take(k)
     }
   }
 
@@ -517,52 +532,41 @@ object StreamingIngest {
         }.toArray
         val qBc = spark.sparkContext.broadcast(qArr)
         val tombBc = spark.sparkContext.broadcast(tombs)
+        // each row_id counts once, at its minimum distance (the
+        // searchWithDelta rule): a replayed micro-batch appends a row twice
+        // and a compact mid-flight leaves it in main and delta — neither
+        // copy may crowd a distinct neighbor out of the top k
+        def topK(hits: Iterable[(Long, Double)]): Iterable[(Long, Double)] =
+          hits.toSeq.sortBy { case (i, dd) => (dd, i) }.distinctBy(_._1).take(k)
         // distributed brute force with a PER-PARTITION bounded top-k per
         // query: the collect is ≤ partitions × |batch| × k rows no matter
         // how large the pending delta grows — never the delta itself
-        val deltaHits = delta.select(col("row_id"), col("vec"),
-            (if (hasDLabels) col("labels")
-             else lit(null).cast(org.apache.spark.sql.types.ArrayType(
-               org.apache.spark.sql.types.ShortType))).as("labels"))
-          .rdd.mapPartitions { it =>
-            val best = new java.util.HashMap[
-              Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]()
-            it.foreach { r =>
-              val rid = r.getAs[Long]("row_id")
-              if (!tombBc.value.contains(rid)) {
-                val v = r.getAs[scala.collection.mutable.Seq[Float]]("vec")
-                  .toArray
-                val lbs =
-                  Option(r.getAs[scala.collection.mutable.Seq[Short]]("labels"))
-                    .map(s => graft.index.LabelSets.normalize(s.toArray))
-                    .orNull
-                qBc.value.foreach { case (qid, qv0, ql) =>
-                  val qv =
-                    if (qv0 == null) new Array[Float](v.length) else qv0
-                  val ok = ql == null ||
-                    (lbs != null && graft.index.LabelSets.overlaps(lbs, ql))
-                  if (ok) {
-                    val d = report(v, qv)
-                    val buf = best.computeIfAbsent(qid,
-                      _ => scala.collection.mutable.ArrayBuffer.empty)
-                    buf += ((rid, d))
-                    if (buf.length > 4 * k) {
-                      val kept = buf.sortBy { case (i, dd) => (dd, i) }.take(k)
-                      buf.clear(); buf ++= kept
-                    }
+        val deltaHits = delta.rdd.mapPartitions { it =>
+          val best = new java.util.HashMap[
+            Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]()
+          DiskannIndex.liveDeltaRows(it, hasDLabels, tombBc.value).foreach {
+            case (rid, v, lbs) =>
+              qBc.value.foreach { case (qid, qv0, ql) =>
+                DiskannIndex.deltaScore(rid, v, lbs, qv0, ql, _ => false,
+                    report).foreach { d =>
+                  val buf = best.computeIfAbsent(qid,
+                    _ => scala.collection.mutable.ArrayBuffer.empty)
+                  buf += ((rid, d))
+                  if (buf.length > 4 * k) {
+                    val kept = topK(buf)
+                    buf.clear(); buf ++= kept
                   }
                 }
               }
-            }
-            val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-            best.forEach { (qid, buf) =>
-              buf.sortBy { case (i, dd) => (dd, i) }.take(k)
-                .foreach { case (rid, d) => out += ((qid, rid, d)) }
-            }
-            out.iterator
-          }.collect()
-        (pool ++ deltaHits).groupBy(_._1).iterator.flatMap { case (_, hits) =>
-          hits.sortBy(h => (h._3, h._2)).take(k)
+          }
+          val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
+          best.forEach { (qid, buf) =>
+            topK(buf).foreach { case (rid, d) => out += ((qid, rid, d)) }
+          }
+          out.iterator
+        }.collect()
+        (pool ++ deltaHits).groupBy(_._1).iterator.flatMap { case (qid, hits) =>
+          topK(hits.map(h => (h._2, h._3))).map { case (rid, d) => (qid, rid, d) }
         }.toSeq.sortBy(h => (h._1, h._3, h._2))
     }
   }

@@ -1266,6 +1266,144 @@ class StreamingSpec extends AnyFunSuite {
     assert(post.nonEmpty && !post.exists(_._2 == 450L))
   }
 
+  /** Seeded point-path fixture: 500 clustered 32-d vectors (ten centres,
+    * label = centre) as (vec_id, embedding, label). */
+  private def pointFixture(): Seq[(Long, Array[Float], Short)] = {
+    val rnd = new scala.util.Random(17)
+    val centres = Array.fill(10, 32)(rnd.nextGaussian())
+    (0 until 500).map { i =>
+      val c = i % 10
+      (i.toLong, centres(c).map(x => (x + 0.5 * rnd.nextGaussian()).toFloat),
+        c.toShort)
+    }
+  }
+
+  test("searchPointFresh equals searchFresh on a replayed, overlapping, tombstoned delta; warm point reads run 0 jobs") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val path = "/tmp/graft_test_index/point_fresh_eq"
+    def deleteRec(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
+      f.delete()
+    }
+    deleteRec(new java.io.File(path))
+    val fixture = pointFixture()
+    val labeled = fixture.map { case (id, v, l) => (id, v, Array(l)) }
+      .toDF("vec_id", "embedding", "labels")
+    DiskannIndex.build(labeled.filter($"vec_id" < 400), "vec_id", "embedding",
+      Some("labels"), path, DiskannParams(metric = "cosine",
+        partitioner = "ivf", ivfSeed = Some("pf17"), shardTargetRows = 100))
+    // the delta: rows 380-459 appended TWICE (an at-least-once replay), of
+    // which 380-399 are ALSO in the main graph
+    def batch(): org.apache.spark.sql.DataFrame =
+      labeled.filter($"vec_id" >= 380 && $"vec_id" < 460)
+        .select($"vec_id".as("row_id"), $"embedding".as("vec"), $"labels")
+    StreamingIngest.appendBatchToDelta(path)(batch(), 0L)
+    StreamingIngest.appendBatchToDelta(path)(batch(), 1L)
+    // tombstones on both sides: main only, main and delta, delta only
+    val dead = Set(7L, 123L, 385L, 430L)
+    DiskannIndex.deleteRows(spark, path, dead.toSeq)
+
+    val rows = fixture.map { case (id, v, l) => id -> (v, l) }.toMap
+    val cases: Seq[(Array[Float], Array[Short])] =
+      Seq(5L, 123L, 385L, 390L, 420L, 430L, 470L).flatMap { id =>
+        val (v, l) = rows(id)
+        Seq((v, null), (v, Array(l)), (v, Array(l, ((l + 1) % 10).toShort)))
+      } ++ Seq((null, null), (null, Array(rows(5L)._2)))
+    val k = 10
+    val qSchema = StructType(Seq(StructField("qid", LongType, nullable = false),
+      StructField("qvec", ArrayType(FloatType)),
+      StructField("qlabels", ArrayType(ShortType))))
+    def viaFrame(qv: Array[Float], ql: Array[Short]): Seq[(Long, Double)] = {
+      val q = spark.createDataFrame(java.util.Arrays.asList(Row(0L,
+        Option(qv).map(_.toSeq).orNull, Option(ql).map(_.toSeq).orNull)),
+        qSchema)
+      StreamingIngest.searchFresh(spark, path, q, k).collect()
+        .map(r => (r.getLong(1), r.getDouble(2)))
+        .sortBy { case (rid, d) => (d, rid) }.toSeq
+    }
+    // bit-identical distances; NaN (a null query on a cosine index) equals NaN
+    def bits(hs: Seq[(Long, Double)]): Seq[(Long, Long)] =
+      hs.map { case (rid, d) => (rid, java.lang.Double.doubleToLongBits(d)) }
+    cases.foreach { case (qv, ql) =>
+      val want = viaFrame(qv, ql)
+      val got = StreamingIngest.searchPointFresh(spark, path, qv, k,
+        qlabels = ql)
+      val pool = StreamingIngest.servePointBatchFresh(spark, path,
+        Seq((0L, qv, ql)), k).map(h => (h._2, h._3))
+      val what = s"qvec=${Option(qv).map(_.take(2).mkString(","))} " +
+        s"qlabels=${Option(ql).map(_.mkString(","))}"
+      assert(want.length == k, s"$what: frame path returned ${want.length}")
+      assert(bits(got) == bits(want), s"$what: point $got vs frame $want")
+      assert(bits(pool) == bits(want), s"$what: pool $pool vs frame $want")
+      assert(got.map(_._1).distinct.length == got.length &&
+        !got.exists(h => dead(h._1)), s"$what: $got")
+    }
+
+    // warm point reads start no Spark job: the first read after the last
+    // write has already collected the delta and tombstone memos and decoded
+    // every shard
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        groups.add(Option(jobStart.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val (qv, l) = rows(420L)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("warm-point-reads", "warm point reads")
+      try {
+        DiskannIndex.searchPoint(spark, path, qv, k)
+        DiskannIndex.searchPoint(spark, path, qv, k, qlabels = Array(l))
+        StreamingIngest.searchPointFresh(spark, path, qv, k)
+        StreamingIngest.searchPointFresh(spark, path, qv, k, qlabels = Array(l))
+        StreamingIngest.searchPointFresh(spark, path, null, k)
+      } finally sc.clearJobGroup()
+      // the listener bus delivers events in order: once the marker job's
+      // start arrives, every earlier job's start has arrived too
+      sc.setJobGroup("warm-point-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (System.currentTimeMillis() < deadline &&
+        !groups.contains("warm-point-marker")) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    assert(groups.contains("warm-point-marker"), "marker job never observed")
+    assert(!groups.contains("warm-point-reads"),
+      s"warm point reads started ${groups.toArray.count(_ == "warm-point-reads")} job(s)")
+  }
+
+  test("searchPointFresh: a delta above graft.delta.maxBroadcastRows fails by the knob's name") {
+    val path = "/tmp/graft_test_index/point_fresh_cap"
+    def deleteRec(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
+      f.delete()
+    }
+    deleteRec(new java.io.File(path))
+    val fixture = pointFixture()
+    val e = fixture.map { case (id, v, _) => (id, v) }.toDF("vec_id", "embedding")
+    DiskannIndex.build(e.filter($"vec_id" < 400), "vec_id", "embedding", None,
+      path, DiskannParams(metric = "cosine"))
+    StreamingIngest.appendBatchToDelta(path)(e.filter($"vec_id" >= 400)
+      .select($"vec_id".as("row_id"), $"embedding".as("vec")), 0L)
+    val v450 = fixture(450)._2
+    // under the default cap the 100-row delta serves (and is memoized)
+    assert(StreamingIngest.searchPointFresh(spark, path, v450, k = 5)
+      .head._1 == 450L)
+    // the memoized snapshot must not outlive a lowered cap
+    spark.conf.set("graft.delta.maxBroadcastRows", "40")
+    try {
+      val err = intercept[IllegalArgumentException] {
+        StreamingIngest.searchPointFresh(spark, path, v450, k = 5)
+      }
+      assert(err.getMessage.contains("searchPointFresh") &&
+        err.getMessage.contains("graft.delta.maxBroadcastRows"), err.getMessage)
+    } finally spark.conf.unset("graft.delta.maxBroadcastRows")
+  }
+
   test("streaming distinct monitor: exact below k, bounded error above k") {
     implicit val sqlCtx = spark.sqlContext
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
