@@ -1117,60 +1117,20 @@ object DiskannIndex {
   /** The registry's current data files (Hadoop FS — HDFS/S3 paths work the
     * same as local ones); empty when no deletes are pending. */
   private[graft] def tombstoneFiles(spark: SparkSession,
-      indexPath: String): Array[org.apache.hadoop.fs.FileStatus] = {
-    val d = new org.apache.hadoop.fs.Path(s"$indexPath/tombstones")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    try fs.listStatus(d)
-      .filter(s => !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-    catch { case _: java.io.FileNotFoundException => Array.empty }
-  }
-
-  /** Fingerprint-keyed cache for [[loadTombstones]]: the LISTING runs on
-    * every call (that is the freshness contract — a new delete must be
-    * visible to the next scan), but the parquet read + collect job is paid
-    * only when the listed (path, length, modtime) fingerprint changed.
-    * Steady serving between deletes: one metadata listing per query, zero
-    * Spark jobs. */
-  private val tombstoneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Set[Long])]()
-
-  private def tombstoneFingerprint(
-      files: Array[org.apache.hadoop.fs.FileStatus]): String =
-    files.map(s => s"${s.getPath}#${s.getLen}#${s.getModificationTime}")
-      .sorted.mkString("|")
+      indexPath: String): Array[org.apache.hadoop.fs.FileStatus] =
+    WriteOnceFiles.list(spark, s"$indexPath/tombstones")
 
   /** Load the persisted tombstone set. Bounded by the compaction contract
     * (folded + consumed at every compact), so the driver-side Set is the
-    * same size class as a query batch. Tolerates the list-then-read race
-    * with a concurrent compact consuming the files (re-lists, and a
-    * post-compact empty dir correctly yields the empty set). */
-  def loadTombstones(spark: SparkSession, indexPath: String): Set[Long] = {
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt < 4) {
-      attempt += 1
-      val files = tombstoneFiles(spark, indexPath)
-      if (files.isEmpty) { tombstoneCache.remove(indexPath); return Set.empty }
-      val fp = tombstoneFingerprint(files)
-      val cached = tombstoneCache.get(indexPath)
-      if (cached != null && cached._1 == fp) return cached._2
-      try {
-        // the declared schema (deleteRows writes row_id LONG) skips the
-        // schema-inference job Spark runs for every read of new files
-        val set = spark.read.schema("row_id LONG")
-          .option("ignoreMissingFiles", "true")
-          .parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
-          .collect().map(_.getLong(0)).toSet
-        tombstoneCache.put(indexPath, (fp, set))
-        return set
-      } catch {
-        // plan-time path-not-exist from the race; re-list
-        case e: org.apache.spark.sql.AnalysisException => lastErr = e
-      }
-    }
-    throw lastErr
-  }
+    * same size class as a query batch. The LISTING runs on every call (that
+    * is the freshness contract — a new delete must be visible to the next
+    * scan); each registry file is write-once, so only files not seen before
+    * are decoded, on the driver with no Spark job ([[WriteOnceFiles]]).
+    * Steady serving between deletes: one listing per call. A file a
+    * concurrent compact consumed between listing and decode is skipped —
+    * the compact installed the generation without those rows first. */
+  def loadTombstones(spark: SparkSession, indexPath: String): Set[Long] =
+    WriteOnceFiles.tombstones(spark, indexPath)
 
   def loadMeta(spark: SparkSession, path0: String): IndexMeta =
     loadMetaAt(spark, resolveRoot(spark, path0))
@@ -2577,24 +2537,27 @@ object DiskannIndex {
   /** The pending delta as driver rows for [[deltaScore]], null-vector rows
     * (which never match) dropped. Enforced, not advisory (the knnGraph guard
     * discipline): the limit caps what can reach the driver, and one extra
-    * row proves oversize and fails by the knob's name. A known bound
-    * `rowsAtMost` within the cap (footer counts) skips the limit: a plain
-    * collect is one job, the limit's incremental take up to log4(parts). */
+    * row proves oversize and fails by the knob's name. */
   private[graft] def collectDelta(spark: SparkSession, delta: DataFrame,
-      caller: String,
-      rowsAtMost: Long = Long.MaxValue): Array[(Long, Array[Float], Array[Short])] = {
+      caller: String): Array[(Long, Array[Float], Array[Short])] = {
+    val collected = delta.filter(col("vec").isNotNull)
+      .limit(maxDeltaRows(spark) + 1).collect()
+    requireDeltaFits(spark, caller, collected.length)
+    liveDeltaRows(collected.iterator, delta.columns.contains("labels"),
+      Set.empty).toArray
+  }
+
+  /** Fail by the knob's name when `rows` pending delta rows exceed
+    * `graft.delta.maxBroadcastRows`. */
+  private[graft] def requireDeltaFits(spark: SparkSession, caller: String,
+      rows: Long): Unit = {
     val cap = maxDeltaRows(spark)
-    val live = delta.filter(col("vec").isNotNull)
-    val collected =
-      if (rowsAtMost <= cap) live.collect() else live.limit(cap + 1).collect()
-    require(collected.length <= cap,
+    require(rows <= cap,
       s"$caller: pending delta exceeds graft.delta.maxBroadcastRows " +
         s"($cap) — the fresh paths hold the delta on the driver (the batch " +
         "ones broadcast it), which the compaction contract keeps small; " +
-        "fold it with StreamingIngest.compactNow (or enable autoCompact), " +
-        "or raise the knob if the driver can hold it")
-    liveDeltaRows(collected.iterator, delta.columns.contains("labels"),
-      Set.empty).toArray
+        "fold it with StreamingIngest.compact or maybeCompact (or enable " +
+        "autoCompact), or raise the knob if the driver can hold it")
   }
 
   private[graft] def maxDeltaRows(spark: SparkSession): Int =

@@ -147,17 +147,7 @@ object StreamingIngest {
     * same as local ones). */
   private[graft] def deltaFiles(spark: SparkSession,
       indexPath: String): Array[org.apache.hadoop.fs.Path] =
-    deltaFileStatuses(spark, indexPath).map(_.getPath)
-
-  private def deltaFileStatuses(spark: SparkSession,
-      indexPath: String): Array[org.apache.hadoop.fs.FileStatus] = {
-    val (fs, _) = hadoopFs(spark, indexPath)
-    val d = new org.apache.hadoop.fs.Path(s"$indexPath/delta")
-    try fs.listStatus(d)
-      .filter(s => !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-    catch { case _: java.io.FileNotFoundException => Array.empty }
-  }
+    graft.index.WriteOnceFiles.list(spark, s"$indexPath/delta").map(_.getPath)
 
   /**
    * Snapshot the delta as one DataFrame, or None when it is empty.
@@ -182,22 +172,10 @@ object StreamingIngest {
     if (eager) snapshotDelta(spark, indexPath, "")(_.localCheckpoint(true))
     else snapshotDelta(spark, indexPath, "#lazy")(identity)
 
-  /** [[searchPointFresh]]'s snapshot: the delta as capped driver rows. The
-    * cap is in the memo key, so a changed knob re-collects. The footer
-    * count, listed after the snapshot's listing, can only over-count its
-    * files: one a compact consumed in between is gone for the collect too. */
-  private def readDeltaRows(spark: SparkSession, indexPath: String)
-      : Option[Array[(Long, Array[Float], Array[Short])]] =
-    snapshotDelta(spark, indexPath,
-      s"#rows${DiskannIndex.maxDeltaRows(spark)}")(
-      DiskannIndex.collectDelta(spark, _, "searchPointFresh",
-        deltaRowCount(spark, indexPath)))
-
-  // per-JVM memo of the delta snapshots (the EAGER checkpointed frame, the
-  // lazy read, the point path's driver rows), keyed by the session
-  // instance + form + the delta listing's fingerprint (names + sizes +
-  // mtimes — delta files are write-once, renamed in; the deltaCountCache
-  // discipline): every fresh-serving query was re-reading and
+  // per-JVM memo of the delta snapshots (the EAGER checkpointed frame and
+  // the lazy read), keyed by the session instance + form + the delta
+  // listing's fingerprint (names + sizes + mtimes — delta files are
+  // write-once, renamed in): every fresh-serving query was re-reading and
   // re-checkpointing an UNCHANGED delta — one eager Spark job of fixed
   // overhead per query. An append or compact changes the listing, so the
   // fingerprint invalidates naturally; a superseded entry's checkpoint
@@ -227,16 +205,15 @@ object StreamingIngest {
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
-      val sts = deltaFileStatuses(spark, indexPath)
+      val sts = graft.index.WriteOnceFiles.list(spark, s"$indexPath/delta")
       if (sts.isEmpty) return None
       val files = sts.map(_.getPath)
       // each form is cached under its own key: the eager entry is a
       // localCheckpointed DataFrame, the lazy one (round 16) is just the
       // RESOLVED read — un-memoized, every distributed fresh search re-paid
       // the schema-inference Spark job + file-index build for an UNCHANGED
-      // delta — and the rows entry is the point path's driver array. A hit
-      // requires the CURRENT listing to match, so the race-with-compact
-      // window is identical to a fresh list-then-read.
+      // delta. A hit requires the CURRENT listing to match, so the
+      // race-with-compact window is identical to a fresh list-then-read.
       val key = s"${spark.sparkContext.applicationId}#$indexPath$form"
       val fp = sts.map(s =>
           s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
@@ -270,40 +247,17 @@ object StreamingIngest {
     * the GENERATION row count the same caller reads (the compact moved
     * them into main); appends landing after the count are invisible to
     * this query's snapshot anyway. */
-  // per-JVM count cache keyed by the delta listing's fingerprint (names +
-  // sizes + mtimes — delta files are write-once, renamed in): a streaming
-  // index accumulating hundreds of micro-batch files between compactions
-  // would otherwise pay hundreds of sequential footer opens on EVERY query
-  // execution; warm it is one LIST, the same invalidation discipline as
-  // DiskannIndex.metaCache
-  private val deltaCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  private[graft] def deltaRowCount(spark: SparkSession, indexPath: String): Long = {
-    val sts = deltaFileStatuses(spark, indexPath)
-    val fp = sts.map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    val hit = deltaCountCache.get(indexPath)
-    if (hit != null && hit._1 == fp) return hit._2
-    val conf = spark.sessionState.newHadoopConf()
-    var failed = false
-    val n = sts.map { s =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(s.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      } catch { case _: java.io.IOException => failed = true; 0L }
-    }.sum
-    // the count feeds an EXHAUSTION bound, so only over-counting is safe:
-    // a transiently unreadable footer (store throttle, listing race that
-    // isn't a consume) makes the whole count a pessimistic "unknown" — one
-    // extra escalation round, never a silently-missing row — and is NEVER
-    // cached (the next call retries the read)
-    if (failed) Long.MaxValue / 4
-    else { deltaCountCache.put(indexPath, (fp, n)); n }
-  }
+  // Per-file footer counts come from WriteOnceFiles, the memo the point
+  // path decodes delta files into: warm, one LIST and no footer open. The
+  // count feeds an EXHAUSTION bound, so only over-counting is safe: a
+  // transiently unreadable footer (store throttle, listing race that isn't
+  // a consume) makes the whole count a pessimistic "unknown" — one extra
+  // escalation round, never a silently-missing row — and is never memoized
+  // (the next call retries the read).
+  private[graft] def deltaRowCount(spark: SparkSession, indexPath: String): Long =
+    try graft.index.WriteOnceFiles.rowCount(spark, s"$indexPath/delta")
+      .getOrElse(0L)
+    catch { case _: java.io.IOException => Long.MaxValue / 4 }
 
   /** Search main graph + current delta (exact over the delta side).
     *
@@ -343,12 +297,16 @@ object StreamingIngest {
   /**
    * Freshness-aware twin of [[DiskannIndex.searchPoint]]: sees
    * delta-appended rows and masks tombstoned ones, with [[searchFresh]]'s
-   * exact results. Warm, it runs no Spark job: tombstones and delta rows
-   * come from listing-fingerprinted memos (only the first read after a
-   * write collects them), and the delta is scored on the driver and merged
-   * under [[DiskannIndex.searchWithDelta]]'s rule. The delta is snapshotted
-   * BEFORE searchPoint resolves the generation ([[searchFresh]]'s
-   * race-with-compact invariant). The pair (searchPoint for raw speed,
+   * exact results. It runs no Spark job, also right after a write:
+   * tombstones and delta rows come from [[graft.index.WriteOnceFiles]],
+   * which decodes on the driver only the files written since the last read
+   * (warm, one listing per directory), and the delta is scored on the
+   * driver and merged under [[DiskannIndex.searchWithDelta]]'s rule. The
+   * `graft.delta.maxBroadcastRows` cap is checked on the delta's summed
+   * footer row counts (null-vector and replayed rows included) before any
+   * new file is decoded. The delta is snapshotted BEFORE searchPoint
+   * resolves the generation ([[searchFresh]]'s race-with-compact
+   * invariant). The pair (searchPoint for raw speed,
    * searchPointFresh for read-your-writes) mirrors the reference's scan
    * visibility semantics (scan.rs:229-235) at the point-query API.
    */
@@ -357,7 +315,8 @@ object StreamingIngest {
       rescore: Int = 50, nProbe: Int = 0, qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
-    val delta = readDeltaRows(spark, indexPath)
+    val delta = graft.index.WriteOnceFiles.deltaRows(spark, indexPath)(
+      DiskannIndex.requireDeltaFits(spark, "searchPointFresh", _))
     val main = DiskannIndex.searchPoint(spark, indexPath, qvec, k,
       searchListSize, rescore, nProbe, qlabels, tombs)
     delta.fold(main) { rows =>
@@ -623,16 +582,12 @@ object StreamingIngest {
   def maybeCompact(spark: SparkSession, indexPath: String,
       maxDeltaRows: Long = 100000, maxDeltaFrac: Double = 0.1,
       tune: DiskannParams => DiskannParams = identity): Boolean = {
-    // footer-only count over a re-listing snapshot: a CONCURRENT compact
-    // consuming files between the listing and the read (the same
-    // list-then-read race the fresh-search paths defend) re-lists and sees
-    // the post-compact (smaller or empty) delta — the check then correctly
-    // comes back not-due
-    val deltaSnap = readDeltaSnapshot(spark, indexPath, eager = false)
-    val deltaRows = deltaSnap match {
-      case None => return false
-      case Some(df) => df.count()
-    }
+    // footer-only count, memoized per file: a file a CONCURRENT compact
+    // consumed between the listing and the footer read counts 0 — its rows
+    // are in the generation that compact installed, so the check correctly
+    // comes back smaller (or not-due)
+    val deltaRows = graft.index.WriteOnceFiles
+      .rowCount(spark, s"$indexPath/delta").getOrElse(return false)
     val meta =
       try Some(DiskannIndex.loadMeta(spark, indexPath))
       catch { case _: Exception => None }
@@ -665,7 +620,8 @@ object StreamingIngest {
       // distinct count is paid only on fold-due batches, over the bounded
       // delta.
       val stale = staleFraction > 0 && trained > 0 && {
-        val uniqueDelta = deltaSnap.get.select("row_id").distinct().count()
+        val uniqueDelta = readDeltaSnapshot(spark, indexPath, eager = false)
+          .fold(0L)(_.select("row_id").distinct().count())
         (mainRows + uniqueDelta - trained).toDouble / trained >= staleFraction
       }
       if (stale) compact(spark, indexPath, tune, force = true)

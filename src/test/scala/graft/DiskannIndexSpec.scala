@@ -615,7 +615,7 @@ class DiskannIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("delta driver-boundedness: capped radius pass stays unconfirmed, oversize broadcast fails naming compactNow") {
+  test("delta driver-boundedness: capped radius pass stays unconfirmed, oversize broadcast fails naming StreamingIngest.compact") {
     val path = "/tmp/graft_test_index/delta_guard"
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
@@ -659,13 +659,13 @@ class DiskannIndexSpec extends AnyFunSuite {
         DiskannIndex.rangeSearchDistributedFresh(spark, path, qs, deltaDf,
           radius = 5.0).collect()
       }
-      assert(e1.getMessage.contains("compactNow") &&
+      assert(e1.getMessage.contains("StreamingIngest.compact") &&
         e1.getMessage.contains("graft.delta.maxBroadcastRows"), e1.getMessage)
       val e2 = intercept[IllegalArgumentException] {
         DiskannIndex.searchDistributedFresh(spark, path, qs, deltaDf, k = 3)
           .collect()
       }
-      assert(e2.getMessage.contains("compactNow"), e2.getMessage)
+      assert(e2.getMessage.contains("StreamingIngest.compact"), e2.getMessage)
     } finally spark.conf.unset("graft.delta.maxBroadcastRows")
   }
 

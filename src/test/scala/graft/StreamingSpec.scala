@@ -1404,6 +1404,240 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.delta.maxBroadcastRows")
   }
 
+  /** `f`'s result and the number of Spark jobs it started: its jobs run
+    * under one job group, and a marker job afterwards proves the listener
+    * bus has delivered every earlier job start. */
+  private def countingJobs[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        groups.add(Option(jobStart.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (System.currentTimeMillis() < deadline &&
+        !groups.contains(s"$group-marker")) Thread.sleep(20)
+      assert(groups.contains(s"$group-marker"), "marker job never observed")
+      (out, groups.toArray.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `searchFresh(...).collect()` of one query, ordered by (dist, row_id),
+    * with distances as bits (NaN equals NaN). */
+  private def freshFrameBits(path: String, qv: Array[Float], ql: Array[Short],
+      k: Int): Seq[(Long, Long)] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val qSchema = StructType(Seq(StructField("qid", LongType, nullable = false),
+      StructField("qvec", ArrayType(FloatType)),
+      StructField("qlabels", ArrayType(ShortType))))
+    val q = spark.createDataFrame(java.util.Arrays.asList(Row(0L,
+      Option(qv).map(_.toSeq).orNull, Option(ql).map(_.toSeq).orNull)), qSchema)
+    bits(StreamingIngest.searchFresh(spark, path, q, k).collect()
+      .map(r => (r.getLong(1), r.getDouble(2)))
+      .sortBy { case (rid, d) => (d, rid) }.toSeq)
+  }
+
+  private def bits(hs: Seq[(Long, Double)]): Seq[(Long, Long)] =
+    hs.map { case (rid, d) => (rid, java.lang.Double.doubleToLongBits(d)) }
+
+  /** (row_id, vec, labels) rows as a delta batch; the nullability flags pick
+    * the arrays' containsNull, which picks the legacy parquet list layout. */
+  private def deltaBatch(rows: Seq[(Long, Array[Float], Array[Short])],
+      vecNulls: Boolean = true, labelNulls: Boolean = true)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("row_id", LongType, nullable = false),
+      StructField("vec", ArrayType(FloatType, vecNulls)),
+      StructField("labels", ArrayType(ShortType, labelNulls))))
+    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (id, v, l) =>
+      Row(id, Option(v).map(_.toSeq).orNull, Option(l).map(_.toSeq).orNull)
+    }: _*), schema)
+  }
+
+  /** A labeled ivf index over fixture rows 0-399 at `path`, wiped first. */
+  private def labeledPointIndex(path: String)
+      : Map[Long, (Array[Float], Short)] = {
+    def deleteRec(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
+      f.delete()
+    }
+    deleteRec(new java.io.File(path))
+    val fixture = pointFixture()
+    DiskannIndex.build(deltaBatch(fixture.filter(_._1 < 400)
+        .map { case (id, v, l) => (id, v, Array(l)) }),
+      "row_id", "vec", Some("labels"), path, DiskannParams(metric = "cosine",
+        partitioner = "ivf", ivfSeed = Some("pf17"), shardTargetRows = 100))
+    fixture.map { case (id, v, l) => id -> (v, l) }.toMap
+  }
+
+  test("searchPointFresh: the first read after an append or a delete runs 0 jobs and equals searchFresh") {
+    val path = "/tmp/graft_test_index/point_fresh_first"
+    val rows = labeledPointIndex(path)
+    def labeled(ids: Range) = ids.map(i => (i.toLong, rows(i)._1, Array(rows(i)._2)))
+    // a replayed batch (row_ids 400-429 twice) plus a null-vector row
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(400 until 430)), 0L)
+    StreamingIngest.appendBatchToDelta(path)(
+      deltaBatch(labeled(400 until 430) :+ ((9999L, null, Array(1.toShort)))), 1L)
+    val k = 10
+    val cases: Seq[(Array[Float], Array[Short])] =
+      Seq(5L, 405L, 420L, 440L, 455L).flatMap { id =>
+        val (v, l) = rows(id)
+        Seq((v, null), (v, Array(l)), (v, Array(l, ((l + 1) % 10).toShort)))
+      } :+ ((null, null))
+    def firstReadsMatch(what: String): Unit = {
+      val (got, jobs) = countingJobs(cases.map { case (qv, ql) =>
+        StreamingIngest.searchPointFresh(spark, path, qv, k, qlabels = ql)
+      })
+      assert(jobs == 0, s"$what: the first fresh reads started $jobs job(s)")
+      cases.zip(got).foreach { case ((qv, ql), hits) =>
+        val want = freshFrameBits(path, qv, ql, k)
+        assert(want.length == k, s"$what: frame path returned ${want.length}")
+        assert(bits(hits) == want, s"$what: qlabels=" +
+          s"${Option(ql).map(_.mkString(","))}: point $hits vs frame $want")
+      }
+    }
+    // warm: every probed shard decoded and the current delta memoized
+    cases.foreach { case (qv, ql) =>
+      StreamingIngest.searchPointFresh(spark, path, qv, k, qlabels = ql)
+    }
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(430 until 460)), 2L)
+    firstReadsMatch("after an append")
+    DiskannIndex.deleteRows(spark, path, Seq(5L, 405L, 440L))
+    firstReadsMatch("after a delete")
+  }
+
+  test("searchPointFresh decodes every list layout, skips files that vanish before decode, and forgets compacted files") {
+    import graft.index.WriteOnceFiles
+    val path = "/tmp/graft_test_index/point_fresh_layouts"
+    val rows = labeledPointIndex(path)
+    def labeled(ids: Range) = ids.map(i =>
+      (i.toLong, rows(i)._1, Array(rows(i)._2, ((rows(i)._2 + 3) % 10).toShort)))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // the standard 3-level layout, then both legacy 2-level ones (the
+    // `bag` group for nullable elements, a bare repeated `array` otherwise)
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(400 until 420)), 0L)
+    spark.conf.set("spark.sql.parquet.writeLegacyFormat", "true")
+    try {
+      StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(420 until 440),
+        vecNulls = true, labelNulls = false), 1L)
+      StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(440 until 460),
+        vecNulls = false, labelNulls = true), 2L)
+    } finally spark.conf.unset("spark.sql.parquet.writeLegacyFormat")
+    // a bare repeated field with no LIST group, as non-Spark writers emit
+    locally {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message m { required int64 row_id; repeated float vec; " +
+          "repeated int32 labels (INT_16); }")
+      val tmp = new org.apache.hadoop.fs.Path(s"$path/_one_level.parquet")
+      val w = ExampleParquetWriter.builder(tmp).withType(schema)
+        .withConf(spark.sessionState.newHadoopConf()).build()
+      try labeled(460 until 480).foreach { case (id, v, l) =>
+        val g = new SimpleGroupFactory(schema).newGroup().append("row_id", id)
+        v.foreach(g.append("vec", _))
+        l.foreach(x => g.append("labels", x.toInt))
+        w.write(g)
+      } finally w.close()
+      assert(fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$path/delta/b_one_level.parquet")))
+    }
+    val k = 10
+    val probes = Seq(5L, 410L, 430L, 450L, 470L)
+    def matches(what: String): Unit = probes.foreach { id =>
+      val (v, l) = rows(id)
+      Seq(null, Array(l)).foreach { ql =>
+        val got = StreamingIngest.searchPointFresh(spark, path, v, k, qlabels = ql)
+        val want = freshFrameBits(path, v, ql, k)
+        assert(want.length == k && bits(got) == want,
+          s"$what: row $id qlabels=${Option(ql).map(_.mkString(","))}: " +
+            s"point $got vs frame $want")
+      }
+    }
+    matches("list layouts")
+    assert(probes.drop(1).forall(id =>
+      StreamingIngest.searchPointFresh(spark, path, rows(id)._1, 1).head._1 == id),
+      "every layout's rows must be served")
+
+    // a delta file and a tombstone file vanish between listing and decode
+    StreamingIngest.appendBatchToDelta(path)(
+      deltaBatch(labeled(480 until 500)).repartition(2), 3L)
+    DiskannIndex.deleteRows(spark, path, Seq(410L, 485L))
+    DiskannIndex.deleteRows(spark, path, Seq(5L, 495L))
+    val vanished = scala.collection.mutable.Set.empty[String]
+    WriteOnceFiles.beforeDecode = { p =>
+      val dir = p.getParent.getName
+      if (p.toString.contains(path) && !vanished.exists(_.startsWith(s"$dir/"))) {
+        assert(fs.delete(p, false))
+        vanished += s"$dir/${p.getName}"
+      }
+    }
+    val raced = try probes.map(id =>
+        StreamingIngest.searchPointFresh(spark, path, rows(id)._1, k))
+      finally WriteOnceFiles.beforeDecode = _ => ()
+    assert(vanished.map(_.takeWhile(_ != '/')) == Set("delta", "tombstones"),
+      vanished.toString)
+    probes.zip(raced).foreach { case (id, got) =>
+      assert(bits(got) == freshFrameBits(path, rows(id)._1, null, k),
+        s"raced read of row $id: $got")
+    }
+    matches("after the race")
+
+    // compact consumes every listed file: none of them stays memoized
+    val consumed = (fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/delta")) ++
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
+      .map(_.getPath.getName).toSet
+    assert(WriteOnceFiles.memoized(spark, s"$path/delta").nonEmpty)
+    StreamingIngest.compact(spark, path)
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(400 until 405)), 4L)
+    matches("after compact")
+    val live = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/delta"))
+      .map(_.getPath.getName).filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      .toSet
+    assert(WriteOnceFiles.memoized(spark, s"$path/delta") == live)
+    assert(WriteOnceFiles.memoized(spark, s"$path/tombstones").isEmpty)
+    assert(live.nonEmpty && (live & consumed).isEmpty)
+  }
+
+  test("searchPointFresh: a new file over graft.delta.maxBroadcastRows fails by the knob's name before it is decoded") {
+    import graft.index.WriteOnceFiles
+    val path = "/tmp/graft_test_index/point_fresh_cap_first"
+    val rows = labeledPointIndex(path)
+    def labeled(ids: Range) = ids.map(i => (i.toLong, rows(i)._1, Array(rows(i)._2)))
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(400 until 430)), 0L)
+    val v = rows(450L)._1
+    StreamingIngest.searchPointFresh(spark, path, v, k = 5)
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(430 until 460)), 1L)
+    val decoded = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    WriteOnceFiles.beforeDecode = p =>
+      if (p.toString.contains(path)) decoded.add(p.getName)
+    spark.conf.set("graft.delta.maxBroadcastRows", "40")
+    try {
+      val err = intercept[IllegalArgumentException] {
+        StreamingIngest.searchPointFresh(spark, path, v, k = 5)
+      }
+      assert(err.getMessage.contains("searchPointFresh") &&
+        err.getMessage.contains("graft.delta.maxBroadcastRows"), err.getMessage)
+      assert(decoded.isEmpty, s"decoded before the bound check: $decoded")
+    } finally {
+      spark.conf.unset("graft.delta.maxBroadcastRows")
+      WriteOnceFiles.beforeDecode = _ => ()
+    }
+    assert(StreamingIngest.searchPointFresh(spark, path, v, k = 5).head._1 == 450L)
+  }
+
   test("streaming distinct monitor: exact below k, bounded error above k") {
     implicit val sqlCtx = spark.sqlContext
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
