@@ -196,6 +196,12 @@ object VectorKernels {
     while (i < a.length) { acc += java.lang.Long.bitCount(a(i) ^ b(i)); i += 1 }
     acc
   }
+  /** [[hamming]] of `a` against the `a.length` words of `b` from `bFrom`. */
+  final def hamming(a: Array[Long], b: Array[Long], bFrom: Int): Long = {
+    var acc = 0L; var i = 0
+    while (i < a.length) { acc += java.lang.Long.bitCount(a(i) ^ b(bFrom + i)); i += 1 }
+    acc
+  }
   final def norm(a: Array[Float]): Double = {
     var acc = 0.0; var i = 0
     while (i < a.length) { val x = a(i).toDouble; acc += x * x; i += 1 }

@@ -450,7 +450,7 @@ object DiskannIndex {
    */
   def resolveRoot(spark: SparkSession, path: String): String = {
     val vdir = new org.apache.hadoop.fs.Path(path, "versions")
-    val fs = vdir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, vdir)
     try {
       val vs = fs.listStatus(vdir).map(_.getPath.getName).filter(_.matches("v\\d{9}"))
       if (vs.isEmpty) path else s"$path/versions/${vs.max}"
@@ -467,10 +467,30 @@ object DiskannIndex {
    */
   def listVersions(spark: SparkSession, path: String): Seq[String] = {
     val vdir = new org.apache.hadoop.fs.Path(path, "versions")
-    val fs = vdir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, vdir)
     try fs.listStatus(vdir).map(_.getPath.getName)
       .filter(_.matches("v\\d{9}")).sorted.toSeq
     catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
+
+  // the session's Hadoop conf of the latest application; see fileSystem
+  @volatile private var hadoopConf: (String, org.apache.hadoop.conf.Configuration) = null
+
+  /** `p`'s FileSystem for the metadata listings of the serving path. The
+    * session's Hadoop conf is a fresh copy of the context's, about 0.2 ms a
+    * call, more than the listing it serves; so it is built once per
+    * application, and `getFileSystem` still goes through Hadoop's cache,
+    * keyed by scheme, authority and user. A Hadoop key set in the session
+    * conf after the first listing does not reach these listings. */
+  private[graft] def fileSystem(spark: SparkSession,
+      p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem = {
+    val app = spark.sparkContext.applicationId
+    var c = hadoopConf
+    if (c == null || c._1 != app) {
+      c = (app, spark.sessionState.newHadoopConf())
+      hadoopConf = c
+    }
+    p.getFileSystem(c._2)
   }
 
   private val GenDirRe = "^(.*)/versions/v\\d{9}$".r
@@ -1155,7 +1175,7 @@ object DiskannIndex {
       path0: String): Option[Map[Short, Long]] = {
     val root = resolveRoot(spark, path0)
     val p = new org.apache.hadoop.fs.Path(s"$root/labelstats")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, p)
     val fp =
       try fs.listStatus(p)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
@@ -1196,7 +1216,7 @@ object DiskannIndex {
 
   private def metaFingerprint(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_meta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, p)
     fs.listStatus(p).map(s =>
         s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
@@ -1408,9 +1428,11 @@ object DiskannIndex {
       searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty,
       metrics: Option[SearchMetrics] = None,
-      nProbe: Int = 0): DataFrame =
-    searchRows(spark, path0, queryRows(queries), k, searchListSize, rescore,
-      tombstones, metrics, nProbe)
+      nProbe: Int = 0): DataFrame = {
+    val qRows = queryRows(queries)
+    searchRows(spark, path0, planSearch(spark, path0, qRows, nProbe), qRows, k,
+      searchListSize, rescore, tombstones, metrics)
+  }
 
   /** Collect a (qid, qvec [, qlabels]) query frame to driver rows; labels
     * normalized, a null qlabels means unfiltered. */
@@ -1441,14 +1463,25 @@ object DiskannIndex {
   def searchPoint(spark: SparkSession, path0: String, qvec: Array[Float],
       k: Int, searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
       qlabels: Array[Short] = null,
-      tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
+      tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] =
+    searchPointResolved(spark, path0, qvec, k, searchListSize, rescore, nProbe,
+      qlabels, tombstones)._1
+
+  /** [[searchPoint]], plus the metric of the generation it resolved — so a
+    * caller that merges more candidates in needs no second resolution. */
+  private[graft] def searchPointResolved(spark: SparkSession, path0: String,
+      qvec: Array[Float], k: Int, searchListSize: Int, rescore: Int,
+      nProbe: Int, qlabels: Array[Short],
+      tombstones: Set[Long]): (Seq[(Long, Double)], Metric) = {
     val q = Array((0L, qvec, Option(qlabels).map(LabelSets.normalize).orNull))
-    searchWarm(spark, path0, q, k, searchListSize, rescore, tombstones, nProbe)
-      .getOrElse(searchRows(spark, path0, q, k, searchListSize, rescore,
-        tombstones, None, nProbe).collect()
+    val plan = planSearch(spark, path0, q, nProbe)
+    val hits = searchWarm(path0, plan, q, k, searchListSize, rescore, tombstones)
+      .getOrElse(searchRows(spark, path0, plan, q, k, searchListSize, rescore,
+        tombstones, None).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
       .map(h => (h._2, h._3))
       .sortBy { case (rid, d) => (d, rid) }
+    (hits, Metric(plan.meta.metric))
   }
 
   /** Memoized serving RDD per index path: one partition per shard over the
@@ -1563,7 +1596,7 @@ object DiskannIndex {
       tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] = {
     if (queries.isEmpty) return Seq.empty
     val path = resolveRoot(spark, path0)
-    val meta = loadMeta(spark, path)
+    val meta = loadMetaAt(spark, path)
     val metric = Metric(meta.metric)
     val model =
       if (meta.storage == "sbq")
@@ -1627,10 +1660,9 @@ object DiskannIndex {
     * with the per-query IVF probe sets (absent = every shard) and the
     * shards some query needs. */
   private def planSearch(spark: SparkSession, path0: String,
-      qRows: Array[(Long, Array[Float], Array[Short])], nProbe: Int)
-      : (String, IndexMeta, Map[Long, Array[Int]], Seq[Int]) = {
+      qRows: Array[(Long, Array[Float], Array[Short])], nProbe: Int): SearchPlan = {
     val path = resolveRoot(spark, path0)
-    val meta = loadMeta(spark, path)
+    val meta = loadMetaAt(spark, path)
     val metric = Metric(meta.metric)
     val probeOf: Map[Long, Array[Int]] =
       qRows.flatMap { case (qid, qv, _) =>
@@ -1644,8 +1676,12 @@ object DiskannIndex {
       if (probeOf.nonEmpty && probeOf.size == qRows.length)
         probeOf.values.flatten.toSet.toSeq.sorted
       else 0 until meta.numShards
-    (path, meta, probeOf, neededShards)
+    SearchPlan(path, meta, probeOf, neededShards)
   }
+
+  /** What [[planSearch]] resolved for one query set. */
+  private case class SearchPlan(root: String, meta: IndexMeta,
+      probeOf: Map[Long, Array[Int]], neededShards: Seq[Int])
 
   /** Searcher cache key: the CALLER's index path + the per-shard epoch. The
     * resolved generation dir changes on every compaction, but an untouched
@@ -1681,11 +1717,11 @@ object DiskannIndex {
     * Spark job, broadcast or DataFrame; None when any probed shard is cold
     * (always, in cluster mode, where the driver's cache is empty). The
     * analog of a reference backend serving from shared buffers. */
-  private[graft] def searchWarm(spark: SparkSession, path0: String,
+  private def searchWarm(path0: String, plan: SearchPlan,
       qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
-      searchListSize: Int, rescore: Int, tombstones: Set[Long], nProbe: Int,
+      searchListSize: Int, rescore: Int, tombstones: Set[Long],
       metrics: Option[SearchMetrics] = None): Option[Seq[(Long, Long, Double)]] = {
-    val (_, meta, probeOf, neededShards) = planSearch(spark, path0, qRows, nProbe)
+    val SearchPlan(_, meta, probeOf, neededShards) = plan
     val warm = neededShards.flatMap(sh =>
       GraphSearcher.peek(shardKey(path0, meta, sh)).map(sh -> _))
     if (warm.length < neededShards.length) None
@@ -1701,10 +1737,10 @@ object DiskannIndex {
 
   /** [[search]] after query collection — the shared kernel for the
     * DataFrame path and [[searchPoint]]'s cold fallback. */
-  private[graft] def searchRows(spark: SparkSession, path0: String,
+  private def searchRows(spark: SparkSession, path0: String, plan: SearchPlan,
       qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int, rescore: Int, tombstones: Set[Long],
-      metrics: Option[SearchMetrics], nProbe: Int): DataFrame = {
+      metrics: Option[SearchMetrics]): DataFrame = {
     val resultSchema = StructType(Seq(
       StructField("qid", LongType, nullable = false),
       StructField("row_id", LongType, nullable = false),
@@ -1720,12 +1756,12 @@ object DiskannIndex {
     // job + shuffle on rows already in hand (measured: single-query p50
     // ~190 ms through the window vs low-ms driver-side).
     if (qRows.length <= 128) {
-      val warm = searchWarm(spark, path0, qRows, k, searchListSize, rescore,
-        tombstones, nProbe, metrics)
+      val warm = searchWarm(path0, plan, qRows, k, searchListSize, rescore,
+        tombstones, metrics)
       if (warm.isDefined) return localDf(warm.get)
     }
 
-    val (path, meta, probeOf, neededShards) = planSearch(spark, path0, qRows, nProbe)
+    val SearchPlan(path, meta, probeOf, neededShards) = plan
     val metric = Metric(meta.metric)
     val model =
       if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
@@ -2468,12 +2504,12 @@ object DiskannIndex {
       delta: DataFrame, k: Int, searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty,
       metrics: Option[SearchMetrics] = None, nProbe: Int = 0): DataFrame = {
-    val meta = loadMeta(spark, path)
-    val report = reportDistFn(Metric(meta.metric))
     // the queries are collected ONCE, for the main search and the delta pass
     val qRows = queryRows(queries)
-    val main = searchRows(spark, path, qRows, k, searchListSize, rescore,
-      tombstones, metrics, nProbe)
+    val plan = planSearch(spark, path, qRows, nProbe)
+    val report = reportDistFn(Metric(plan.meta.metric))
+    val main = searchRows(spark, path, plan, qRows, k, searchListSize, rescore,
+      tombstones, metrics)
     val hasDLabels = delta.columns.contains("labels")
     val qBc = spark.sparkContext.broadcast(qRows)
     val tombBc = spark.sparkContext.broadcast(tombstones)

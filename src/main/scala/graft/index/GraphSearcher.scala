@@ -11,8 +11,13 @@ import graft.functions.VectorKernels
  * full-precision rescoring of the top `rescore` candidates
  * (TSVResponseIterator::next_with_resort, scan.rs:244-305).
  *
- * CSR adjacency + primitive arrays: cache-friendly, zero boxing on the hot
- * path. One instance per (index, shard), cached per executor JVM.
+ * CSR adjacency over primitive arrays; one instance per (index, shard),
+ * cached per executor JVM and searched by concurrent tasks, so it holds no
+ * per-query state. Each [[ResumableSearch]] owns its traversal state, all of
+ * it primitive: the candidate min-heap and the visited list are parallel
+ * `Int`/`Double` arrays and membership is an open-addressed set of node ids
+ * sized to the traversal, not to the shard, so a step of the hot loop
+ * allocates nothing (the reference's `ListSearchResult`, graph/mod.rs:74-185).
  *
  * Start nodes are recomputed deterministically from insert order (node 0 is
  * the default start; the first node carrying each label is that label's
@@ -21,7 +26,7 @@ import graft.functions.VectorKernels
 final class GraphSearcher(
     val rowIds: Array[Long],
     val vectors: Array[Array[Float]],
-    val codes: Array[Array[Long]], // null => full-precision traversal (plain storage)
+    codes: Array[Array[Long]], // null => full-precision traversal (plain storage)
     val labels: Array[Array[Short]], // null => unlabeled index
     nbrOff: Array[Int],
     nbrTgt: Array[Int],
@@ -30,6 +35,26 @@ final class GraphSearcher(
     val dimsToIndex: Int = 0) extends Serializable {
 
   val n: Int = rowIds.length
+
+  // the traversal reads the code and the labels of nodes in graph order,
+  // i.e. at random: one flat code array (node i at i * codeStride) and one
+  // label bitmask per node keep each read to one cache line and no pointer
+  private val codeStride: Int = if (codes == null || n == 0) 0 else codes(0).length
+  private val codeWords: Array[Long] =
+    if (codes == null) null
+    else {
+      val flat = new Array[Long](n * codeStride)
+      var i = 0
+      while (i < n) {
+        require(codes(i).length == codeStride,
+          s"node $i: code of ${codes(i).length} words, not $codeStride")
+        System.arraycopy(codes(i), 0, flat, i * codeStride, codeStride)
+        i += 1
+      }
+      flat
+    }
+  private val labelMasks: Array[Long] =
+    if (labels == null) null else labels.map(GraphSearcher.labelMask)
 
   private val labelStarts: Map[Short, Int] = {
     if (labels == null) Map.empty
@@ -90,18 +115,23 @@ final class GraphSearcher(
       else if (query0 == null) new Array[Float](vectors(0).length)
       else query0
 
-    // the quantizer was trained on normalized vectors for cosine indexes.
-    // vectors are stored RAW; exact traversal (plain storage) orders by the
-    // SQL-visible distance, which is ordering-equivalent for all metrics.
+    // the quantizer was trained on normalized vectors for cosine indexes
     private val qcode: Array[Long] =
-      if (!degenerate && model != null && codes != null)
+      if (!degenerate && model != null && codeWords != null)
         model.quantize(BuildSpace(query, dimsToIndex, metric))
       else null
+    if (qcode != null && qcode.length > codeStride)
+      throw new IllegalArgumentException(
+        s"query code of ${qcode.length} words exceeds the index's $codeStride")
+    private val filterMask: Long =
+      if (filterLabels == null) 0L else GraphSearcher.labelMask(filterLabels)
 
+    // vectors are stored RAW; exact traversal (plain storage) orders by the
+    // SQL-visible distance, which is ordering-equivalent for all metrics.
     @inline private def traversalDist(i: Int): Double =
-      if (codes != null) {
+      if (codeWords != null) {
         if (stats != null) stats.quantizedCmps += 1
-        VectorKernels.hamming(qcode, codes(i)).toDouble
+        VectorKernels.hamming(qcode, codeWords, i * codeStride).toDouble
       } else {
         if (stats != null) stats.exactCmps += 1
         reportDist(vectors(i), query)
@@ -110,17 +140,123 @@ final class GraphSearcher(
     @inline private def lt(aId: Int, aD: Double, bId: Int, bD: Double): Boolean =
       aD < bD || (aD == bD && aId < bId)
 
-    private val ord = Ordering.fromLessThan[(Int, Double)]((a, b) => lt(b._1, b._2, a._1, a._2))
-    private val visited = new mutable.ArrayBuffer[(Int, Double)](256)
-    private val inserted = new java.util.HashSet[Integer](512)
-    private val candidates = mutable.PriorityQueue.empty[(Int, Double)](ord)
+    // candidate min-heap on (dist, id), 1-based over parallel arrays. Its
+    // sift steps are those of the scala.collection.mutable.PriorityQueue it
+    // replaced, so even NaN distances (a zero query under cosine over plain
+    // storage), where `lt` is no order, pop nodes in the same sequence
+    private var heapId = new Array[Int](64)
+    private var heapDist = new Array[Double](64)
+    private var heapSize = 0
+    // visited list in (dist, id) order; `visExact` holds the entry's exact
+    // distance once `visHasExact` is set. A resumed escalation re-ranks a
+    // mostly-overlapping rescore pool, so keeping these makes "only new work
+    // is paid" true for the rescore too, both the recompute and the
+    // exactCmps accounting
+    private var visId = new Array[Int](64)
+    private var visDist = new Array[Double](64)
+    private var visExact = new Array[Double](64)
+    private var visHasExact = new Array[Boolean](64)
+    private var visCount = 0
+    // nodes already queued or rejected by the label filter (a rejected node
+    // is rejected again on every later sighting, so it is never re-tested):
+    // an open-addressed set of id + 1, at most half full and sized from the
+    // traversal budget, so a short search on a large shard stays small
+    private var seenSlots = new Array[Int](16)
+    private var seenCount = 0
     private var seeded = false
-    // exact distances already computed by earlier advance() rounds: a
-    // resumed escalation re-ranks a mostly-overlapping rescore pool, so
-    // caching makes "only new work is paid" true for the rescore too —
-    // both the recompute and the numExactCmps accounting (the cache is
-    // bounded by the visited list, ~L + rescore + k entries)
-    private val exactCache = mutable.HashMap.empty[Int, Double]
+
+    // a table with a slot per node needs no hash: `id` is its own slot
+    @inline private def slotOf(id: Int, mask: Int): Int =
+      if (mask >= n) id
+      else {
+        val h = id * 0x9E3779B9
+        (h ^ (h >>> 16)) & mask
+      }
+
+    /** Add `id` to the seen set; false when it was already there. */
+    private def markSeen(id: Int): Boolean = {
+      val mask = seenSlots.length - 1
+      var at = slotOf(id, mask)
+      while (seenSlots(at) != 0) {
+        if (seenSlots(at) == id + 1) return false
+        at = (at + 1) & mask
+      }
+      seenSlots(at) = id + 1
+      seenCount += 1
+      if (2 * seenCount > mask) reserveSeen(seenCount)
+      true
+    }
+
+    /** Grow the seen set to hold `count` ids at most half full. */
+    private def reserveSeen(count: Int): Unit =
+      if (2 * count >= seenSlots.length) {
+        val old = seenSlots
+        seenSlots = new Array[Int](Integer.highestOneBit(2 * count) * 2)
+        val mask = seenSlots.length - 1
+        var i = 0
+        while (i < old.length) {
+          if (old(i) != 0) {
+            var at = slotOf(old(i) - 1, mask)
+            while (seenSlots(at) != 0) at = (at + 1) & mask
+            seenSlots(at) = old(i)
+          }
+          i += 1
+        }
+      }
+
+    private def push(id: Int, d: Double): Unit = {
+      heapSize += 1
+      if (heapSize == heapId.length) {
+        heapId = java.util.Arrays.copyOf(heapId, heapSize * 2)
+        heapDist = java.util.Arrays.copyOf(heapDist, heapSize * 2)
+      }
+      var k = heapSize
+      while (k > 1 && lt(id, d, heapId(k >>> 1), heapDist(k >>> 1))) {
+        heapId(k) = heapId(k >>> 1); heapDist(k) = heapDist(k >>> 1)
+        k >>>= 1
+      }
+      heapId(k) = id; heapDist(k) = d
+    }
+
+    /** Drop the root (read it from `heapId(1)`/`heapDist(1)` first). */
+    private def pop(): Unit = {
+      val id = heapId(heapSize); val d = heapDist(heapSize)
+      heapSize -= 1
+      var k = 1
+      var done = false
+      while (!done && 2 * k <= heapSize) {
+        var j = 2 * k
+        if (j < heapSize && lt(heapId(j + 1), heapDist(j + 1), heapId(j), heapDist(j))) j += 1
+        if (!lt(heapId(j), heapDist(j), id, d)) done = true
+        else {
+          heapId(k) = heapId(j); heapDist(k) = heapDist(j)
+          k = j
+        }
+      }
+      heapId(k) = id; heapDist(k) = d
+    }
+
+    private def insertVisited(id: Int, d: Double): Unit = {
+      var lo = 0
+      var hi = visCount
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (lt(visId(mid), visDist(mid), id, d)) lo = mid + 1 else hi = mid
+      }
+      if (visCount == visId.length) {
+        visId = java.util.Arrays.copyOf(visId, visCount * 2)
+        visDist = java.util.Arrays.copyOf(visDist, visCount * 2)
+        visExact = java.util.Arrays.copyOf(visExact, visCount * 2)
+        visHasExact = java.util.Arrays.copyOf(visHasExact, visCount * 2)
+      }
+      val tail = visCount - lo
+      System.arraycopy(visId, lo, visId, lo + 1, tail)
+      System.arraycopy(visDist, lo, visDist, lo + 1, tail)
+      System.arraycopy(visExact, lo, visExact, lo + 1, tail)
+      System.arraycopy(visHasExact, lo, visHasExact, lo + 1, tail)
+      visId(lo) = id; visDist(lo) = d; visHasExact(lo) = false
+      visCount += 1
+    }
 
     private def seed(): Unit = {
       val starts: Seq[Int] =
@@ -130,10 +266,19 @@ final class GraphSearcher(
           if (s.isEmpty) Seq(0) else s
         }
       starts.foreach { s =>
-        if (inserted.add(s)) candidates.enqueue((s, traversalDist(s)))
+        if (markSeen(s)) push(s, traversalDist(s))
       }
       seeded = true
     }
+
+    /** `LabelSets.overlaps(labels(id), filterLabels)` behind the bitmask
+      * test, which rejects most non-matching nodes without reading labels. */
+    @inline private def passesFilter(id: Int): Boolean =
+      filterLabels == null || ((labelMasks(id) & filterMask) != 0 &&
+        LabelSets.overlaps(labels(id), filterLabels))
+
+    @inline private def eligible(id: Int): Boolean =
+      !tombstoned(rowIds(id)) && passesFilter(id)
 
     /** Extend the traversal to the (k, searchListSize, rescore) budget and
       * return the rescored result — identical to a fresh
@@ -141,7 +286,7 @@ final class GraphSearcher(
     def advance(k: Int, searchListSize: Int, rescore: Int): Array[(Long, Double)] = {
       if (degenerate) return Array.empty
       if (!seeded) seed()
-      val preVisited = visited.length
+      val preVisited = visCount
       val l = math.max(searchListSize, k)
       // Consume-driven expansion budget: the reference's streaming scan keeps
       // iterating as the executor pulls results — `consume` pops the nearest
@@ -152,6 +297,8 @@ final class GraphSearcher(
       // one-shot batch search must use that same budget or it under-explores
       // vs the reference at identical (L, rescore) parameters.
       val bound = l + (if (rescore > 0) math.max(rescore, k) + k - 1 else k)
+      // a traversal to `bound` sees up to `bound` adjacency lists of nodes
+      reserveSeen(math.min(n.toLong, bound.toLong * nbrTgt.length / n).toInt)
 
       // bounded best-first traversal (greedy_search_iterate,
       // graph/mod.rs:331-385) ordered by (distance, node id): quantized
@@ -160,73 +307,65 @@ final class GraphSearcher(
       // a tie at the frontier bound rather than stopping on it
       // (neighbor_with_distance.rs:12-95) — a raw `<` on distance alone stops
       // at the first tie and measurably loses recall on 1-2 bit codes.
-      while (candidates.nonEmpty && (visited.length < bound || {
-        val h = candidates.head; val b = visited(bound - 1)
-        lt(h._1, h._2, b._1, b._2)
-      })) {
-        val head = candidates.dequeue()
-        // binary-search insert position in the (dist, id)-sorted visited list
-        var lo = 0
-        var hi = visited.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          val v = visited(mid)
-          if (lt(v._1, v._2, head._1, head._2)) lo = mid + 1 else hi = mid
-        }
-        visited.insert(lo, head)
-        var e = nbrOff(head._1)
-        val end = nbrOff(head._1 + 1)
+      while (heapSize > 0 && (visCount < bound ||
+          lt(heapId(1), heapDist(1), visId(bound - 1), visDist(bound - 1)))) {
+        val head = heapId(1)
+        insertVisited(head, heapDist(1))
+        pop()
+        var e = nbrOff(head)
+        val end = nbrOff(head + 1)
         while (e < end) {
           val cand = nbrTgt(e)
-          if (!inserted.contains(cand)) {
-            // in-traversal label skip (sbq/storage.rs:163-172)
-            val keep = filterLabels == null ||
-              LabelSets.overlaps(labels(cand), filterLabels)
-            if (keep) {
-              inserted.add(cand)
-              candidates.enqueue((cand, traversalDist(cand)))
-            }
-          }
+          // in-traversal label skip (sbq/storage.rs:163-172)
+          if (markSeen(cand) && passesFilter(cand)) push(cand, traversalDist(cand))
           e += 1
         }
       }
 
-      // rescore buffer (T2): exact distances for the top candidates. The
-      // reference's resort is a streaming refill-then-pop (scan.rs:244-305),
-      // so for k results it rescores the first ~rescore+k-1 of the
-      // quantized-order stream, not exactly `rescore`. Quantized distances
-      // are coarse integers (Hamming over <=2-bit codes) with heavy ties;
-      // cutting the pool mid-tie would discard candidates indistinguishable
-      // at traversal resolution, so the cut extends through the boundary tie.
-      // Cost stays bounded: the pool can never exceed the visited list,
-      // whose length is ~searchListSize.
-      val eligible = visited.filter { case (id, _) =>
-        !tombstoned(rowIds(id)) &&
-          (filterLabels == null || LabelSets.overlaps(labels(id), filterLabels))
+      // rescore buffer (T2): exact distances for the top eligible visited
+      // nodes. The reference's resort is a streaming refill-then-pop
+      // (scan.rs:244-305), so for k results it rescores the first
+      // ~rescore+k-1 of the quantized-order stream, not exactly `rescore`.
+      // Quantized distances are coarse integers (Hamming over <=2-bit codes)
+      // with heavy ties; cutting the pool mid-tie would discard candidates
+      // indistinguishable at traversal resolution, so the cut extends
+      // through the boundary tie. Cost stays bounded: the pool can never
+      // exceed the visited list, whose length is ~searchListSize.
+      val cutAt = if (rescore > 0) math.max(rescore + k - 1, k) else Int.MaxValue
+      var pool = new Array[Int](math.min(visCount, 64).max(1))
+      var poolSize = 0
+      var i = 0
+      var cut = false
+      while (i < visCount) {
+        if (eligible(visId(i))) {
+          // past the cut, only the boundary tie still joins the pool
+          if (cut && !(visDist(i) == visDist(pool(poolSize - 1)))) i = visCount
+          else {
+            if (poolSize == pool.length) pool = java.util.Arrays.copyOf(pool, poolSize * 2)
+            pool(poolSize) = i
+            poolSize += 1
+            cut = poolSize >= cutAt
+          }
+        }
+        i += 1
       }
-      val poolSize =
-        if (rescore <= 0 || eligible.length <= rescore + k - 1) eligible.length
-        else {
-          val base = math.max(rescore + k - 1, k)
-          val cutDist = eligible(base - 1)._2
-          var p = base
-          while (p < eligible.length && eligible(p)._2 == cutDist) p += 1
-          p
+      val out = new Array[(Long, Double)](poolSize)
+      var p = 0
+      while (p < poolSize) {
+        val at = pool(p)
+        val id = visId(at)
+        if (!visHasExact(at)) {
+          if (stats != null) stats.exactCmps += 1
+          visExact(at) = reportDist(vectors(id), query)
+          visHasExact(at) = true
         }
-      val out = eligible.iterator
-        .take(poolSize)
-        .map { case (id, _) =>
-          val d = exactCache.getOrElseUpdate(id, {
-            if (stats != null) stats.exactCmps += 1
-            reportDist(vectors(id), query)
-          })
-          (rowIds(id), d)
-        }
-        .toArray
-        .sortBy { case (rid, d) => (d, rid) }
+        out(p) = (rowIds(id), visExact(at))
+        p += 1
+      }
+      java.util.Arrays.sort(out, GraphSearcher.byDistThenRowId)
       // delta, not total: across resumed rounds the stat accumulates actual
       // NEW work (for a one-shot search the delta IS the total)
-      if (stats != null) stats.nodesVisited += visited.length - preVisited
+      if (stats != null) stats.nodesVisited += visCount - preVisited
       out
     }
   }
@@ -241,6 +380,22 @@ final class SearchStats extends Serializable {
 }
 
 object GraphSearcher {
+  /** Bit `label & 63` per label: two sets that share a label share a bit. */
+  private def labelMask(ls: Array[Short]): Long = {
+    var m = 0L
+    var i = 0
+    while (i < ls.length) { m |= 1L << (ls(i) & 63); i += 1 }
+    m
+  }
+
+  /** Result order of every search path: exact distance (total order, as
+    * `java.lang.Double.compare`), then row id. */
+  private val byDistThenRowId: java.util.Comparator[(Long, Double)] =
+    (a: (Long, Double), b: (Long, Double)) => {
+      val c = java.lang.Double.compare(a._2, b._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+    }
+
   /** Per-executor cache: shard graphs are immutable, so one decode per JVM
     * serves every query in the executor's lifetime (the Spark analog of the
     * reference keeping index pages in shared buffers). Keys are

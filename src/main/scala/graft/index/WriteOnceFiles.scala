@@ -54,7 +54,7 @@ private[graft] object WriteOnceFiles {
   /** `dir`'s data files (`_`/`.` names skipped); empty when it is absent. */
   def list(spark: SparkSession, dir: String): Array[FileStatus] = {
     val d = new Path(dir)
-    try d.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(d)
+    try DiskannIndex.fileSystem(spark, d).listStatus(d)
       .filter { s =>
         val n = s.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")

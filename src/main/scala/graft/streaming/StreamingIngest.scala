@@ -317,11 +317,10 @@ object StreamingIngest {
     val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
     val delta = graft.index.WriteOnceFiles.deltaRows(spark, indexPath)(
       DiskannIndex.requireDeltaFits(spark, "searchPointFresh", _))
-    val main = DiskannIndex.searchPoint(spark, indexPath, qvec, k,
-      searchListSize, rescore, nProbe, qlabels, tombs)
+    val (main, metric) = DiskannIndex.searchPointResolved(spark, indexPath,
+      qvec, k, searchListSize, rescore, nProbe, qlabels, tombs)
     delta.fold(main) { rows =>
-      val report = DiskannIndex.reportDistFn(
-        graft.index.Metric(DiskannIndex.loadMeta(spark, indexPath).metric))
+      val report = DiskannIndex.reportDistFn(metric)
       val ql = Option(qlabels).map(graft.index.LabelSets.normalize).orNull
       val hits = rows.iterator.flatMap { case (rid, v, lbs) =>
         DiskannIndex.deltaScore(rid, v, lbs, qvec, ql, tombs.contains, report)
