@@ -436,6 +436,11 @@ object DiskannIndex {
       numDimsToIndex = if (dimsToIndex > 0) Some(dimsToIndex) else None,
       shardTargetRows = shardTargetRows,
       partitioner = partitioner)
+
+    /** The frozen SBQ quantizer; null for plain storage. */
+    def sbqModel: SbqModel =
+      if (storage == "sbq") SbqModel(modelCount, modelMean, modelM2, bitsPerDim)
+      else null
   }
 
   /**
@@ -658,10 +663,7 @@ object DiskannIndex {
       dstPath: String): Option[(Long, Seq[Int])] = {
     import org.apache.spark.sql.functions.broadcast
     val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq")
-        SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
+    val model = meta.sbqModel
     val modelBc = spark.sparkContext.broadcast(model)
     val dimsToIndex = meta.dimsToIndex
     // delta rows route to exactly one shard by the SAME rule the build
@@ -1148,9 +1150,14 @@ object DiskannIndex {
     * are decoded, on the driver with no Spark job ([[WriteOnceFiles]]).
     * Steady serving between deletes: one listing per call. A file a
     * concurrent compact consumed between listing and decode is skipped —
-    * the compact installed the generation without those rows first. */
-  def loadTombstones(spark: SparkSession, indexPath: String): Set[Long] =
-    WriteOnceFiles.tombstones(spark, indexPath)
+    * the compact installed the generation without those rows first.
+    * `plus` (a caller's ad-hoc set) is unioned in; when it is empty the
+    * memoized set itself is returned, uncopied. */
+  def loadTombstones(spark: SparkSession, indexPath: String,
+      plus: Set[Long] = Set.empty): Set[Long] = {
+    val registry = WriteOnceFiles.tombstones(spark, indexPath)
+    if (plus.isEmpty) registry else plus ++ registry
+  }
 
   def loadMeta(spark: SparkSession, path0: String): IndexMeta =
     loadMetaAt(spark, resolveRoot(spark, path0))
@@ -1347,7 +1354,13 @@ object DiskannIndex {
   case class SearchMetrics(
       nodesVisited: org.apache.spark.sql.execution.metric.SQLMetric,
       quantizedCmps: org.apache.spark.sql.execution.metric.SQLMetric,
-      exactCmps: org.apache.spark.sql.execution.metric.SQLMetric)
+      exactCmps: org.apache.spark.sql.execution.metric.SQLMetric) {
+    def add(st: SearchStats): Unit = {
+      nodesVisited.add(st.nodesVisited)
+      quantizedCmps.add(st.quantizedCmps)
+      exactCmps.add(st.exactCmps)
+    }
+  }
 
   /**
    * A scan of the nodes table whose every task sees only WHOLE shards.
@@ -1554,72 +1567,56 @@ object DiskannIndex {
   }
 
   /**
-   * CLUSTER-MODE serving: answer a small query batch from EXECUTOR-resident
-   * warm searchers — the path that does not exist through [[searchPoint]]
-   * when the driver is not colocated with the executor cache (SCALING.md's
-   * documented cluster-mode fallback was the full scan path; this closes
-   * it). The reference serves from wherever the backend process holds its
-   * shared buffers; on Spark, that place is the executor JVM, so the
-   * serving pool lives there.
+   * Batch point serving: per query the k best (qid, row_id, dist) rows, in
+   * (qid, dist, row_id) order; queries sharing a qid share its k rows. The
+   * generation resolves once per call and the durable tombstone registry is
+   * masked on every call.
    *
-   * How it stays cheap:
-   *  - ONE task per shard over a MEMOIZED shard-aligned RDD (partition i ==
-   *    shard i, the [[shardAlignedNodesRdd]] contract) — no per-call
-   *    planning, no shuffle anywhere in the lineage;
-   *  - each task checks the executor-local [[GraphSearcher]] cache FIRST
-   *    and serves without touching its input iterator when warm — the
-   *    parquet scan underneath is LAZY, so a warm task reads zero bytes
-   *    (asserted via task input metrics in DiskannIndexSpec). Only a cold
-   *    (first-visit) task consumes the scan and decodes the shard, after
-   *    which that executor holds the shard for the life of its LRU slot;
-   *  - IVF routing skips unprobed shards BEFORE the cache probe, so a
-   *    routed query batch schedules numShards no-op tasks but reads and
-   *    searches only its probe set;
-   *  - the per-query top-k merge runs driver-side over ≤ shards×k×|batch|
-   *    collected rows — the same bounded merge [[searchPoint]]'s all-warm
-   *    path does.
+   * Driver path first: when the batch holds at most 128 queries and every
+   * probed shard's searcher is warm in this JVM, [[searchWarm]] answers with
+   * no Spark job, broadcast or DataFrame, one query per core — the
+   * reference's backend serving from shared buffers.
    *
-   * Scheduling affinity is best-effort (Spark places tasks by scan
-   * locality, not by cache residency): a task landing on a cache-cold
-   * executor pays one scan+decode and warms THAT executor — at steady
-   * state each frequently-probed shard converges to one decoded replica
-   * per executor that serves it, bounded by the cache's LRU. Deletes are
-   * honored: the persisted tombstone registry is loaded (fingerprint-
-   * cached) and masked on every call, like the SQL scan path.
-   *
-   * Returns (qid, row_id, dist) rows, per query ordered by (dist, row_id),
-   * ties broken exactly like every other search path.
+   * Executor pool otherwise (cold shards, larger batches, cluster mode,
+   * where the driver's cache is empty): one Spark job, ONE task per probed
+   * shard over a MEMOIZED shard-aligned RDD ([[shardAlignedNodesRdd]]: no
+   * per-call planning, no shuffle). A task checks its executor's
+   * [[GraphSearcher]] cache before touching its LAZY parquet scan, so a
+   * warm task reads zero bytes (asserted in DiskannIndexSpec); a cold one
+   * decodes its shard and warms THAT executor (placement follows scan
+   * locality, not cache residency). The driver merges ≤ shards×k×|batch|
+   * rows under the driver path's rule ([[mergeByQuery]]).
    */
   def servePointBatch(spark: SparkSession, path0: String,
       queries: Seq[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
-      tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] = {
+      tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] =
+    serveBatch(spark, path0, queries, k, searchListSize, rescore, nProbe,
+      tombstones, onDriver = true)
+
+  /** [[servePointBatch]]; `onDriver = false` forces the executor pool. */
+  private[graft] def serveBatch(spark: SparkSession, path0: String,
+      queries: Seq[(Long, Array[Float], Array[Short])], k: Int,
+      searchListSize: Int, rescore: Int, nProbe: Int, tombstones: Set[Long],
+      onDriver: Boolean): Seq[(Long, Long, Double)] = {
     if (queries.isEmpty) return Seq.empty
-    val path = resolveRoot(spark, path0)
-    val meta = loadMetaAt(spark, path)
-    val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq")
-        SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
     val qRows = queries.map { case (qid, qv, ql) =>
       (qid, qv, Option(ql).map(LabelSets.normalize).orNull)
     }.toArray
-    val probeOf: Map[Long, Array[Int]] =
-      qRows.flatMap { case (qid, qv, _) =>
-        probeShardsFor(meta, metric, qv, nProbe).map(qid -> _)
-      }.toMap
-    val probedShards: Set[Int] =
-      if (probeOf.nonEmpty && probeOf.size == qRows.length)
-        probeOf.values.flatten.toSet
-      else (0 until meta.numShards).toSet
-    val tomb = tombstones ++ loadTombstones(spark, path0)
+    val plan = planSearch(spark, path0, qRows, nProbe)
+    val tomb = loadTombstones(spark, path0, tombstones)
+    val warm = if (onDriver) searchWarm(path0, plan, qRows, k, searchListSize,
+      rescore, tomb) else None
+    if (warm.isDefined) return warm.get
+    val SearchPlan(path, meta, probeOf, neededShards) = plan
+    val metric = Metric(meta.metric)
+    val model = meta.sbqModel
     val report = reportDistFn(metric)
     val rdd = servingNodesRdd(spark, path0, path, meta)
     val sc = spark.sparkContext
     val qBc = sc.broadcast(qRows)
     val probeBc = sc.broadcast(probeOf)
-    val probedBc = sc.broadcast(probedShards)
+    val probedBc = sc.broadcast(neededShards.toSet)
     val tombBc = sc.broadcast(tomb)
     val shardIds = meta.shardBuildIds
     val cachePath = path0
@@ -1640,7 +1637,7 @@ object DiskannIndex {
         }
         if (searcher == null) Iterator.empty
         else searchShard(searcher, shard, qBc.value.iterator, k,
-          searchListSize, rescore, tombBc.value, probeBc.value, report, None)
+          searchListSize, rescore, tombBc.value, probeBc.value, report, null)
       }
     }
     // submit ONLY the probed partitions (partition id == shard id by the
@@ -1648,11 +1645,8 @@ object DiskannIndex {
     // not numShards — the scheduling overhead that otherwise dominates
     // point latency at high shard counts
     val partial = sc.runJob(served,
-      (it: Iterator[(Long, Long, Double)]) => it.toArray,
-      probedShards.toSeq.sorted).flatten
-    partial.groupBy(_._1).iterator.flatMap { case (_, hits) =>
-      hits.sortBy(h => (h._3, h._2)).take(k)
-    }.toSeq.sortBy(h => (h._1, h._3, h._2))
+      (it: Iterator[(Long, Long, Double)]) => it.toArray, neededShards).flatten
+    mergeByQuery(partial, k)
   }
 
   /** Resolve the active generation ONCE per query set — meta and nodes must
@@ -1691,48 +1685,101 @@ object DiskannIndex {
     s"$path0#$shard#${meta.shardBuildIds(shard)}"
 
   /** Answer queries on one shard's decoded searcher: per query whose IVF
-    * probe set includes the shard, the shard's k best (qid, row_id, dist). */
+    * probe set includes the shard, the shard's k best (qid, row_id, dist).
+    * `stats`, when non-null, accumulates the scan telemetry. */
   private def searchShard(searcher: GraphSearcher, shard: Int,
       qs: Iterator[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int, rescore: Int, tomb: Set[Long],
       probes: Map[Long, Array[Int]],
       report: (Array[Float], Array[Float]) => Double,
-      metrics: Option[SearchMetrics]): Iterator[(Long, Long, Double)] =
+      stats: SearchStats): Iterator[(Long, Long, Double)] =
     qs.filter { case (qid, _, _) => probes.get(qid).forall(_.contains(shard)) }
       .flatMap { case (qid, qvec, qlabels) =>
-        val st = if (metrics.isDefined) new SearchStats else null
-        val hits = searcher.search(qvec, k, searchListSize, rescore, qlabels,
-          rid => tomb.contains(rid), report, st)
-        metrics.foreach { m =>
-          m.nodesVisited.add(st.nodesVisited)
-          m.quantizedCmps.add(st.quantizedCmps)
-          m.exactCmps.add(st.exactCmps)
-        }
-        hits.iterator.take(k).map { case (rid, d) => (qid, rid, d) }
+        searcher.search(qvec, k, searchListSize, rescore, qlabels,
+          rid => tomb.contains(rid), report, stats)
+          .iterator.take(k).map { case (rid, d) => (qid, rid, d) }
       }
 
-  /** The driver-only serving kernel: when every probed shard's decoded
-    * searcher lives in THIS JVM's cache, answer here — per query the top-k
-    * (qid, row_id, dist) in the scan path's (dist, row_id) order — with no
-    * Spark job, broadcast or DataFrame; None when any probed shard is cold
-    * (always, in cluster mode, where the driver's cache is empty). The
-    * analog of a reference backend serving from shared buffers. */
+  /** (dist, row_id) under `Double.compare`: the order of every result. */
+  private val hitOrder: Ordering[(Long, Double)] = (a, b) => {
+    val c = java.lang.Double.compare(a._2, b._2)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  }
+
+  /** The merge rule of every top-k: each row_id once, at its minimum
+    * distance, in [[hitOrder]], then the first k. Bounded: cut back to k at
+    * 2k rows, and a row behind the k-th kept one (k distinct row_ids) is
+    * dropped on arrival, so a long stream costs O(n log k), not a sort. */
+  private[graft] final class TopK(k: Int) {
+    private val buf = mutable.ArrayBuffer.empty[(Long, Double)]
+    private var kth: (Long, Double) = null
+    private def compact(): Unit = {
+      val kept = buf.sortInPlace()(hitOrder).distinctBy(_._1).take(k)
+      buf.clear(); buf ++= kept
+      if (k > 0 && buf.length == k) kth = buf.last
+    }
+    def add(h: (Long, Double)): Unit =
+      if (k > 0 && (kth == null || hitOrder.lt(h, kth))) {
+        buf += h
+        if (buf.length >= math.max(2L * k, 64L)) compact()
+      }
+    def result: Seq[(Long, Double)] = { compact(); buf.toSeq }
+  }
+
+  private[graft] def mergeTopK(hits: Iterator[(Long, Double)],
+      k: Int): Seq[(Long, Double)] =
+    { val top = new TopK(k); hits.foreach(top.add); top.result }
+
+  /** [[mergeTopK]] per qid over (qid, row_id, dist) rows, in qid order. */
+  private[graft] def mergeByQuery(hits: Iterable[(Long, Long, Double)],
+      k: Int): Seq[(Long, Long, Double)] =
+    hits.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (qid, hs) =>
+      mergeTopK(hs.iterator.map(h => (h._2, h._3)), k)
+        .map { case (rid, d) => (qid, rid, d) }
+    }
+
+  /** The largest batch the driver answers alone. */
+  private val MaxWarmBatch = 128
+
+  /** The driver-only serving kernel: [[searchOnDriver]] when every probed
+    * shard's searcher is warm in THIS JVM and the batch holds at most
+    * [[MaxWarmBatch]] queries; None otherwise (always, in cluster mode). */
   private def searchWarm(path0: String, plan: SearchPlan,
       qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int, rescore: Int, tombstones: Set[Long],
       metrics: Option[SearchMetrics] = None): Option[Seq[(Long, Long, Double)]] = {
-    val SearchPlan(_, meta, probeOf, neededShards) = plan
-    val warm = neededShards.flatMap(sh =>
-      GraphSearcher.peek(shardKey(path0, meta, sh)).map(sh -> _))
-    if (warm.length < neededShards.length) None
-    else {
-      val report = reportDistFn(Metric(meta.metric))
-      Some(warm.flatMap { case (shard, searcher) =>
-        searchShard(searcher, shard, qRows.iterator, k, searchListSize,
-          rescore, tombstones, probeOf, report, metrics)
-      }.groupBy(_._1).valuesIterator
-        .flatMap(_.sortBy(h => (h._3, h._2)).take(k)).toSeq)
+    val warm = plan.neededShards.flatMap(sh =>
+      GraphSearcher.peek(shardKey(path0, plan.meta, sh)).map(sh -> _))
+    if (qRows.length > MaxWarmBatch || warm.length < plan.neededShards.length)
+      None
+    else Some(searchOnDriver(warm, plan, qRows, k, searchListSize, rescore,
+      tombstones, metrics))
+  }
+
+  /** Per qid in ascending order, its top-k over the `warm` searchers under
+    * [[mergeTopK]]. A batch runs one query per core, a single query on the
+    * calling thread; telemetry is collected per query and added to
+    * `metrics` on the calling thread (`SQLMetric.add` is not atomic). */
+  private def searchOnDriver(warm: Seq[(Int, GraphSearcher)], plan: SearchPlan,
+      qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
+      searchListSize: Int, rescore: Int, tombstones: Set[Long],
+      metrics: Option[SearchMetrics]): Seq[(Long, Long, Double)] = {
+    val report = reportDistFn(Metric(plan.meta.metric))
+    val byQid = qRows.groupBy(_._1).toList.sortBy(_._1)
+    def answer(q: (Long, Array[(Long, Array[Float], Array[Short])])) = {
+      val st = if (metrics.isDefined) new SearchStats else null
+      val hits = mergeTopK(warm.iterator.flatMap { case (shard, searcher) =>
+        searchShard(searcher, shard, q._2.iterator, k, searchListSize,
+          rescore, tombstones, plan.probeOf, report, st)
+      }.map(h => (h._2, h._3)), k)
+      (hits.map { case (rid, d) => (q._1, rid, d) }, st)
     }
+    import scala.collection.parallel.CollectionConverters._
+    val answered =
+      if (byQid.length == 1) byQid.map(answer)
+      else byQid.par.map(answer).toList
+    metrics.foreach(m => answered.foreach(a => m.add(a._2)))
+    answered.flatMap(_._1)
   }
 
   /** [[search]] after query collection — the shared kernel for the
@@ -1749,23 +1796,15 @@ object DiskannIndex {
       spark.createDataFrame(java.util.Arrays.asList(
         hits.map(h => Row(h._1, h._2, h._3)): _*), resultSchema)
 
-    // All-warm serving fast path, gated to small query batches (large ones
-    // belong to searchDistributed): the per-query top-k merge is over ≤
-    // nShards×k driver-local rows, so return them as a LocalRelation.
-    // Routing them through the window merge below would spend a full Spark
-    // job + shuffle on rows already in hand (measured: single-query p50
-    // ~190 ms through the window vs low-ms driver-side).
-    if (qRows.length <= 128) {
-      val warm = searchWarm(path0, plan, qRows, k, searchListSize, rescore,
-        tombstones, metrics)
-      if (warm.isDefined) return localDf(warm.get)
-    }
+    // all warm: a LocalRelation of the driver's answer (the window merge
+    // below costs a job + shuffle: single-query p50 ~190 ms vs low-ms)
+    val warm = searchWarm(path0, plan, qRows, k, searchListSize, rescore,
+      tombstones, metrics)
+    if (warm.isDefined) return localDf(warm.get)
 
     val SearchPlan(path, meta, probeOf, neededShards) = plan
     val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
+    val model = meta.sbqModel
     val probeBc = spark.sparkContext.broadcast(probeOf)
     val qBc = spark.sparkContext.broadcast(qRows)
     val tombBc = spark.sparkContext.broadcast(tombstones)
@@ -1775,7 +1814,7 @@ object DiskannIndex {
     // JVM's cache is answered directly, with no nodes scan at all; only the
     // cold shards are read.
     val warmPairs: Seq[(Int, GraphSearcher)] =
-      if (qRows.length <= 128)
+      if (qRows.length <= MaxWarmBatch)
         neededShards.flatMap(sh =>
           GraphSearcher.peek(shardKey(path0, meta, sh)).map(sh -> _))
       else Seq.empty
@@ -1783,10 +1822,8 @@ object DiskannIndex {
     val coldShards = neededShards.filterNot(warmSet)
     val warmPartial: Option[DataFrame] =
       if (warmPairs.isEmpty) None
-      else Some(localDf(warmPairs.flatMap { case (shard, searcher) =>
-        searchShard(searcher, shard, qRows.iterator, k, searchListSize,
-          rescore, tombstones, probeOf, report, metrics)
-      }))
+      else Some(localDf(searchOnDriver(warmPairs, plan, qRows, k,
+        searchListSize, rescore, tombstones, metrics)))
 
     val coldPartial: Option[DataFrame] = if (coldShards.isEmpty) None else {
       val coldNodes =
@@ -1798,9 +1835,12 @@ object DiskannIndex {
           val searcher = GraphSearcher.getOrBuild(shardKey(path0, meta, shard),
             () => buildShardSearcher(path, shard, shardRows, metric, model,
               meta.hasLabels, meta.dimsToIndex))
-          searchShard(searcher, shard, qBc.value.iterator, k, searchListSize,
-            rescore, tombBc.value, probeBc.value, report, metrics)
-            .map(h => Row(h._1, h._2, h._3))
+          val st = if (metrics.isDefined) new SearchStats else null
+          val hits = searchShard(searcher, shard, qBc.value.iterator, k,
+            searchListSize, rescore, tombBc.value, probeBc.value, report, st)
+            .map(h => Row(h._1, h._2, h._3)).toArray
+          metrics.foreach(_.add(st))
+          hits.iterator
         }
       }(org.apache.spark.sql.Encoders.row(resultSchema)))
     }
@@ -1888,26 +1928,13 @@ object DiskannIndex {
   final class ResumableScanHandle private[DiskannIndex] (
       handles: Seq[(GraphSearcher#ResumableSearch, SearchStats)],
       metrics: Option[SearchMetrics]) {
-    private var reported = (0L, 0L, 0L)
-
     /** Top-kk merged hits at this budget, as (qid=0, row_id, dist) rows. */
     def topK(kk: Int, searchListSize: Int, rescore: Int): Array[Row] = {
-      val merged = handles.iterator
-        .flatMap { case (h, _) =>
-          h.advance(kk, math.max(searchListSize, kk), rescore).take(kk) }
-        .toArray
-        .sortBy { case (rid, d) => (d, rid) }
-        .take(kk)
-      metrics.foreach { m =>
-        val now = handles.map(_._2).foldLeft((0L, 0L, 0L)) { case (acc, st) =>
-          (acc._1 + st.nodesVisited, acc._2 + st.quantizedCmps, acc._3 + st.exactCmps)
-        }
-        m.nodesVisited.add(now._1 - reported._1)
-        m.quantizedCmps.add(now._2 - reported._2)
-        m.exactCmps.add(now._3 - reported._3)
-        reported = now
-      }
-      merged.map { case (rid, d) => Row(0L, rid, d) }
+      val merged = mergeTopK(handles.iterator.flatMap { case (h, _) =>
+        h.advance(kk, math.max(searchListSize, kk), rescore).take(kk) }, kk)
+      metrics.foreach(m =>
+        handles.foreach { case (_, st) => m.add(st); st.reset() })
+      merged.map { case (rid, d) => Row(0L, rid, d) }.toArray
     }
   }
 
@@ -2059,10 +2086,7 @@ object DiskannIndex {
         case Some(f) => val keep = f.toSet; routed.filter(keep)
         case None => routed
       }
-    val model =
-      if (meta.storage == "sbq")
-        SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
+    val model = meta.sbqModel
     val searchers = needed.map { sh =>
       val key = s"$path0#$sh#${meta.shardBuildIds(sh)}"
       GraphSearcher.peek(key).orElse {
@@ -2120,9 +2144,7 @@ object DiskannIndex {
     val path = resolveRoot(spark, path0)
     val meta = loadMeta(spark, path)
     val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
+    val model = meta.sbqModel
     val report = reportDistFn(metric)
     val shardIds = meta.shardBuildIds
     val cachePath = path0
@@ -2326,9 +2348,7 @@ object DiskannIndex {
     val path = resolveRoot(spark, path0)
     val meta = loadMeta(spark, path)
     val metric = Metric(meta.metric)
-    val model =
-      if (meta.storage == "sbq") SbqModel(meta.modelCount, meta.modelMean, meta.modelM2, meta.bitsPerDim)
-      else null
+    val model = meta.sbqModel
     val report = reportDistFn(metric)
     val shardIds = meta.shardBuildIds
     val cachePath = path0

@@ -377,6 +377,7 @@ final class SearchStats extends Serializable {
   var nodesVisited: Long = 0L
   var quantizedCmps: Long = 0L
   var exactCmps: Long = 0L
+  def reset(): Unit = { nodesVisited = 0L; quantizedCmps = 0L; exactCmps = 0L }
 }
 
 object GraphSearcher {

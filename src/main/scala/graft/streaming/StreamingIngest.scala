@@ -283,7 +283,7 @@ object StreamingIngest {
     // the caller's ad-hoc set plus the durable registry: rows deleted via
     // [[DiskannIndex.deleteRows]] stay invisible here without the caller
     // having to thread the set through (scan.rs:229-235 visibility)
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
+    val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
     readDeltaSnapshot(spark, indexPath, eager = true) match {
       case Some(delta) =>
         DiskannIndex.searchWithDelta(spark, indexPath, queries, delta, k,
@@ -314,7 +314,7 @@ object StreamingIngest {
       qvec: Array[Float], k: Int, searchListSize: Int = 100,
       rescore: Int = 50, nProbe: Int = 0, qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
+    val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
     val delta = graft.index.WriteOnceFiles.deltaRows(spark, indexPath)(
       DiskannIndex.requireDeltaFits(spark, "searchPointFresh", _))
     val (main, metric) = DiskannIndex.searchPointResolved(spark, indexPath,
@@ -326,10 +326,7 @@ object StreamingIngest {
         DiskannIndex.deltaScore(rid, v, lbs, qvec, ql, tombs.contains, report)
           .map(rid -> _)
       }
-      // each row_id once at its minimum distance, then (dist, row_id)
-      (main.iterator ++ hits).toSeq
-        .groupMapReduce(_._1)(_._2)(Ordering.Double.TotalOrdering.min)
-        .toSeq.sortBy { case (rid, d) => (d, rid) }.take(k)
+      DiskannIndex.mergeTopK(main.iterator ++ hits, k)
     }
   }
 
@@ -364,7 +361,7 @@ object StreamingIngest {
       rescore: Int = 50, qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty,
       maxResults: Int = 65536): (Seq[(Long, Double)], Boolean) = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
+    val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
     val deltaSnap = readDeltaSnapshot(spark, indexPath, eager = true)
     val (mainHits, confirmed) = DiskannIndex.rangeSearchWithStatus(spark,
       indexPath, qvec, radius, searchListSize, rescore, qlabels, tombs,
@@ -381,10 +378,8 @@ object StreamingIngest {
         // truncated (rows past the cap never reached the driver), so the
         // merge below may be missing rows even if collapsing shrinks it
         // under the cap — unconfirmed, like any other cap-forced exit
-        val merged = (mainHits ++ deltaHits)
-          .groupBy(_._1).iterator
-          .map { case (rid, ds) => (rid, ds.iterator.map(_._2).min) }
-          .toSeq.sortBy { case (rid, d) => (d, rid) }
+        val merged =
+          DiskannIndex.mergeTopK((mainHits ++ deltaHits).iterator, Int.MaxValue)
         if (merged.length > maxResults || deltaHits.size > maxResults)
           (merged.take(maxResults), false)
         else (merged, true)
@@ -456,31 +451,27 @@ object StreamingIngest {
       }
       .start()
 
-  /** Distributed twin of [[searchFresh]] for offline batch query tables:
-    * main-index results come from the shard-aligned zip path, the delta is
-    * broadcast and scored map-side ([[DiskannIndex.searchDistributedFresh]])
-    * — an offline job no longer needs a `compact()` first to see appends. */
   /**
    * Freshness-aware twin of [[DiskannIndex.servePointBatch]] — read-your-
-   * writes for the EXECUTOR-resident serving pool, i.e. the cluster-mode
-   * serving node's fresh path ([[searchPointFresh]]'s driver-warm fast path
-   * does not exist there). The pool answers from the compacted
-   * generations; pending delta rows are brute-force scored against the
-   * batch in one pass over the delta files (bounded by the compaction
-   * contract) and merged driver-side under the same (dist, row_id) rule,
-   * so results are identical to a post-compaction pool query. The durable
-   * tombstone registry folds in automatically, like every fresh path.
+   * writes for batch serving. The compacted generations answer through
+   * [[DiskannIndex.servePointBatch]] (on the driver when its shards are
+   * warm there, else the executor pool); pending delta rows are
+   * brute-force scored against the batch in one pass over the delta files
+   * (bounded by the compaction contract) and merged driver-side under
+   * [[DiskannIndex.mergeTopK]], so results are identical to a
+   * post-compaction query. The durable tombstone registry folds in
+   * automatically, like every fresh path.
    */
   def servePointBatchFresh(spark: SparkSession, indexPath: String,
       queries: Seq[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
     val pool = DiskannIndex.servePointBatch(spark, indexPath, queries, k,
-      searchListSize, rescore, nProbe, tombs)
+      searchListSize, rescore, nProbe, tombstones)
     readDeltaSnapshot(spark, indexPath, eager = false) match {
       case None => pool
       case Some(delta) =>
+        val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
         val meta = DiskannIndex.loadMeta(spark, indexPath)
         val report = DiskannIndex.reportDistFn(
           graft.index.Metric(meta.metric))
@@ -490,50 +481,35 @@ object StreamingIngest {
         }.toArray
         val qBc = spark.sparkContext.broadcast(qArr)
         val tombBc = spark.sparkContext.broadcast(tombs)
-        // each row_id counts once, at its minimum distance (the
-        // searchWithDelta rule): a replayed micro-batch appends a row twice
-        // and a compact mid-flight leaves it in main and delta — neither
-        // copy may crowd a distinct neighbor out of the top k
-        def topK(hits: Iterable[(Long, Double)]): Iterable[(Long, Double)] =
-          hits.toSeq.sortBy { case (i, dd) => (dd, i) }.distinctBy(_._1).take(k)
         // distributed brute force with a PER-PARTITION bounded top-k per
-        // query: the collect is ≤ partitions × |batch| × k rows no matter
-        // how large the pending delta grows — never the delta itself
+        // query (each row_id once, at its minimum distance: a replayed
+        // micro-batch appends a row twice): the collect is ≤ partitions ×
+        // |batch| × k rows no matter how large the pending delta grows
         val deltaHits = delta.rdd.mapPartitions { it =>
-          val best = new java.util.HashMap[
-            Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]()
+          val qs = qBc.value
+          val best = qs.map(_ => new DiskannIndex.TopK(k))
           DiskannIndex.liveDeltaRows(it, hasDLabels, tombBc.value).foreach {
-            case (rid, v, lbs) =>
-              qBc.value.foreach { case (qid, qv0, ql) =>
-                DiskannIndex.deltaScore(rid, v, lbs, qv0, ql, _ => false,
-                    report).foreach { d =>
-                  val buf = best.computeIfAbsent(qid,
-                    _ => scala.collection.mutable.ArrayBuffer.empty)
-                  buf += ((rid, d))
-                  if (buf.length > 4 * k) {
-                    val kept = topK(buf)
-                    buf.clear(); buf ++= kept
-                  }
-                }
-              }
+            case (rid, v, lbs) => qs.indices.foreach { i =>
+              DiskannIndex.deltaScore(rid, v, lbs, qs(i)._2, qs(i)._3,
+                _ => false, report).foreach(d => best(i).add((rid, d)))
+            }
           }
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-          best.forEach { (qid, buf) =>
-            topK(buf).foreach { case (rid, d) => out += ((qid, rid, d)) }
-          }
-          out.iterator
+          qs.indices.iterator.flatMap(i =>
+            best(i).result.map { case (rid, d) => (qs(i)._1, rid, d) })
         }.collect()
-        (pool ++ deltaHits).groupBy(_._1).iterator.flatMap { case (qid, hits) =>
-          topK(hits.map(h => (h._2, h._3))).map { case (rid, d) => (qid, rid, d) }
-        }.toSeq.sortBy(h => (h._1, h._3, h._2))
+        DiskannIndex.mergeByQuery(pool ++ deltaHits, k)
     }
   }
 
+  /** Distributed twin of [[searchFresh]] for offline batch query tables:
+    * main-index results come from the shard-aligned zip path, the delta is
+    * broadcast and scored map-side ([[DiskannIndex.searchDistributedFresh]])
+    * — an offline job no longer needs a `compact()` first to see appends. */
   def searchFreshDistributed(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, searchListSize: Int = 100,
       rescore: Int = 50, tombstones: Set[Long] = Set.empty,
       nProbe: Int = 0): DataFrame = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
+    val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
     // same race-with-compact invariant as [[searchFresh]]; here the
     // snapshot is the eager driver collect inside searchDistributedFresh,
     // which happens before ITS main search resolves the generation
@@ -556,7 +532,7 @@ object StreamingIngest {
       queries: DataFrame, radius: Double, searchListSize: Int = 100,
       rescore: Int = 50, tombstones: Set[Long] = Set.empty,
       maxResults: Int = 65536, strict: Boolean = true): DataFrame = {
-    val tombs = tombstones ++ DiskannIndex.loadTombstones(spark, indexPath)
+    val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
     readDeltaSnapshot(spark, indexPath, eager = false) match {
       case Some(delta) =>
         DiskannIndex.rangeSearchDistributedFresh(spark, indexPath, queries,

@@ -197,20 +197,20 @@ object ServingBench {
     Console.err.println(f"[servingbench] point-API latency ms: " +
       f"p50=$pp50%.1f p95=$pp95%.1f min=${plats.head}%.1f max=${plats.last}%.1f")
 
-    // CLUSTER-MODE-faithful serving: servePointBatch never takes the
-    // driver-local all-warm shortcut — every call is a real Spark job whose
+    // CLUSTER-MODE-faithful serving: servePointBatch's executor pool,
+    // forced (`onDriver = false`) — every call is a real Spark job whose
     // per-shard tasks answer from EXECUTOR-resident searchers (warm tasks
     // read zero bytes; asserted in DiskannIndexSpec). This is the number a
-    // driver NOT colocated with the cache gets, which the LocalRelation
-    // point path above structurally cannot measure.
+    // driver NOT colocated with the cache gets, which the driver-local
+    // paths above structurally cannot measure.
     val execQ = qrows.map { case (qid, v) => (qid, v, null: Array[Short]) }
     execQ.take(4).foreach(q => // warm executor caches + codegen
-      DiskannIndex.servePointBatch(spark, path, Seq(q), k = 10,
-        searchListSize = 100, rescore = 50, nProbe = 4))
+      DiskannIndex.serveBatch(spark, path, Seq(q), k = 10, 100, 50, 4,
+        Set.empty, onDriver = false))
     val elats = execQ.map { q =>
       val t0 = System.nanoTime()
-      val hits = DiskannIndex.servePointBatch(spark, path, Seq(q), k = 10,
-        searchListSize = 100, rescore = 50, nProbe = 4)
+      val hits = DiskannIndex.serveBatch(spark, path, Seq(q), k = 10, 100,
+        50, 4, Set.empty, onDriver = false)
       require(hits.nonEmpty)
       (System.nanoTime() - t0) / 1e6
     }.sorted
@@ -223,8 +223,8 @@ object ServingBench {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, null: Array[Short]))
       .toSeq
     val (epBest, epMean) = timeReps("executor_pool_batch") {
-      DiskannIndex.servePointBatch(spark, path, allQ, k = 10,
-        searchListSize = 100, rescore = 50, nProbe = 4).length.toLong
+      DiskannIndex.serveBatch(spark, path, allQ, k = 10, 100, 50, 4,
+        Set.empty, onDriver = false).length.toLong
     }
 
     def qps(sec: Double): Double = nqActual / sec

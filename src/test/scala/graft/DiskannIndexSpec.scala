@@ -576,8 +576,11 @@ class DiskannIndexSpec extends AnyFunSuite {
     val cold = DiskannIndex.servePointBatch(spark, path, qrows, k = 7,
       searchListSize = 100, rescore = 50)
     assert(cold == viaDf, "executor-resident pool diverged from search()")
-    // warm pass: same rows, and the per-shard tasks must not consume the
+    // warm shards answer on the driver; the executor pool (forced here)
+    // returns the same rows, and its per-shard tasks must not consume the
     // lazy scan — total input bytes of the serve job is zero
+    assert(DiskannIndex.servePointBatch(spark, path, qrows, k = 7,
+      searchListSize = 100, rescore = 50) == cold)
     val bytes = new java.util.concurrent.atomic.AtomicLong
     val jobsEnded = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -590,8 +593,9 @@ class DiskannIndexSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val warm = DiskannIndex.servePointBatch(spark, path, qrows, k = 7,
-        searchListSize = 100, rescore = 50)
+      val warm = DiskannIndex.serveBatch(spark, path, qrows, k = 7,
+        searchListSize = 100, rescore = 50, nProbe = 0,
+        tombstones = Set.empty, onDriver = false)
       assert(warm == cold)
       // task-end events for a job are delivered before its job-end event;
       // poll until the serve job's events drained
@@ -713,5 +717,153 @@ class DiskannIndexSpec extends AnyFunSuite {
     val h3 = hits()
     assert(h3.nonEmpty && h3.forall(id => id >= 100L && id < 200L),
       s"post-rebuild hits leak the old generation: $h3")
+  }
+
+  /** 600 cosine rows in 4 IVF shards, labels 0-4, with 3 rows tombstoned. */
+  private def servingFixture(path: String): Unit = {
+    graft.tools.LocalFs.deleteRec(new java.io.File(path))
+    import spark.implicits._
+    val rnd = new scala.util.Random(61)
+    val rows = (0 until 600).map { i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat + (i % 4) * 2f),
+        Array((i % 5).toShort))
+    }
+    DiskannIndex.build(rows.toDF("vec_id", "embedding", "labels"), "vec_id",
+      "embedding", Some("labels"), path, DiskannParams(metric = "cosine",
+        partitioner = "ivf", ivfSeed = Some("sb61"), shardTargetRows = 150))
+    DiskannIndex.deleteRows(spark, path, Seq(3L, 40L, 333L))
+  }
+
+  test("servePointBatch: warm batches run 0 Spark jobs and equal the executor pool bit for bit") {
+    val path = "/tmp/graft_test_index/serve_driver"
+    servingFixture(path)
+    val rnd = new scala.util.Random(62)
+    // unfiltered, one label, two labels, and null vectors with and without
+    // a filter; qids not in ascending order
+    def batch(n: Int): Seq[(Long, Array[Float], Array[Short])] =
+      (0 until n).map { i =>
+        val v = if (i % 9 == 4) null
+          else Array.fill(16)(rnd.nextGaussian().toFloat + (i % 4) * 2f)
+        val l: Array[Short] = i % 3 match {
+          case 0 => null
+          case 1 => Array((i % 5).toShort)
+          case _ => Array(((i + 1) % 5).toShort, (i % 5).toShort)
+        }
+        ((n - i) * 7L, v, l)
+      }
+    // (batch, k, nProbe, ad-hoc tombstones); k = 700 exceeds the 600 rows
+    val cases = for {
+      qs <- Seq(batch(1), batch(64), batch(128))
+      k <- Seq(10, 700)
+      nProbe <- Seq(0, 1)
+      extra <- Seq(Set.empty[Long], Set(5L, 77L, 401L))
+    } yield (qs, k, nProbe, extra)
+    // the pool first: cold, it decodes every shard into this JVM's cache
+    val want = cases.map { case (qs, k, nProbe, extra) =>
+      DiskannIndex.serveBatch(spark, path, qs, k, 100, 50, nProbe, extra,
+        onDriver = false)
+    }
+    def bits(hs: Seq[(Long, Long, Double)]) =
+      hs.map(h => (h._1, h._2, java.lang.Double.doubleToLongBits(h._3)))
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        groups.add(Option(jobStart.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val (got, threaded) = try {
+      marker("serve-start")
+      val got = cases.map { case (qs, k, nProbe, extra) =>
+        DiskannIndex.servePointBatch(spark, path, qs, k, nProbe = nProbe,
+          tombstones = extra)
+      }
+      // 4 client threads at once, each over every case
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      val threaded = try {
+        (0 until 4).map(_ => pool.submit(() => cases.map {
+          case (qs, k, nProbe, extra) =>
+            DiskannIndex.servePointBatch(spark, path, qs, k, nProbe = nProbe,
+              tombstones = extra)
+        })).map(_.get())
+      } finally pool.shutdown()
+      marker("serve-end")
+      // events arrive in order: once the end marker's start has arrived,
+      // every job started before it has too
+      val deadline = System.currentTimeMillis() + 30000
+      while (System.currentTimeMillis() < deadline &&
+        !groups.contains("serve-end")) Thread.sleep(20)
+      (got, threaded)
+    } finally sc.removeSparkListener(listener)
+    val order = groups.toArray(Array.empty[String]).toSeq
+    assert(order.contains("serve-start") && order.contains("serve-end"),
+      s"marker jobs never observed: $order")
+    val between = order.dropWhile(_ != "serve-start").drop(1)
+      .takeWhile(_ != "serve-end")
+    assert(between.isEmpty, s"warm servePointBatch started ${between.length} job(s)")
+
+    val dead = Set(3L, 40L, 333L)
+    cases.indices.foreach { i =>
+      val (qs, k, nProbe, extra) = cases(i)
+      val what = s"batch=${qs.length} k=$k nProbe=$nProbe extra=$extra"
+      assert(bits(got(i)) == bits(want(i)), s"$what: driver path != pool")
+      threaded.foreach(t => assert(bits(t(i)) == bits(want(i)),
+        s"$what: a concurrent client diverged"))
+      assert(want(i).map(_._1).distinct == qs.map(_._1).sorted.distinct,
+        s"$what: every query answered, in qid order")
+      assert(!want(i).exists(h => dead(h._2) || extra(h._2)),
+        s"$what: a tombstoned row was served")
+      want(i).groupBy(_._1).values.foreach { hs =>
+        assert(hs.length <= k && hs.map(_._2).distinct.length == hs.length)
+      }
+    }
+    // k > n: an unfiltered, unrouted query returns every live row
+    val full = want(cases.indexWhere(c =>
+      c._1.length == 1 && c._2 == 700 && c._3 == 0 && c._4.isEmpty))
+    assert(full.length == 597, s"k > n returned ${full.length} of 597 rows")
+  }
+
+  test("search: a small warm batch adds the telemetry of its queries run one by one, on the calling thread") {
+    import org.apache.spark.sql.execution.metric.SQLMetric
+    val path = "/tmp/graft_test_index/serve_driver_metrics"
+    servingFixture(path)
+    import spark.implicits._
+    val rnd = new scala.util.Random(63)
+    val qs = (0 until 48).map(i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat + (i % 4) * 2f)))
+    // SQLMetric.add is not atomic: every driver-side add must come from the
+    // thread that called search, never from the batch's worker threads
+    val adders = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    def run(batch: Seq[(Long, Array[Float])]): (Long, Long, Long) = {
+      def metric(): SQLMetric = {
+        val m = new SQLMetric("sum", 0L) {
+          override def add(v: Long): Unit = {
+            adders.add(Thread.currentThread())
+            super.add(v)
+          }
+        }
+        spark.sparkContext.register(m)
+        m
+      }
+      val m = DiskannIndex.SearchMetrics(metric(), metric(), metric())
+      DiskannIndex.search(spark, path, batch.toDF("qid", "qvec"), k = 10,
+        metrics = Some(m)).collect()
+      (m.nodesVisited.value, m.quantizedCmps.value, m.exactCmps.value)
+    }
+    run(qs.take(1)) // decodes every shard: later calls are warm
+    val serial = qs.map(q => run(Seq(q))).reduce((a, b) =>
+      (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+    assert(serial._1 > 0 && serial._2 > 0 && serial._3 > 0, s"$serial")
+    adders.clear()
+    (0 until 3).foreach(_ => assert(run(qs) == serial))
+    assert(adders.size == 1 && adders.contains(Thread.currentThread()),
+      s"telemetry added from ${adders.size} threads")
   }
 }
