@@ -109,14 +109,16 @@ object VectorFunctions {
   /** Idempotent; call once per session before using the Column helpers. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
+    def absent(name: String) =
+      !reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (absent(name)) reg.createOrReplaceTempFunction(name, b, "built-in")
     }
     // aggregates go through the UDF registry (Aggregator-backed; cannot be
     // expressed as a pure Expression builder)
-    spark.udf.register("vec_sum",
+    if (absent("vec_sum")) spark.udf.register("vec_sum",
       org.apache.spark.sql.functions.udaf(new VecFixedSum(avg = false)))
-    spark.udf.register("vec_avg",
+    if (absent("vec_avg")) spark.udf.register("vec_avg",
       org.apache.spark.sql.functions.udaf(new VecFixedSum(avg = true)))
   }
 

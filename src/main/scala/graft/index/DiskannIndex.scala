@@ -232,7 +232,8 @@ object DiskannIndex {
           case Some(seed) => graft.operators.Similarity.trainIvfDeterministic(
             trainBase, "row_id", "vec", numShards, seed)
           case None => graft.operators.Similarity.trainIvf(trainBase, "vec",
-            numShards, sampleSize = math.min(numShards * 256, 1 << 16))
+            numShards, sampleSize = math.min(numShards * 256, 1 << 16),
+            rows = Some(n))
         }
       }
       else null
@@ -309,20 +310,21 @@ object DiskannIndex {
     // the analog of the reference bumping the meta page version).
     import spark.implicits._
     val genId = java.util.UUID.randomUUID().toString
+    val meta = IndexMeta(params.metric, params.storage, r, l, alpha, numShards,
+      n, hasLabels,
+      if (model != null) model.bitsPerDim else 0,
+      if (model != null) model.count else 0L,
+      if (model != null) model.mean else Array.emptyDoubleArray,
+      if (model != null) model.m2 else Array.emptyDoubleArray, dimsToIndex,
+      params.partitioner,
+      if (ivfModel != null) ivfModel.centroids else Array.empty[Array[Float]],
+      params.shardTargetRows, genId,
+      Array.fill(numShards)(genId), Array.fill(numShards)(""), shardRadii,
+      shardRowCounts, n)
     inPhase(spark, PhaseFinalizing, path) {
-      Seq(IndexMeta(params.metric, params.storage, r, l, alpha, numShards, n,
-        hasLabels,
-        if (model != null) model.bitsPerDim else 0,
-        if (model != null) model.count else 0L,
-        if (model != null) model.mean else Array.emptyDoubleArray,
-        if (model != null) model.m2 else Array.emptyDoubleArray, dimsToIndex,
-        params.partitioner,
-        if (ivfModel != null) ivfModel.centroids else Array.empty[Array[Float]],
-        params.shardTargetRows, genId,
-        Array.fill(numShards)(genId), Array.fill(numShards)(""), shardRadii,
-        shardRowCounts, n))
-        .toDF().coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
+      Seq(meta).toDF().coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
     }
+    seedMeta(spark, path, meta)
     GraphSearcher.invalidate(path)
     // a full rebuild at the same path changes numRows arbitrarily — the
     // planner's cost-gate cache must re-read it (compact/drop already do)
@@ -330,10 +332,9 @@ object DiskannIndex {
   }
 
   /** Per-shard Vamana graph build over a (row_id, vec, labels, shard)
-    * DataFrame already repartitioned by shard — the compute kernel shared by
-    * [[build]] and the incremental compaction's partial rebuild
-    * ([[rebuildShardsInto]]). A task may receive >1 shard (hash collisions
-    * across shard keys); shards group locally and build independently. */
+    * DataFrame already repartitioned by shard — the compute kernel of
+    * [[build]]. A task may receive >1 shard (hash collisions across shard
+    * keys); shards group locally and build independently ([[buildShard]]). */
   private def buildShardNodes(sharded: DataFrame, metric: Metric,
       modelBc: org.apache.spark.broadcast.Broadcast[SbqModel],
       hasLabels: Boolean, dimsToIndex: Int,
@@ -351,30 +352,40 @@ object DiskannIndex {
           ((row.getAs[Long]("row_id"), vec, lbs))
       }
       val m = modelBc.value
-      byShard.iterator.flatMap { case (shard, rowsBuf) =>
-        // deterministic insert order: ascending row_id (start-node election
-        // and tie-breaks reproducible across runs — SURVEY.md §7.3)
-        val rows = rowsBuf.sortInPlaceBy(_._1)
-        val vecs = rows.map(_._2).toArray
-        val sliced = if (dimsToIndex > 0) vecs.map(_.take(dimsToIndex)) else vecs
-        val buildVecs =
-          if (metric == Metric.Cosine) sliced.map(graft.functions.VectorKernels.normalize)
-          else sliced
-        val lbs = if (hasLabels) rows.map(t => Option(t._3).getOrElse(Array.emptyShortArray)).toArray else null
-        // SBQ build runs in Hamming space over the codes (D8/D9 parity): the
-        // graph must be navigable under the metric the serving traversal
-        // actually uses, not the full-precision one.
-        val shardCodes = if (m != null) buildVecs.map(m.quantize) else null
-        val builder = new VamanaBuilder(buildVecs, lbs, metric, r, l, alpha,
-          shardCodes).build()
-        rows.indices.iterator.map { i =>
-          Row(shard, i, rows(i)._1, vecs(i),
-            if (shardCodes != null) shardCodes(i) else null,
-            if (lbs != null) lbs(i) else null,
-            builder.neighborsOf(i))
-        }
+      byShard.iterator.flatMap { case (shard, rows) =>
+        buildShard(shard, rows, metric, m, hasLabels, dimsToIndex, r, l, alpha)
       }
     }(org.apache.spark.sql.Encoders.row(nodeSchema))
+
+  /** One shard's graph built from scratch over its (row_id, vec, labels)
+    * rows, as node rows — shared by [[build]] and the compaction's rebuilt
+    * and split shards ([[rebuildShardsInto]]). */
+  private def buildShard(shard: Int,
+      rowsBuf: mutable.ArrayBuffer[(Long, Array[Float], Array[Short])],
+      metric: Metric, m: SbqModel, hasLabels: Boolean, dimsToIndex: Int,
+      r: Int, l: Int, alpha: Double): Iterator[Row] = {
+    // deterministic insert order: ascending row_id (start-node election
+    // and tie-breaks reproducible across runs — SURVEY.md §7.3)
+    val rows = rowsBuf.sortInPlaceBy(_._1)
+    val vecs = rows.map(_._2).toArray
+    val sliced = if (dimsToIndex > 0) vecs.map(_.take(dimsToIndex)) else vecs
+    val buildVecs =
+      if (metric == Metric.Cosine) sliced.map(graft.functions.VectorKernels.normalize)
+      else sliced
+    val lbs = if (hasLabels) rows.map(t => Option(t._3).getOrElse(Array.emptyShortArray)).toArray else null
+    // SBQ build runs in Hamming space over the codes (D8/D9 parity): the
+    // graph must be navigable under the metric the serving traversal
+    // actually uses, not the full-precision one.
+    val shardCodes = if (m != null) buildVecs.map(m.quantize) else null
+    val builder = new VamanaBuilder(buildVecs, lbs, metric, r, l, alpha,
+      shardCodes).build()
+    rows.indices.iterator.map { i =>
+      Row(shard, i, rows(i)._1, vecs(i),
+        if (shardCodes != null) shardCodes(i) else null,
+        if (lbs != null) lbs(i) else null,
+        builder.neighborsOf(i))
+    }
+  }
 
   case class IndexMeta(metric: String, storage: String, numNeighbors: Int,
       searchListSize: Int, maxAlpha: Double, numShards: Int, numRows: Long,
@@ -620,500 +631,366 @@ object DiskannIndex {
 
   /**
    * Incremental compaction — the LSM-style answer to "aminsert updates the
-   * live graph in place": every delta row routes to exactly one shard
-   * (nearest frozen centroid for ivf, pmod(xxhash64(row_id)) for hash), so
-   * only shards that RECEIVE delta rows or LOSE tombstoned rows get graph
-   * work. Writes a complete new index root at `dstPath`:
+   * live graph in place", in two passes. Every delta row routes to exactly
+   * one shard by the build's own rule (nearest frozen centroid for ivf,
+   * pmod(xxhash64(row_id)) for hash), so only shards that RECEIVE delta rows
+   * or LOSE tombstoned rows get graph work. Writes a complete new index root
+   * at `dstPath`.
    *
-   *  - DELTA-ONLY shards take the LIVE-INSERT fold ([[insertFoldNodes]]):
-   *    the frozen shard graph is seeded verbatim and only the appended rows
-   *    are inserted (the reference's aminsert / Graph::insert,
-   *    build.rs:464-557, per shard) — O(inserted · search) graph work,
-   *    never O(shard);
-   *  - shards losing TOMBSTONED rows rebuild from (surviving ∪ delta) rows
-   *    (removal shifts node indices, invalidating stored edges) — always
-   *    with the FROZEN quantizer and centroids from `meta`, since
-   *    retraining would silently invalidate the codes and routing of every
-   *    untouched shard;
-   *  - every untouched shard is carried as a MANIFEST reference (shardDirs)
-   *    with its cache epoch preserved — a metadata-only commit, no copy of
-   *    the untouched corpus;
-   *  - a fresh `_meta` (updated numRows, new buildId) finalizes the root.
+   * PASS 1 (planning) runs at most two small actions, both bounded by
+   * |tombstones| + |delta|: every delta row's (row_id, shard, build-space
+   * distance to its centroid), from one read of the delta; and the main
+   * row_ids found in the broadcast tombstone ∪ delta ids, from a
+   * column-pruned scan. From these and the meta's exact `shardRows` the
+   * driver derives, with no further job: the delta rows kept (each row_id
+   * once — at-least-once replays collapse; never a tombstoned row, an
+   * append-then-delete must not resurrect; never a row main already holds,
+   * the crash-window re-fold keeps the MAIN copy), each shard's tombstone
+   * hits, post-fold size and new radius, and so which shards
    *
-   * Growth gate: an affected shard growing past
-   * `graft.compact.maxShardGrowth` (default 2.0) × shardTargetRows would
-   * eventually OOM its in-heap build (frozen centroids mean a hot-spot
-   * centroid's shard grows without bound across compactions). An IVF index
-   * answers that with a HOT-SHARD SPLIT (round 11): the one overgrown
-   * shard re-clusters its own members into ceil(total/target) fresh
-   * sub-centroids and rebuilds as that many sub-shards — O(hot shard)
-   * work, so a persistently skewed append stream keeps compaction
-   * O(ingest window) forever instead of paying an O(corpus) re-shard at
-   * every fold (`graft.compact.shardSplit=false` restores the refusal).
-   * A HASH index returns None REFUSING the partial rebuild — hash routing
-   * bakes numShards into every row's placement, so one shard cannot split;
-   * the caller answers the refusal with the FULL rebuild, which re-shards
-   * (and, for ivf, re-trains centroids).
+   *  - FOLD: a shard that only receives delta rows keeps its frozen graph
+   *    and has them inserted ([[foldShard]], the reference's aminsert /
+   *    Graph::insert, build.rs:464-557) — O(inserted · search) graph work;
+   *  - REBUILD: a shard losing tombstoned rows rebuilds from (survivors ∪
+   *    delta) in row_id order (removal shifts the node indices its edges
+   *    point at) — always with the FROZEN quantizer and centroids from
+   *    `meta`, since retraining would invalidate every untouched shard;
+   *  - SPLIT: an ivf shard growing past `graft.compact.maxShardGrowth`
+   *    (default 2.0) × shardTargetRows re-clusters its own members into
+   *    ceil(total/target) sub-centroids (sampled Lloyd over build-space
+   *    vectors) and rebuilds as that many sub-shards; sub 0 keeps the old
+   *    id, the rest take fresh ids past numShards. O(hot shard), so a
+   *    skewed append stream keeps compaction O(ingest window) instead of an
+   *    O(corpus) re-shard (`graft.compact.shardSplit=false` refuses
+   *    instead). A HASH index cannot split one shard — its routing bakes in
+   *    numShards — so an overgrown hash shard returns None and the caller
+   *    answers with the FULL rebuild;
+   *  - stay CARRIED: every untouched shard is a MANIFEST reference
+   *    (shardDirs) with its cache epoch preserved — no copy.
    *
-   * Returns (new row count, shard ids needing cache invalidation) on
+   * PASS 2 (folding) is one job: each affected shard's frozen node rows and
+   * its routed delta rows meet in one task per target shard, which drops
+   * tombstoned and non-kept rows, then folds, rebuilds or builds a split
+   * sub-shard; one `partitionBy("shard")` write covers every shard.
+   *
+   * Split shards are then re-measured (radius and rows, one pass over the
+   * written sub-shards) and gated for PROGRESS: a point mass no centroid
+   * router can subdivide leaves a sub-shard past the cap, and the split
+   * refuses (None, full rebuild) instead of minting empty shards forever.
+   * Every other shard's rows and radius come from the pass-1 arithmetic.
+   * A fresh `_meta` (new buildId) finalizes the root.
+   *
+   * Returns (shard ids needing cache invalidation, the meta written) on
    * success.
    */
   private[graft] def rebuildShardsInto(spark: SparkSession, srcRoot: String,
       meta: IndexMeta, delta: DataFrame, tombstones: Set[Long],
-      dstPath: String): Option[(Long, Seq[Int])] = {
-    import org.apache.spark.sql.functions.broadcast
+      dstPath: String): Option[(Seq[Int], IndexMeta)] = {
+    val sc = spark.sparkContext
     val metric = Metric(meta.metric)
-    val model = meta.sbqModel
-    val modelBc = spark.sparkContext.broadcast(model)
-    val dimsToIndex = meta.dimsToIndex
-    // delta rows route to exactly one shard by the SAME rule the build
-    // used: nearest frozen centroid (ivf) or pmod(xxhash64(row_id)) (hash)
-    val routeCol: org.apache.spark.sql.Column =
+    val dims = meta.dimsToIndex
+    // (shard, build-space distance to its centroid; 0 for hash shards)
+    val routed: org.apache.spark.sql.Column =
       if (meta.partitioner == "ivf") {
-        val ivfBc = spark.sparkContext.broadcast(
+        val ivfBc = sc.broadcast(
           graft.operators.Similarity.IvfModel(meta.centroids))
-        val assign = udf((v: mutable.Seq[Float]) =>
-          ivfBc.value.nearest(BuildSpace(v.toArray, dimsToIndex, metric), 1)(0))
-        assign(col("vec"))
-      } else
-        pmod(xxhash64(col("row_id")), lit(meta.numShards)).cast(IntegerType)
-    val tombDf = spark.createDataset(tombstones.toSeq)(
-      org.apache.spark.sql.Encoders.scalaLong).toDF("row_id")
-    // tombstones apply to the DELTA too: a row appended and then deleted
-    // before compaction must not be resurrected into the new generation
-    // (parity with the full-rebuild path and searchWithDelta)
-    val deltaAssigned0 = delta
-      .filter(col("vec").isNotNull)
-      .select(col("row_id").cast(LongType), col("vec"),
-        col("labels").cast(ArrayType(ShortType)).as("labels"))
-      // at-least-once ingest: a retried micro-batch appends the same row
-      // twice — collapse by row_id before any counting or graph work
-      // (shuffles only the small delta), or the duplicate bakes into the
-      // graph and can occupy multiple top-k slots
-      .dropDuplicates("row_id")
-      .transform(d => if (tombstones.isEmpty) d
-        else d.join(broadcast(tombDf), Seq("row_id"), "left_anti"))
-      .withColumn("shard", routeCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val existing = nodesDf(spark, srcRoot, meta, 0 until meta.numShards)
-      // crash-window re-fold defense: a predecessor that INSTALLED its
-      // generation but crashed before deleting the consumed delta files
-      // leaves rows in BOTH main and delta. Keep the MAIN copy — its shard
-      // then needs no graph work at all — and drop the delta copy. The
-      // probe is a column-pruned (row_id-only) scan of the nodes table
-      // against the broadcast delta ids; localCheckpoint materializes the
-      // (≤ delta-sized) hit list so downstream replays never re-scan.
-      val dupIds = existing.select(col("row_id"))
-        .join(broadcast(deltaAssigned0.select(col("row_id"))), Seq("row_id"))
-        .localCheckpoint(true)
-      val deltaAssigned =
-        if (dupIds.isEmpty) deltaAssigned0
-        else deltaAssigned0.join(broadcast(dupIds), Seq("row_id"), "left_anti")
-      // ONE small aggregate per input computes everything the bookkeeping
-      // needs: per-shard delta counts, per-shard tombstone hits, per-shard
-      // existing sizes of the affected shards
-      def countsByShard(df: DataFrame): Map[Int, Long] =
-        df.groupBy(col("shard")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val deltaByShard = countsByShard(deltaAssigned)
-      val tombByShard: Map[Int, Long] =
-        if (tombstones.isEmpty) Map.empty
-        else countsByShard(existing.join(broadcast(tombDf), Seq("row_id")))
-      val affected = (deltaByShard.keySet ++ tombByShard.keySet).toSeq.sorted
-      val deltaCount = deltaByShard.valuesIterator.sum
-      val tombCount = tombByShard.valuesIterator.sum
-      val newRows = meta.numRows - tombCount + deltaCount
+        udf((v: mutable.Seq[Float]) => {
+          val bv = BuildSpace(v.toArray, dims, metric)
+          val s = ivfBc.value.nearest(bv, 1)(0)
+          (s, math.sqrt(VectorKernels.l2sq(bv, ivfBc.value.centroids(s))))
+        }).apply(col("vec"))
+      } else struct(
+        pmod(xxhash64(col("row_id")), lit(meta.numShards)).cast(IntegerType).as("_1"),
+        lit(0.0).as("_2"))
+    val deltaRouted = delta.filter(col("vec").isNotNull)
+      .select(col("row_id").cast(LongType).as("row_id"), col("vec"),
+        col("labels").cast(ArrayType(ShortType)).as("labels"),
+        routed.as("r"))
+    val existing = nodesDf(spark, srcRoot, meta, 0 until meta.numShards)
 
-      val fs = new org.apache.hadoop.fs.Path(dstPath)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      // HOT-SHARD SPLIT plan (IVF only): a frozen-centroid hot spot that
-      // would overgrow a shard past the heap-sizing invariant no longer
-      // forces the O(corpus) full rebuild — the one hot shard SPLITS into
-      // ceil(total/target) sub-shards (local k-means over its own members),
-      // keeping the compaction O(ingest window) even under a persistently
-      // skewed append stream. Hash routing bakes numShards into every
-      // row's placement, so a hash index cannot split one shard — there
-      // the refusal (→ full re-shard) remains the only sound answer; hash
-      // shards grow uniformly anyway, so an overgrown hash shard means the
-      // WHOLE index outgrew its shard count.
-      var splitPlan: Seq[(Int, Array[Int], Array[Array[Float]])] = Seq.empty
-      var splitSubCounts: Map[Int, Long] = Map.empty
-      var numShardsOut = meta.numShards
-      if (affected.nonEmpty) {
-        val oldByShard = countsByShard(
-          existing.filter(col("shard").isin(affected.map(Integer.valueOf): _*)))
-        // growth gate: refuse (or split, ivf) before any graph work if a
-        // frozen-centroid hot spot would push a shard past the heap-sizing
-        // invariant
-        val growthCap = (spark.conf.get("graft.compact.maxShardGrowth", "2.0")
-          .toDouble * meta.shardTargetRows).toLong
-        def postFoldRows(s: Int): Long =
-          oldByShard.getOrElse(s, 0L) - tombByShard.getOrElse(s, 0L) +
-            deltaByShard.getOrElse(s, 0L)
-        val oversized = affected.filter(s => postFoldRows(s) > growthCap)
-        val splitOn = meta.partitioner == "ivf" && meta.centroids.nonEmpty &&
-          spark.conf.get("graft.compact.shardSplit", "true").toBoolean
-        if (oversized.nonEmpty && !splitOn) return None
-        val oversizedSet = oversized.toSet
-
-        // LIVE-INSERT fold (the reference's aminsert / Graph::insert,
-        // build.rs:464-557, applied per routed shard): a shard that only
-        // RECEIVES delta rows keeps its frozen graph and has the new rows
-        // inserted into it — O(inserted · search) graph work instead of an
-        // O(shard) rebuild. A shard LOSING tombstoned rows must rebuild
-        // (removal shifts the node indices its edges point at); an
-        // OVERSIZED shard splits (below) instead of folding.
-        val insertFoldOn =
-          spark.conf.get("graft.compact.insertFold", "true").toBoolean
-        val insertShards =
-          if (insertFoldOn)
-            affected.filter(s => !oversizedSet(s) &&
-              tombByShard.getOrElse(s, 0L) == 0L &&
-              deltaByShard.getOrElse(s, 0L) > 0L)
-          else Seq.empty[Int]
-        val insertSet = insertShards.toSet
-        val rebuildShards =
-          affected.filterNot(insertSet).filterNot(oversizedSet)
-
-        // the split: per oversized shard, (surviving ∪ delta) members are
-        // re-clustered into nSub fresh sub-centroids (sampled Lloyd,
-        // [[graft.operators.Similarity.trainIvf]], over BUILD-SPACE
-        // vectors — the space routing and radii live in); sub 0 keeps the
-        // old shard id, the rest take fresh ids appended past numShards.
-        // All sub-shards then rebuild through the normal shard-build
-        // kernel — O(hot shard), bounded by the growth cap, never
-        // O(corpus).
-        val splitInput: Option[DataFrame] =
-          if (oversized.isEmpty) None
-          else {
-            val oCol = oversized.map(Integer.valueOf)
-            val old = existing.filter(col("shard").isin(oCol: _*))
-              .select(col("row_id"), col("vec"), col("labels"), col("shard"))
-            val survivors =
-              if (tombstones.isEmpty) old
-              else old.join(broadcast(tombDf), Seq("row_id"), "left_anti")
-            Some(survivors
-              .unionByName(deltaAssigned.filter(col("shard").isin(oCol: _*)))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          }
-        try {
-          if (oversized.nonEmpty) {
-            val met = metric
-            val dims = dimsToIndex
-            val toBuild = udf((v: mutable.Seq[Float]) =>
-              BuildSpace(v.toArray, dims, met))
-            var nextId = meta.numShards
-            splitPlan = oversized.map { s =>
-              val nSub = math.max(2, math.ceil(
-                postFoldRows(s).toDouble / meta.shardTargetRows).toInt)
-              // sampleSize must cover nSub (trainIvf returns at most
-              // sample.length centroids); size the plan arrays from the
-              // RETURNED count, never the requested one — an extreme
-              // one-compaction pile-up that outruns the capped sample
-              // yields fewer, larger sub-shards (still gated for progress
-              // below) instead of indexing past the centroid array
-              val sub = graft.operators.Similarity.trainIvf(
-                splitInput.get.filter(col("shard") === s)
-                  .withColumn("bv", toBuild(col("vec"))), "bv", nSub,
-                sampleSize = math.max(4096, math.min(nSub * 16, 1 << 17)))
-              val cents = sub.centroids
-              val ids = Array.tabulate(cents.length)(j =>
-                if (j == 0) s else { val id = nextId; nextId += 1; id })
-              (s, ids, cents)
-            }
-            numShardsOut = nextId
-          }
-          val splitNodes: Option[DataFrame] =
-            if (splitPlan.isEmpty) None
-            else {
-              val splitBc = spark.sparkContext.broadcast(
-                splitPlan.map { case (s, ids, cents) =>
-                  s -> (ids, graft.operators.Similarity.IvfModel(cents))
-                }.toMap)
-              val met = metric
-              val dims = dimsToIndex
-              val reassign = udf((s: Int, v: mutable.Seq[Float]) => {
-                val (ids, model) = splitBc.value(s)
-                ids(model.nearest(BuildSpace(v.toArray, dims, met), 1)(0))
-              })
-              val nSubTotal = splitPlan.map(_._2.length).sum
-              val rows = splitInput.get
-                .withColumn("shard", reassign(col("shard"), col("vec")))
-                .repartition(nSubTotal, col("shard"))
-              // PROGRESS gate: a point-mass cluster (e.g. a shard of
-              // identical vectors) cannot be subdivided by ANY centroid
-              // router — every member ties to one sub-centroid, the
-              // overgrown sub persists, and re-splitting each compaction
-              // would mint empty shards forever. If the split leaves any
-              // sub-shard still past the cap, refuse (None → the caller's
-              // full rebuild) instead of spiraling. One small aggregate
-              // over the (bounded, persisted) split input.
-              val subCounts = countsByShard(rows)
-              splitSubCounts = subCounts
-              val worst = splitPlan.iterator.flatMap(_._2)
-                .map(subCounts.getOrElse(_, 0L)).max
-              if (worst > growthCap) return None
-              Some(buildShardNodes(rows, metric, modelBc, meta.hasLabels,
-                dimsToIndex, meta.numNeighbors, meta.searchListSize,
-                meta.maxAlpha))
-            }
-
-          val rebuiltNodes: Option[DataFrame] =
-            if (rebuildShards.isEmpty) None
-            else {
-              val rCol = rebuildShards.map(Integer.valueOf)
-              val oldAffected = existing.filter(col("shard").isin(rCol: _*))
-                .select(col("row_id"), col("vec"), col("labels"), col("shard"))
-              val survivors =
-                if (tombstones.isEmpty) oldAffected
-                else oldAffected.join(broadcast(tombDf), Seq("row_id"), "left_anti")
-              val rebuildRows = survivors
-                .unionByName(deltaAssigned.filter(col("shard").isin(rCol: _*)))
-                .repartition(rebuildShards.length, col("shard"))
-              Some(buildShardNodes(rebuildRows, metric, modelBc,
-                meta.hasLabels, dimsToIndex, meta.numNeighbors,
-                meta.searchListSize, meta.maxAlpha))
-            }
-          val foldedNodes: Option[DataFrame] =
-            if (insertShards.isEmpty) None
-            else Some(insertFoldNodes(spark, srcRoot, meta, insertShards,
-              deltaAssigned, metric, modelBc))
-          val nodes = (rebuiltNodes.toSeq ++ foldedNodes.toSeq ++
-            splitNodes.toSeq).reduce(_ unionByName _)
-          inPhase(spark, PhaseBuilding, dstPath) {
-            nodes.write.mode("overwrite").partitionBy("shard")
-              .parquet(s"$dstPath/nodes")
-          }
-        } finally splitInput.foreach(_.unpersist(false))
-      } else fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dstPath/nodes"))
-
-      // Untouched shards: MANIFEST entries, not copies — the new generation
-      // is a metadata-only commit for them (the Iceberg-style layout; the
-      // GC in [[StreamingIngest.compact]] keeps every referenced generation
-      // alive). Entries are chain-free: a shard untouched for many
-      // compactions still points DIRECTLY at the generation that last built
-      // it, never through intermediate manifests.
-      // `graft.compact.manifest=false` is the ops escape hatch: raw file
-      // copies into the new generation (self-contained dirs, old behavior).
-      val splitNewIds: Seq[Int] = splitPlan.flatMap(_._2.drop(1))
-      val splitIdsSet: Set[Int] = splitPlan.flatMap(_._2).toSet
-      val affectedSet = affected.toSet ++ splitNewIds
-      val untouched = (0 until meta.numShards).filterNot(affectedSet)
-      val manifestMode =
-        spark.conf.get("graft.compact.manifest", "true").toBoolean
-      val newShardDirs: Array[String] =
-        if (manifestMode)
-          (0 until numShardsOut).map { s =>
-            if (s >= meta.numShards || affectedSet(s)) ""
-            else meta.shardDirs(s) match {
-              case "" => relGenOf(srcRoot)
-              case ref => ref
-            }
-          }.toArray
-        else {
-          val conf = spark.sessionState.newHadoopConf()
-          untouched.foreach { s =>
-            val src = new org.apache.hadoop.fs.Path(
-              s"${shardGenRoot(srcRoot, meta, s)}/nodes/shard=$s")
-            if (fs.exists(src))
-              org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-                new org.apache.hadoop.fs.Path(s"$dstPath/nodes/shard=$s"),
-                false, conf)
-          }
-          Array.fill(numShardsOut)("")
-        }
-      import spark.implicits._
-      // per-shard cache epochs: fresh for rebuilt/split shards, PRESERVED
-      // for carried-forward ones — executor caches of untouched shards
-      // survive the generation change
-      val freshEpoch = java.util.UUID.randomUUID().toString
-      val newShardIds = Array.tabulate(numShardsOut) { s =>
-        if (s >= meta.numShards || affectedSet(s)) freshEpoch
-        else meta.shardBuildIds(s)
+    // ---- pass 1: planning ----
+    val deltaHits: Array[(Long, Int, Double)] =
+      deltaRouted.select(col("row_id"), col("r._1"), col("r._2")).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+    val probeIds = tombstones ++ deltaHits.iterator.map(_._1)
+    val mainHits: Array[(Long, Int)] =
+      if (probeIds.isEmpty) Array.empty
+      else {
+        val idsBc = sc.broadcast(probeIds)
+        val probed = udf((id: Long) => idsBc.value.contains(id))
+        existing.select(col("row_id"), col("shard"))
+          .filter(probed(col("row_id"))).collect()
+          .map(r => (r.getLong(0), r.getInt(1)))
       }
-      // split shards REPLACE their centroid with the sub-centroids trained
-      // over their own members; everything else keeps its frozen centroid
-      // (retraining would invalidate every untouched shard's routing)
-      val newCentroids: Array[Array[Float]] =
-        if (splitPlan.isEmpty) meta.centroids
-        else {
-          val out = java.util.Arrays.copyOf(meta.centroids, numShardsOut)
-          splitPlan.foreach { case (_, ids, cents) =>
-            ids.indices.foreach(j => out(ids(j)) = cents(j))
-          }
-          out
-        }
-      // cluster radii stay a SOUND upper bound across the fold: delta rows
-      // can only grow an (un-split) shard's radius (max with their centroid
-      // distances), tombstones only tighten the true value (the stored
-      // bound stays valid), and SPLIT shards re-measure exactly against
-      // their fresh centroids (the old bound is meaningless for a new
-      // centroid). Unknown (pre-round-10) radii stay unknown — only a full
-      // rebuild re-measures.
-      val newShardRadii: Array[Double] =
-        if (meta.partitioner != "ivf" ||
-            meta.shardRadii.length != meta.numShards ||
-            (deltaByShard.isEmpty && splitPlan.isEmpty)) meta.shardRadii
-        else {
-          val met = metric
-          val dims = dimsToIndex
-          val out = java.util.Arrays.copyOf(meta.shardRadii, numShardsOut)
-          if (deltaByShard.nonEmpty) {
-            val cBc = spark.sparkContext.broadcast(meta.centroids)
-            val deltaMax = deltaAssigned
-              .select(col("shard"), col("vec")).rdd.map { row =>
-                val s = row.getInt(0)
-                val bv = BuildSpace(
-                  row.getAs[mutable.Seq[Float]](1).toArray, dims, met)
-                (s, math.sqrt(VectorKernels.l2sq(bv, cBc.value(s))))
-              }.reduceByKey(math.max).collectAsMap()
-            (0 until meta.numShards).foreach { s =>
-              if (!splitIdsSet(s))
-                out(s) = math.max(out(s), deltaMax.getOrElse(s, 0.0))
-            }
-          }
-          if (splitIdsSet.nonEmpty) {
-            // one column-pruned pass over the just-written split shards
-            // (bounded by the hot shard's size), exactly like the build's
-            // radius measurement
-            val ncBc = spark.sparkContext.broadcast(newCentroids)
-            val measured = spark.read.schema(nodeSchema).parquet(s"$dstPath/nodes")
-              .filter(col("shard").isin(splitIdsSet.toSeq
-                .map(Integer.valueOf): _*))
-              .select(col("shard"), col("vec")).rdd.map { row =>
-                val s = row.getInt(0)
-                val bv = BuildSpace(
-                  row.getAs[mutable.Seq[Float]](1).toArray, dims, met)
-                (s, math.sqrt(VectorKernels.l2sq(bv, ncBc.value(s))))
-              }.reduceByKey(math.max).collectAsMap()
-            splitIdsSet.foreach(s => out(s) = measured.getOrElse(s, 0.0))
-          }
-          out
-        }
-      // per-shard row counts from the fold arithmetic — EXACT, no extra
-      // scan: an affected shard loses its tombstone hits and gains its
-      // (deduped) delta rows; split shards take their measured sub-counts
-      // (a sub-shard the assignment left empty is 0). A pre-round-11 meta
-      // (counts unknown) is BACKFILLED here with one group-by-partition-
-      // column count over the existing nodes — footer/metadata scale, paid
-      // once per legacy index — so legacy indexes gain the exact counts
-      // (and the empty-shard fast answer) at their first incremental
-      // compact instead of staying unknown forever.
-      val newShardRows: Array[Long] = {
-        val base: Array[Long] =
-          if (meta.shardRows.length == meta.numShards)
-            java.util.Arrays.copyOf(meta.shardRows, numShardsOut)
-          else {
-            val m = countsByShard(existing)
-            val out = new Array[Long](numShardsOut)
-            (0 until meta.numShards).foreach(s => out(s) = m.getOrElse(s, 0L))
-            out
-          }
-        (deltaByShard.keySet ++ tombByShard.keySet).foreach { s =>
-          base(s) = base(s) - tombByShard.getOrElse(s, 0L) +
-            deltaByShard.getOrElse(s, 0L)
-        }
-        splitPlan.foreach { case (_, ids, _) =>
-          ids.foreach(id => base(id) = splitSubCounts.getOrElse(id, 0L))
-        }
-        base
+    val inMain = mainHits.iterator.map(_._1).toSet
+    val tombByShard: Map[Int, Long] = mainHits.toSeq
+      .filter(h => tombstones(h._1)).groupMapReduce(_._2)(_ => 1L)(_ + _)
+    // each kept row_id once; a replay whose copies route apart keeps the
+    // copy in the lowest shard
+    val kept: Map[Long, Int] = deltaHits.toSeq
+      .filter(h => !tombstones(h._1) && !inMain(h._1))
+      .groupMapReduce(_._1)(_._2)(math.min)
+    val deltaByShard: Map[Int, Long] =
+      kept.values.toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
+    val deltaMax: Map[Int, Double] = deltaHits.toSeq
+      .filter(h => kept.get(h._1).contains(h._2))
+      .groupMapReduce(_._2)(_._3)(math.max)
+    val affected = (deltaByShard.keySet ++ tombByShard.keySet).toSeq.sorted
+    val newRows = meta.numRows - tombByShard.valuesIterator.sum +
+      deltaByShard.valuesIterator.sum
+    // exact old sizes from the meta; a pre-round-11 meta (counts unknown)
+    // is BACKFILLED with one count over the existing nodes, paid once per
+    // legacy index, so it gains the exact counts (and the empty-shard fast
+    // answer) at its first incremental compact
+    val oldRows: Array[Long] =
+      if (meta.shardRows.length == meta.numShards) meta.shardRows
+      else {
+        val m = existing.groupBy(col("shard")).count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        Array.tabulate(meta.numShards)(s => m.getOrElse(s, 0L))
       }
-      inPhase(spark, PhaseFinalizing, dstPath) {
-        Seq(meta.copy(numRows = newRows, buildId = freshEpoch,
-          numShards = numShardsOut, centroids = newCentroids,
-          shardBuildIds = newShardIds, shardDirs = newShardDirs,
-          shardRadii = newShardRadii, shardRows = newShardRows))
-          .toDF().coalesce(1).write.mode("overwrite").parquet(s"$dstPath/_meta")
+    def postFoldRows(s: Int): Long = oldRows(s) -
+      tombByShard.getOrElse(s, 0L) + deltaByShard.getOrElse(s, 0L)
+    val growthCap = (spark.conf.get("graft.compact.maxShardGrowth", "2.0")
+      .toDouble * meta.shardTargetRows).toLong
+    val oversized = affected.filter(s => postFoldRows(s) > growthCap)
+    val splitOn = meta.partitioner == "ivf" && meta.centroids.nonEmpty &&
+      spark.conf.get("graft.compact.shardSplit", "true").toBoolean
+    if (oversized.nonEmpty && !splitOn) return None
+    val foldSet: Set[Int] =
+      if (spark.conf.get("graft.compact.insertFold", "true").toBoolean)
+        affected.filter(s => !oversized.contains(s) &&
+          !tombByShard.contains(s) && deltaByShard.contains(s)).toSet
+      else Set.empty
+
+    val tombBc = sc.broadcast(tombstones)
+    val keptBc = sc.broadcast(kept)
+    val keep = udf((id: Long, s: Int) => keptBc.value.get(id).contains(s))
+    val fresh = deltaRouted.filter(keep(col("row_id"), col("r._1")))
+      .withColumn("shard", col("r._1"))
+    val live = udf((id: Long) => !tombBc.value.contains(id))
+
+    // the split's sub-centroids, trained over each oversized shard's
+    // (surviving ∪ kept delta) members in build space. sampleSize must
+    // cover nSub (trainIvf returns at most sample.length centroids): the
+    // plan is sized from the RETURNED count, so an extreme one-compaction
+    // pile-up yields fewer, larger sub-shards (still progress-gated)
+    var nextId = meta.numShards
+    val splitPlan: Seq[(Int, Array[Int], Array[Array[Float]])] =
+      oversized.map { s =>
+        val nSub = math.max(2, math.ceil(
+          postFoldRows(s).toDouble / meta.shardTargetRows).toInt)
+        val toBuild = udf((v: mutable.Seq[Float]) =>
+          BuildSpace(v.toArray, dims, metric))
+        val members = nodesDf(spark, srcRoot, meta, Seq(s))
+          .filter(live(col("row_id"))).select(col("vec"))
+          .unionByName(fresh.filter(col("shard") === s).select(col("vec")))
+        val cents = graft.operators.Similarity.trainIvf(
+          members.withColumn("bv", toBuild(col("vec"))), "bv", nSub,
+          sampleSize = math.max(4096, math.min(nSub * 16, 1 << 17)),
+          rows = Some(postFoldRows(s))).centroids
+        val ids = Array.tabulate(cents.length)(j =>
+          if (j == 0) s else { val id = nextId; nextId += 1; id })
+        (s, ids, cents)
       }
-      Some((newRows, affected ++ splitNewIds))
-    } finally deltaAssigned0.unpersist(false)
+    val numShardsOut = nextId
+    val splitIds: Seq[Int] = splitPlan.flatMap(_._2)
+    val splitNewIds: Seq[Int] = splitPlan.flatMap(_._2.drop(1))
+
+    // ---- pass 2: one fold job over every affected shard ----
+    val fs = fileSystem(spark, new org.apache.hadoop.fs.Path(dstPath))
+    if (affected.nonEmpty) {
+      val old = nodesDf(spark, srcRoot, meta, affected)
+        .select(col("shard"), col("node"), col("row_id"), col("vec"),
+          col("code"), col("labels").cast(ArrayType(ShortType)).as("labels"),
+          col("neighbors"))
+      // appended rows carry node = -1 until their task assigns indices
+      val added = fresh.select(col("shard"), lit(-1).as("node"),
+        col("row_id"), col("vec"), lit(null).cast(ArrayType(LongType)).as("code"),
+        col("labels"), lit(null).cast(ArrayType(IntegerType)).as("neighbors"))
+      val splitBc = sc.broadcast(splitPlan.map { case (s, ids, cents) =>
+        s -> (ids, graft.operators.Similarity.IvfModel(cents))
+      }.toMap)
+      val targets = (affected.filterNot(oversized.contains) ++ splitIds).sorted
+      val slot = targets.zipWithIndex.toMap
+      val model = meta.sbqModel
+      val hasLabels = meta.hasLabels
+      val (r, l, alpha) = (meta.numNeighbors, meta.searchListSize, meta.maxAlpha)
+      // rows cross the shuffle as primitive arrays, not boxed Row values
+      val nodes = old.unionByName(added).rdd.flatMap { row =>
+        val (s, node, id) = (row.getInt(0), row.getInt(1), row.getLong(2))
+        def arr[T: scala.reflect.ClassTag](i: Int): Array[T] =
+          Option(row.getAs[mutable.Seq[T]](i)).map(_.toArray).orNull
+        if (node >= 0 && tombBc.value.contains(id)) None
+        else {
+          val vec = arr[Float](3)
+          val target = splitBc.value.get(s).fold(s) { case (ids, m) =>
+            ids(m.nearest(BuildSpace(vec, dims, metric), 1)(0))
+          }
+          Some(target -> ((node, id, vec, arr[Long](4),
+            LabelSets.normalize(arr[Short](5)), arr[Int](6))))
+        }
+      }.partitionBy(new org.apache.spark.Partitioner {
+        override def numPartitions: Int = targets.length
+        override def getPartition(key: Any): Int = slot(key.asInstanceOf[Int])
+      }).mapPartitions { it =>
+        it.toSeq.groupBy(_._1).iterator.flatMap { case (shard, rows) =>
+          val (oldRows, newRows) = rows.map(_._2).partition(_._1 >= 0)
+          // each appended row_id once, in row_id order like the build
+          val appended = newRows.distinctBy(_._2).sortBy(_._2)
+          if (foldSet(shard))
+            foldShard(shard, oldRows.sortBy(_._1).toArray, appended.toArray,
+              metric, model, hasLabels, dims, r, l, alpha)
+          else buildShard(shard, (oldRows ++ appended).map(n => (n._2, n._3, n._5))
+            .to(mutable.ArrayBuffer), metric, model, hasLabels, dims, r, l, alpha)
+        }
+      }
+      inPhase(spark, PhaseBuilding, dstPath) {
+        spark.createDataFrame(nodes, nodeSchema).write.mode("overwrite")
+          .partitionBy("shard").parquet(s"$dstPath/nodes")
+      }
+    } else fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dstPath/nodes"))
+
+    // split shards REPLACE their centroid with the sub-centroids trained
+    // over their own members; everything else keeps its frozen centroid
+    // (retraining would invalidate every untouched shard's routing)
+    val newCentroids: Array[Array[Float]] =
+      if (splitPlan.isEmpty) meta.centroids
+      else {
+        val out = java.util.Arrays.copyOf(meta.centroids, numShardsOut)
+        splitPlan.foreach { case (_, ids, cents) =>
+          ids.indices.foreach(j => out(ids(j)) = cents(j))
+        }
+        out
+      }
+    // the split sub-shards' exact (radius, rows): one column-pruned pass
+    // over the just-written sub-shards, bounded by the hot shard's size
+    val measured: Map[Int, (Double, Long)] =
+      if (splitIds.isEmpty) Map.empty
+      else {
+        val ncBc = sc.broadcast(newCentroids)
+        spark.read.schema(nodeSchema).parquet(s"$dstPath/nodes")
+          .filter(col("shard").isin(splitIds.map(Integer.valueOf): _*))
+          .select(col("shard"), col("vec")).rdd.map { row =>
+            val s = row.getInt(0)
+            val bv = BuildSpace(row.getAs[mutable.Seq[Float]](1).toArray,
+              dims, metric)
+            (s, (math.sqrt(VectorKernels.l2sq(bv, ncBc.value(s))), 1L))
+          }.reduceByKey((a, b) => (math.max(a._1, b._1), a._2 + b._2))
+          .collectAsMap().toMap
+      }
+    // PROGRESS gate: a split leaving any sub-shard past the cap refuses
+    if (splitIds.exists(s => measured.get(s).fold(0L)(_._2) > growthCap))
+      return None
+
+    // Untouched shards: MANIFEST entries, not copies — the new generation
+    // is a metadata-only commit for them (the Iceberg-style layout; the
+    // GC in [[StreamingIngest.compact]] keeps every referenced generation
+    // alive). Entries are chain-free: a shard untouched for many
+    // compactions still points DIRECTLY at the generation that last built
+    // it, never through intermediate manifests.
+    // `graft.compact.manifest=false` is the ops escape hatch: raw file
+    // copies into the new generation (self-contained dirs, old behavior).
+    val affectedSet = affected.toSet ++ splitNewIds
+    val newShardDirs: Array[String] =
+      if (spark.conf.get("graft.compact.manifest", "true").toBoolean)
+        (0 until numShardsOut).map { s =>
+          if (s >= meta.numShards || affectedSet(s)) ""
+          else meta.shardDirs(s) match {
+            case "" => relGenOf(srcRoot)
+            case ref => ref
+          }
+        }.toArray
+      else {
+        val conf = spark.sessionState.newHadoopConf()
+        (0 until meta.numShards).filterNot(affectedSet).foreach { s =>
+          val src = new org.apache.hadoop.fs.Path(
+            s"${shardGenRoot(srcRoot, meta, s)}/nodes/shard=$s")
+          if (fs.exists(src))
+            org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+              new org.apache.hadoop.fs.Path(s"$dstPath/nodes/shard=$s"),
+              false, conf)
+        }
+        Array.fill(numShardsOut)("")
+      }
+    // per-shard cache epochs: fresh for rebuilt/split shards, PRESERVED
+    // for carried-forward ones — executor caches of untouched shards
+    // survive the generation change
+    val freshEpoch = java.util.UUID.randomUUID().toString
+    val newShardIds = Array.tabulate(numShardsOut) { s =>
+      if (s >= meta.numShards || affectedSet(s)) freshEpoch
+      else meta.shardBuildIds(s)
+    }
+    // cluster radii stay a SOUND upper bound across the fold: delta rows
+    // can only grow an (un-split) shard's radius, tombstones only tighten
+    // the true value (the stored bound stays valid), and SPLIT shards take
+    // their measured radius against their fresh centroids. Unknown
+    // (pre-round-10) radii stay unknown — only a full rebuild re-measures.
+    val newShardRadii: Array[Double] =
+      if (meta.partitioner != "ivf" ||
+          meta.shardRadii.length != meta.numShards) meta.shardRadii
+      else {
+        val out = java.util.Arrays.copyOf(meta.shardRadii, numShardsOut)
+        deltaMax.foreach { case (s, d) => out(s) = math.max(out(s), d) }
+        splitIds.foreach(s => out(s) = measured.get(s).fold(0.0)(_._1))
+        out
+      }
+    // per-shard row counts: EXACT, from the fold arithmetic and, for split
+    // shards, the measured sub-counts (a sub-shard left empty is 0)
+    val newShardRows: Array[Long] = {
+      val out = java.util.Arrays.copyOf(oldRows, numShardsOut)
+      affected.foreach(s => out(s) = postFoldRows(s))
+      splitIds.foreach(s => out(s) = measured.get(s).fold(0L)(_._2))
+      out
+    }
+    val written = meta.copy(numRows = newRows, buildId = freshEpoch,
+      numShards = numShardsOut, centroids = newCentroids,
+      shardBuildIds = newShardIds, shardDirs = newShardDirs,
+      shardRadii = newShardRadii, shardRows = newShardRows)
+    import spark.implicits._
+    inPhase(spark, PhaseFinalizing, dstPath) {
+      Seq(written).toDF().coalesce(1).write.mode("overwrite")
+        .parquet(s"$dstPath/_meta")
+    }
+    Some((affected ++ splitNewIds, written))
   }
 
+  /** A node row in the compaction's fold job: (node, row_id, vec, code,
+    * normalized labels, neighbors); node -1, code and neighbors null for an
+    * appended row. */
+  private type FoldNode =
+    (Int, Long, Array[Float], Array[Long], Array[Short], Array[Int])
+
   /**
-   * Per-shard LIVE-INSERT fold: each task receives one shard's FROZEN node
-   * rows plus the delta rows routed to it, seeds a [[VamanaBuilder]] with
-   * the stored adjacency ([[VamanaBuilder.seedFrozen]]) and inserts only
-   * the new rows through the normal build-insert path — the reference's
+   * One shard's LIVE-INSERT fold: the shard's FROZEN nodes (in node order)
+   * seed a [[VamanaBuilder]] with the stored adjacency
+   * ([[VamanaBuilder.seedFrozen]]) and only the `appended` rows (row_id
+   * order) go through the normal build-insert path — the reference's
    * `aminsert` semantics (build.rs:464-557) re-expressed per shard. Old
    * nodes keep their indices (appended rows take the next ones), so stored
    * edges stay valid and only lists a back-edge actually touches are
    * rewritten with fresh distances. Graph work is O(inserted · search);
    * the shard is re-written (IO) but never re-BUILT (compute).
    */
-  private def insertFoldNodes(spark: SparkSession, srcRoot: String,
-      meta: IndexMeta, shards: Seq[Int], deltaAssigned: DataFrame,
-      metric: Metric,
-      modelBc: org.apache.spark.broadcast.Broadcast[SbqModel]): DataFrame = {
-    val dimsToIndex = meta.dimsToIndex
-    val hasLabels = meta.hasLabels
-    val r = meta.numNeighbors
-    val l = meta.searchListSize
-    val alpha = meta.maxAlpha
-    val sCol = shards.map(Integer.valueOf)
-    val oldRowsDf = nodesDf(spark, srcRoot, meta, shards)
-      .select(col("shard"), col("node"), col("row_id"), col("vec"),
-        col("code"), col("labels").cast(ArrayType(ShortType)).as("labels"),
-        col("neighbors"))
-    // appended rows carry node = -1 until the task assigns the next indices
-    val freshRowsDf = deltaAssigned.filter(col("shard").isin(sCol: _*))
-      .select(col("shard"), lit(-1).as("node"), col("row_id"), col("vec"),
-        lit(null).cast(ArrayType(LongType)).as("code"),
-        col("labels").cast(ArrayType(ShortType)).as("labels"),
-        lit(null).cast(ArrayType(IntegerType)).as("neighbors"))
-    oldRowsDf.unionByName(freshRowsDf)
-      .repartition(shards.length, col("shard"))
-      .mapPartitions { it =>
-        val m = modelBc.value
-        val byShard = mutable.Map.empty[Int, mutable.ArrayBuffer[Row]]
-        it.foreach { row =>
-          byShard.getOrElseUpdate(row.getAs[Int]("shard"),
-            new mutable.ArrayBuffer) += row
-        }
-        byShard.iterator.flatMap { case (shard, rows) =>
-          val (oldRows, newRows0) = rows.partition(_.getAs[Int]("node") >= 0)
-          val sortedOld = oldRows.sortBy(_.getAs[Int]("node")).toArray
-          // deterministic append order: ascending row_id, like the build
-          val sortedNew = newRows0.sortBy(_.getAs[Long]("row_id")).toArray
-          val nOld = sortedOld.length
-          val nAll = nOld + sortedNew.length
-          val rowIds = new Array[Long](nAll)
-          val rawVecs = new Array[Array[Float]](nAll)
-          val codes = if (m != null) new Array[Array[Long]](nAll) else null
-          val lbs = if (hasLabels) new Array[Array[Short]](nAll) else null
-          val adj = new Array[Array[Int]](nOld)
-          val buildVecs = new Array[Array[Float]](nAll)
-          var i = 0
-          while (i < nAll) {
-            val row = if (i < nOld) sortedOld(i) else sortedNew(i - nOld)
-            require(i >= nOld || row.getAs[Int]("node") == i,
-              s"insert fold: shard $shard arrived with non-contiguous nodes")
-            rowIds(i) = row.getAs[Long]("row_id")
-            rawVecs(i) = row.getAs[mutable.Seq[Float]]("vec").toArray
-            buildVecs(i) = BuildSpace(rawVecs(i), dimsToIndex, metric)
-            if (codes != null)
-              codes(i) =
-                if (i < nOld) row.getAs[mutable.Seq[Long]]("code").toArray
-                else m.quantize(buildVecs(i))
-            if (lbs != null)
-              lbs(i) = Option(row.getAs[mutable.Seq[Short]]("labels"))
-                .map(s => LabelSets.normalize(s.toArray))
-                .getOrElse(Array.emptyShortArray)
-            if (i < nOld)
-              adj(i) = row.getAs[mutable.Seq[Int]]("neighbors").toArray
-            i += 1
-          }
-          val builder = new VamanaBuilder(buildVecs, lbs, metric, r, l,
-            alpha, codes)
-          builder.seedFrozen(adj).buildAppended()
-          (0 until nAll).iterator.map { j =>
-            Row(shard, j, rowIds(j), rawVecs(j),
-              if (codes != null) codes(j) else null,
-              if (lbs != null) lbs(j) else null,
-              builder.neighborsOf(j))
-          }
-        }
-      }(org.apache.spark.sql.Encoders.row(nodeSchema))
+  private def foldShard(shard: Int, old: Array[FoldNode],
+      appended: Array[FoldNode], metric: Metric, m: SbqModel,
+      hasLabels: Boolean, dimsToIndex: Int, r: Int, l: Int,
+      alpha: Double): Iterator[Row] = {
+    old.indices.foreach(i => require(old(i)._1 == i,
+      s"insert fold: shard $shard arrived with non-contiguous nodes"))
+    val all = old ++ appended
+    val buildVecs = all.map(n => BuildSpace(n._3, dimsToIndex, metric))
+    val codes = if (m == null) null else Array.tabulate(all.length)(i =>
+      if (i < old.length) all(i)._4 else m.quantize(buildVecs(i)))
+    val lbs = if (hasLabels) all.map(_._5) else null
+    val builder = new VamanaBuilder(buildVecs, lbs, metric, r, l, alpha, codes)
+    builder.seedFrozen(old.map(_._6)).buildAppended()
+    all.indices.iterator.map { j =>
+      Row(shard, j, all(j)._2, all(j)._3,
+        if (codes != null) codes(j) else null,
+        if (lbs != null) lbs(j) else null,
+        builder.neighborsOf(j))
+    }
   }
 
   /**
@@ -1238,7 +1115,15 @@ object DiskannIndex {
     meta
   }
 
-  private def readMetaAt(spark: SparkSession, path: String): IndexMeta = {
+  /** Memoize `meta`, which the caller just wrote (and, for a generation,
+    * installed) at `path`, under a listing of `_meta` made now: the next
+    * [[loadMetaAt]] starts no Spark job. A writer that changes the files
+    * afterwards changes the fingerprint, so the memo never outlives them. */
+  private[graft] def seedMeta(spark: SparkSession, path: String,
+      meta: IndexMeta): Unit =
+    metaCache.put(path, (metaFingerprint(spark, path), meta))
+
+  private[graft] def readMetaAt(spark: SparkSession, path: String): IndexMeta = {
     import spark.implicits._
     // tolerate metas from earlier format generations (the analog of the
     // reference's V1/V2→V3 meta-page upgrade path, meta_page.rs:296-424):
@@ -1684,6 +1569,31 @@ object DiskannIndex {
   private def shardKey(path0: String, meta: IndexMeta, shard: Int): String =
     s"$path0#$shard#${meta.shardBuildIds(shard)}"
 
+  /** Shard `sh`'s searcher when it is warm in this JVM, or None.
+    *
+    * An EMPTY shard (a tombstone wipe rebuilt it to zero rows, or a
+    * degenerate split sub-cluster) never flows through the scan paths that
+    * build searchers, so without this it would be cold forever: every warm
+    * point or batch call would fall back to a Spark job, and the resumable
+    * scan would never open. Its empty searcher is synthesized here instead.
+    * Emptiness is decided from the META's exact per-shard row counts, never
+    * the filesystem: a GC racing this call can legitimately remove a
+    * superseded shard dir (even inside a generation whose _meta survives),
+    * and an FS probe would call that "empty" and silently truncate results.
+    * shardRows is immutable per generation; unknown (pre-round-11) metas
+    * never synthesize and stay on the cold path. */
+  private def warmSearcher(path0: String, root: String, meta: IndexMeta,
+      sh: Int): Option[GraphSearcher] = {
+    val key = shardKey(path0, meta, sh)
+    GraphSearcher.peek(key).orElse {
+      if (meta.shardRows.length == meta.numShards && meta.shardRows(sh) == 0L)
+        Some(GraphSearcher.getOrBuild(key, () => buildShardSearcher(root, sh,
+          Array.empty, Metric(meta.metric), meta.sbqModel, meta.hasLabels,
+          meta.dimsToIndex)))
+      else None
+    }
+  }
+
   /** Answer queries on one shard's decoded searcher: per query whose IVF
     * probe set includes the shard, the shard's k best (qid, row_id, dist).
     * `stats`, when non-null, accumulates the scan telemetry. */
@@ -1749,7 +1659,7 @@ object DiskannIndex {
       searchListSize: Int, rescore: Int, tombstones: Set[Long],
       metrics: Option[SearchMetrics] = None): Option[Seq[(Long, Long, Double)]] = {
     val warm = plan.neededShards.flatMap(sh =>
-      GraphSearcher.peek(shardKey(path0, plan.meta, sh)).map(sh -> _))
+      warmSearcher(path0, plan.root, plan.meta, sh).map(sh -> _))
     if (qRows.length > MaxWarmBatch || warm.length < plan.neededShards.length)
       None
     else Some(searchOnDriver(warm, plan, qRows, k, searchListSize, rescore,
@@ -1816,7 +1726,7 @@ object DiskannIndex {
     val warmPairs: Seq[(Int, GraphSearcher)] =
       if (qRows.length <= MaxWarmBatch)
         neededShards.flatMap(sh =>
-          GraphSearcher.peek(shardKey(path0, meta, sh)).map(sh -> _))
+          warmSearcher(path0, path, meta, sh).map(sh -> _))
       else Seq.empty
     val warmSet = warmPairs.map(_._1).toSet
     val coldShards = neededShards.filterNot(warmSet)
@@ -2086,30 +1996,7 @@ object DiskannIndex {
         case Some(f) => val keep = f.toSet; routed.filter(keep)
         case None => routed
       }
-    val model = meta.sbqModel
-    val searchers = needed.map { sh =>
-      val key = s"$path0#$sh#${meta.shardBuildIds(sh)}"
-      GraphSearcher.peek(key).orElse {
-        // an EMPTY shard (a tombstone wipe rebuilt it to zero rows, or a
-        // degenerate split sub-cluster) never flows through the scan paths
-        // that build searchers, so it would block this open FOREVER — the
-        // whole index's resumable serving wedged by one rowless shard.
-        // Emptiness is decided from the META's exact per-shard row counts,
-        // never the filesystem: a GC racing this open can legitimately
-        // remove a superseded shard dir (even inside a generation whose
-        // _meta survives), and an FS probe would call that "empty" and
-        // silently truncate results. shardRows is immutable per
-        // generation; unknown (pre-round-11) metas never synthesize and
-        // stay on the loud cold path. A merely COLD (non-empty) shard
-        // returns None and the caller pays the normal warming search once.
-        if (meta.shardRows.length == meta.numShards &&
-            meta.shardRows(sh) == 0L)
-          Some(GraphSearcher.getOrBuild(key,
-            () => buildShardSearcher(path, sh, Array.empty, metric, model,
-              meta.hasLabels, meta.dimsToIndex)))
-        else None
-      }
-    }
+    val searchers = needed.map(sh => warmSearcher(path0, path, meta, sh))
     if (searchers.exists(_.isEmpty)) None
     else {
       val report = reportDistFn(metric)

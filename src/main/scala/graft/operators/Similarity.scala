@@ -132,12 +132,14 @@ object Similarity {
   }
 
   /** Driver-side Lloyd iterations on a bounded sample (the centroid set is
-    * tiny and broadcast; the full data is never collected). */
+    * tiny and broadcast; the full data is never collected). `rows`, when
+    * the caller already knows `df`'s row count, spares the count job. */
   def trainIvf(df: DataFrame, vecCol: String, nCentroids: Int,
-      sampleSize: Int = 4096, iters: Int = 8, seed: Long = 42L): IvfModel = {
+      sampleSize: Int = 4096, iters: Int = 8, seed: Long = 42L,
+      rows: Option[Long] = None): IvfModel = {
     val spark = df.sparkSession
     import spark.implicits._
-    val total = df.count()
+    val total = rows.getOrElse(df.count())
     val fraction = math.min(1.0, sampleSize.toDouble * 1.2 / math.max(total, 1L))
     val sample = df.select(col(vecCol)).sample(withReplacement = false, fraction, seed)
       .as[Array[Float]].collect().take(sampleSize)

@@ -884,10 +884,13 @@ object TextAnalysis {
       es.lift(1).map(_.eval(null).asInstanceOf[Int]).getOrElse(2))),
   )
 
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
+  }
 
   private[graft] def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     builders.foreach { case (name, b) =>

@@ -705,6 +705,14 @@ object StreamingIngest {
     }
   }
 
+  /** The columns compaction reads from delta files. */
+  private val DeltaSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("row_id", LongType),
+      StructField("vec", ArrayType(FloatType)),
+      StructField("labels", ArrayType(ShortType))))
+  }
+
   private def compactLeased(spark: SparkSession, indexPath: String,
       tune: DiskannParams => DiskannParams, tombstones: Set[Long],
       force: Boolean, verifyLease: () => Unit): Unit = {
@@ -725,12 +733,14 @@ object StreamingIngest {
       val existing = DiskannIndex
         .nodesDf(spark, root, meta, 0 until meta.numShards)
         .select(col("row_id"), col("vec"), col("labels"))
+      // the delta's declared schema: no schema-inference job, and a file
+      // without a labels column reads it as null
       val delta = if (consumed.isEmpty) existing.limit(0)
-      else spark.read.parquet(consumed.map(_.toString).toIndexedSeq: _*)
+      else spark.read.schema(DeltaSchema)
+        .parquet(consumed.map(_.toString).toIndexedSeq: _*)
         .select(col("row_id"), col("vec"),
           (if (meta.hasLabels) col("labels") else lit(null)
-            .cast(org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.ShortType))).as("labels"))
+            .cast(DeltaSchema("labels").dataType)).as("labels"))
       val vdir = new org.apache.hadoop.fs.Path(s"$indexPath/versions")
       fs.mkdirs(vdir)
       val prior = fs.listStatus(vdir).map(_.getPath.getName)
@@ -760,7 +770,7 @@ object StreamingIngest {
       // O(ingest window) under skew) and may still REFUSE (None) for hash
       // indexes, whose routing cannot split one shard — fall through to
       // the full rebuild, which re-shards and restores the sizing invariant
-      val partial: Option[(Long, Seq[Int])] =
+      val partial: Option[(Seq[Int], DiskannIndex.IndexMeta)] =
         if (incremental)
           DiskannIndex.rebuildShardsInto(spark, root, meta, delta, allTombs,
             tmp.toString)
@@ -792,6 +802,9 @@ object StreamingIngest {
           if (meta.hasLabels) Some("labels") else None, tmp.toString, params)
         all.unpersist()
       }
+      // the meta just written (the build memoized it under tmp)
+      val written = partial.map(_._2)
+        .getOrElse(DiskannIndex.loadMetaAt(spark, tmp.toString))
       val dst = new org.apache.hadoop.fs.Path(vdir, f"v$next%09d")
       // last-moment lease re-check before the irreversible generation swap:
       // if another writer stole our lease as stale mid-rebuild, abort here
@@ -802,6 +815,11 @@ object StreamingIngest {
         fs.delete(tmp, true)
         throw new java.io.IOException(s"compact: could not install $dst")
       }
+      // the root string resolveRoot returns for the new generation; its
+      // meta memo is seeded from a listing made after the rename, so the
+      // GC below and the next read start no Spark job
+      val installed = f"$indexPath/versions/v$next%09d"
+      DiskannIndex.seedMeta(spark, installed, written)
       // drop exactly the consumed delta files; concurrent appends survive.
       // NEVER recursively delete the delta/tombstones DIRS, even when the
       // post-consume listing says empty: appendBatchToDelta and deleteRows
@@ -820,11 +838,11 @@ object StreamingIngest {
       // generations nothing points at — goes. Shard-dir granularity is what
       // keeps a hot-spot workload from accumulating dead rebuilt-shard
       // copies inside still-referenced old generations.
-      gcGenerations(spark, fs, indexPath, dst.toString,
+      gcGenerations(spark, fs, indexPath, installed,
         prior.lastOption.map(v => s"$indexPath/versions/$v")
           .getOrElse(indexPath))
       partial match {
-        case Some((_, affectedShards)) =>
+        case Some((affectedShards, _)) =>
           // targeted eviction: untouched shards keep their (still-valid,
           // epoch-matched) decoded graphs warm in this JVM too
           affectedShards.foreach(s =>

@@ -1638,6 +1638,170 @@ class StreamingSpec extends AnyFunSuite {
     assert(StreamingIngest.searchPointFresh(spark, path, v, k = 5).head._1 == 450L)
   }
 
+  /** `f`'s result and the number of Spark jobs started while it ran: the
+    * jobs whose ids fall between a marker job before it and one after it,
+    * so jobs that set their own job group (build phases) count too. */
+  private def jobsBetweenMarkers[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val tag = s"marker-${System.nanoTime()}"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add((e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")))
+    }
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    def idOf(group: String): Option[Int] = starts.asScala.find(_._2 == group).map(_._1)
+    sc.addSparkListener(listener)
+    try {
+      marker(s"$tag-start")
+      val out = f
+      marker(s"$tag-end")
+      val deadline = System.currentTimeMillis() + 30000
+      while (System.currentTimeMillis() < deadline && idOf(s"$tag-end").isEmpty)
+        Thread.sleep(20)
+      val (a, b) = (idOf(s"$tag-start").get, idOf(s"$tag-end").get)
+      (out, starts.asScala.count(j => j._1 > a && j._1 < b))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every field of `m`, arrays compared by content. */
+  private def metaFields(m: DiskannIndex.IndexMeta): Seq[Any] =
+    m.productIterator.map {
+      case a: Array[_] => a.toSeq.map {
+        case b: Array[_] => b.toSeq
+        case x => x
+      }
+      case x => x
+    }.toSeq
+
+  /** `loadMeta(path)` starts no Spark job and equals a fresh read of the
+    * active generation's `_meta`. */
+  private def assertMetaMemoized(path: String, what: String): Unit = {
+    val (m, jobs) = countingJobs(DiskannIndex.loadMeta(spark, path))
+    assert(jobs == 0, s"$what: loadMeta started $jobs job(s)")
+    val fresh = DiskannIndex.readMetaAt(spark, DiskannIndex.resolveRoot(spark, path))
+    assert(metaFields(m) == metaFields(fresh), s"$what: memoized meta differs from _meta")
+  }
+
+  test("incremental compaction pins: fold, rebuild, split, replayed and duplicate rows in one compaction") {
+    val path = "/tmp/graft_test_index/compact_pins"
+    val rows = labeledPointIndex(path)
+    assertMetaMemoized(path, "after build")
+    val meta0 = DiskannIndex.loadMeta(spark, path)
+    assert(meta0.numShards == 4 && meta0.shardRows.length == 4)
+    val metric = graft.index.Metric(meta0.metric)
+    val ivf = graft.operators.Similarity.IvfModel(meta0.centroids)
+    def route(v: Array[Float]): Int =
+      ivf.nearest(graft.index.BuildSpace(v, meta0.dimsToIndex, metric), 1)(0)
+    val members = (0L until 400L).groupBy(id => route(rows(id)._1))
+    (0 until 4).foreach(s => assert(members(s).size == meta0.shardRows(s)))
+    // the largest shard splits; the others fold, rebuild and stay carried
+    val splitS = (0 until 4).maxBy(s => (meta0.shardRows(s), -s))
+    val Seq(foldS, tombS, carriedS) = (0 until 4).filterNot(_ == splitS)
+    val rnd = new scala.util.Random(29)
+    var nextId = 1000L
+    // n fresh rows near members of shard s that route to s
+    def near(s: Int, n: Int): Seq[(Long, Array[Float], Array[Short])] = {
+      val ms = members(s).toIndexedSeq
+      Iterator.continually {
+        val (v, l) = rows(ms(rnd.nextInt(ms.length)))
+        (v.map(x => (x + 0.1 * rnd.nextGaussian()).toFloat), l)
+      }.filter(t => route(t._1) == s).take(n).toVector.map { case (v, l) =>
+        nextId += 1; (nextId, v, Array(l))
+      }
+    }
+    val folded = near(foldS, 12)
+    // a main row appended again: the crash-window main∩delta duplicate
+    val dup = members(foldS).head
+    val foldBatch = folded :+ ((dup, rows(dup)._1, Array(rows(dup)._2)))
+    val rebuilt = near(tombS, 6)
+    val split = near(splitS, math.max(10, 221 - members(splitS).size))
+    // a replayed batch, then one batch holding a null-vector row
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(foldBatch), 0L)
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(foldBatch), 1L)
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(rebuilt ++ split :+
+      ((9999L, null, Array(1.toShort)))), 2L)
+    // eight main rows and one appended row of the rebuilt shard deleted
+    val dead = members(tombS).take(8) :+ rebuilt.head._1
+    DiskannIndex.deleteRows(spark, path, dead)
+
+    val (_, jobs) = jobsBetweenMarkers(StreamingIngest.compact(spark, path))
+    val root1 = DiskannIndex.resolveRoot(spark, path)
+    val meta1 = DiskannIndex.loadMeta(spark, path)
+    assert(meta1.numShards > 4, "the largest shard did not split")
+    assert(meta1.numRows ==
+      400 + folded.size + rebuilt.size - 1 + split.size - 8)
+    assert(meta1.shardRows.sum == meta1.numRows)
+    assert(meta1.shardDirs(carriedS) == "." &&
+      meta1.shardBuildIds(carriedS) == meta0.shardBuildIds(carriedS) &&
+      meta1.shardRows(carriedS) == meta0.shardRows(carriedS) &&
+      meta1.shardRadii(carriedS) == meta0.shardRadii(carriedS))
+    Seq(foldS, tombS, splitS).foreach { s =>
+      assert(meta1.shardDirs(s) == "" &&
+        meta1.shardBuildIds(s) != meta0.shardBuildIds(s), s"shard $s")
+    }
+    // the fold and rebuild shards' nodes, rows and radii, pinned to what the
+    // one-job-per-step compaction wrote before the two-pass one: the fold
+    // and the rebuild must stay bit-identical
+    def checksum(s: Int): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      DiskannIndex.nodesDf(spark, root1, meta1, Seq(s))
+        .select($"node", $"row_id", $"code", $"labels", $"neighbors")
+        .collect().sortBy(_.getInt(0))
+        .foreach(r => md.update(r.toString.getBytes("UTF-8")))
+      md.digest().take(8).map(b => f"$b%02x").mkString
+    }
+    val pins = Seq(foldS, tombS).map { s =>
+      s"${checksum(s)} ${meta1.shardRows(s)} ${meta1.shardRadii(s)}"
+    }.mkString("; ")
+    assert(pins == "b312f07d8e7c52d7 119 1.5198261506514281; " +
+      "e01917fea95685ce 78 1.45698712958006", s"$pins; $jobs jobs")
+    assert(jobs <= 8, s"the compaction started $jobs Spark jobs")
+    assertMetaMemoized(path, "after compact")
+  }
+
+  test("an empty shard serves warm: searchPoint and servePointBatch start 0 jobs after a shard wipe") {
+    val path = "/tmp/graft_test_index/empty_shard_warm"
+    val rows = labeledPointIndex(path)
+    val meta0 = DiskannIndex.loadMeta(spark, path)
+    val victim = (0 until meta0.numShards).minBy(s => (meta0.shardRows(s), s))
+    val wiped = DiskannIndex.nodesDf(spark, DiskannIndex.resolveRoot(spark, path),
+      meta0, Seq(victim)).select($"row_id").collect().map(_.getLong(0))
+    DiskannIndex.deleteRows(spark, path, wiped)
+    StreamingIngest.compact(spark, path)
+    val meta = DiskannIndex.loadMeta(spark, path)
+    assert(meta.shardRows(victim) == 0L && meta.numRows == 400 - wiped.length)
+    val k = 10
+    val qs: Seq[(Long, Array[Float], Array[Short])] =
+      Seq(3L, 150L, 277L, 390L).map(id => (id, rows(id)._1, null)) :+
+        ((9L, rows(9L)._1, Array(rows(9L)._2)))
+    // cold answers: the executor pool, and point queries on cold searchers
+    graft.index.GraphSearcher.invalidate(path)
+    val coldBatch = DiskannIndex.serveBatch(spark, path, qs, k, 100, 50, 0,
+      Set.empty, onDriver = false)
+    graft.index.GraphSearcher.invalidate(path)
+    val coldPoints = qs.map { case (_, v, l) =>
+      DiskannIndex.searchPoint(spark, path, v, k, qlabels = l)
+    }
+    assert(coldPoints.forall(_.length == k) && coldBatch.length == k * qs.length)
+    val (warm, jobs) = countingJobs((0 until 10).map { i =>
+      val (_, v, l) = qs(i % qs.length)
+      (DiskannIndex.searchPoint(spark, path, v, k, qlabels = l),
+        DiskannIndex.servePointBatch(spark, path, qs, k))
+    })
+    assert(jobs == 0, s"20 warm calls started $jobs job(s)")
+    warm.zipWithIndex.foreach { case ((point, batch), i) =>
+      assert(bits(point) == bits(coldPoints(i % qs.length)), s"point call $i")
+      assert(batch == coldBatch, s"batch call $i")
+    }
+  }
+
   test("streaming distinct monitor: exact below k, bounded error above k") {
     implicit val sqlCtx = spark.sqlContext
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

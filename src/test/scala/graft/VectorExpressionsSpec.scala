@@ -182,4 +182,27 @@ class VectorExpressionsSpec extends AnyFunSuite {
       "SELECT max(vec_norm(embedding)) m FROM emb_t").collect()(0).getDouble(0)
     assert(math.abs(r - 1.0) < 1e-5)
   }
+
+  test("register is idempotent: a name the session already holds is kept") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val reg = spark.sessionState.functionRegistry
+    graft.operators.TextAnalysis.register(spark)
+    val names = Seq("vec_norm", "vec_sum", "simhash64")
+    val ours = names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    val theirs: FunctionBuilder = _ => Literal(7.0)
+    names.foreach(n => reg.createOrReplaceTempFunction(n, theirs, "scala_udf"))
+    try {
+      VectorFunctions.register(spark)
+      graft.operators.TextAnalysis.register(spark)
+      names.foreach { n =>
+        assert(reg.lookupFunctionBuilder(FunctionIdentifier(n)).get eq theirs, n)
+      }
+    } finally names.zip(ours).foreach { case (n, b) =>
+      reg.createOrReplaceTempFunction(n, b, "built-in")
+    }
+    assert(math.abs(one(vec_norm(col("a"))).asInstanceOf[Double] -
+      math.sqrt(14.0)) < 1e-9)
+  }
 }
