@@ -155,27 +155,15 @@ object VectorFunctions {
  * `ArrayData`. Same numeric semantics as the Catalyst expressions above.
  */
 object VectorKernels {
-  /** Opt-in SIMD dispatch (`-Dgraft.simd=true` + the jdk.incubator.vector
-    * module present). DEFAULT OFF by measurement AND by contract: the
-    * Panama kernels reduce lanes, so their addition order differs from
-    * these sequential loops and results can differ in the last ulps —
-    * which would break the engine's bit-stable-distance discipline
-    * (oracle hash-matching, resumable-scan byte-equality). SimdBench
-    * quantifies the trade (numbers in SCALING.md §SIMD). */
-  private[graft] lazy val simdEnabled: Boolean =
-    (sys.props.get("graft.simd").contains("true") ||
-      sys.env.get("GRAFT_SIMD").contains("true")) &&
-      (try PanamaKernels.floatLanes() >= 2
-       catch { case _: Throwable => false })
-
+  // Sequential loops on purpose: a lane-reducing (SIMD) sum adds in another
+  // order and can differ in the last ulps, which would break the engine's
+  // bit-stable distances (oracle hash-matching, resumable-scan equality).
   final def dot(a: Array[Float], b: Array[Float]): Double = {
-    if (simdEnabled) return PanamaKernels.dotF(a, b)
     var acc = 0.0; var i = 0
     while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
     acc
   }
   final def l2sq(a: Array[Float], b: Array[Float]): Double = {
-    if (simdEnabled) return PanamaKernels.l2sqF(a, b)
     var acc = 0.0; var i = 0
     while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; acc += d * d; i += 1 }
     acc

@@ -54,6 +54,7 @@ case class DiskannParams(
  * search, so recall is ≥ the per-shard recall.
  */
 object DiskannIndex {
+  import WriteOnceFiles.DeltaRow
 
   private val nodeSchema = StructType(Seq(
     StructField("shard", IntegerType, nullable = false),
@@ -1127,8 +1128,13 @@ object DiskannIndex {
     import spark.implicits._
     // tolerate metas from earlier format generations (the analog of the
     // reference's V1/V2→V3 meta-page upgrade path, meta_page.rs:296-424):
-    // fill every missing field with the default that generation implied
-    var df = spark.read.parquet(s"$path/_meta")
+    // fill every missing field with the default that generation implied.
+    // The listed data files are read, not the directory: Spark ignores a
+    // `_`-prefixed root path (with a warning) before listing it.
+    val files = WriteOnceFiles.list(spark, s"$path/_meta")
+    if (files.isEmpty)
+      throw new java.io.FileNotFoundException(s"$path/_meta: no meta file")
+    var df = spark.read.parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
     if (!df.columns.contains("partitioner"))
       df = df.withColumn("partitioner", lit("hash"))
     if (!df.columns.contains("centroids"))
@@ -1332,21 +1338,45 @@ object DiskannIndex {
       searchListSize, rescore, tombstones, metrics)
   }
 
-  /** Collect a (qid, qvec [, qlabels]) query frame to driver rows; labels
-    * normalized, a null qlabels means unfiltered. */
+  /** Collect a (qid, qvec [, qlabels]) query frame to driver rows
+    * ([[queryRow]]). */
   private def queryRows(
       queries: DataFrame): Array[(Long, Array[Float], Array[Short])] = {
     val hasQLabels = queries.columns.contains("qlabels")
-    queries.collect().map { r =>
-      // null query vector => zero-vector search (labels/mod.rs:214-216)
-      val qv = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-      val ql = if (hasQLabels) r.getAs[mutable.Seq[Short]]("qlabels") match {
-        case null => null
-        case s => LabelSets.normalize(s.toArray)
-      } else null
-      (r.getAs[Long]("qid"), qv, ql)
-    }
+    queries.collect().map(queryRow(_, hasQLabels))
   }
+
+  /** A query frame's rows as an RDD of [[queryRow]]s. */
+  private def queryRdd(queries: DataFrame)
+      : org.apache.spark.rdd.RDD[(Long, Array[Float], Array[Short])] = {
+    val hasQLabels = queries.columns.contains("qlabels")
+    queries.rdd.map(queryRow(_, hasQLabels))
+  }
+
+  /** One (qid, qvec [, qlabels]) row; labels normalized, a null qlabels
+    * means unfiltered, a null qvec searches the zero vector
+    * (labels/mod.rs:214-216). */
+  private def queryRow(r: Row,
+      hasQLabels: Boolean): (Long, Array[Float], Array[Short]) = {
+    val qv = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
+    val ql = if (hasQLabels) r.getAs[mutable.Seq[Short]]("qlabels") match {
+      case null => null
+      case s => LabelSets.normalize(s.toArray)
+    } else null
+    (r.getAs[Long]("qid"), qv, ql)
+  }
+
+  /** The (qid, row_id, dist) schema of every search result frame. */
+  private val ResultSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false),
+    StructField("row_id", LongType, nullable = false),
+    StructField("dist", DoubleType, nullable = false)))
+
+  /** (qid, row_id, dist) driver rows as a local relation. */
+  private def localDf(spark: SparkSession,
+      hits: Seq[(Long, Long, Double)]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+      hits.map(h => Row(h._1, h._2, h._3)): _*), ResultSchema)
 
   /**
    * Low-latency POINT query — the reference's primary operation (one
@@ -1620,7 +1650,7 @@ object DiskannIndex {
     * distance, in [[hitOrder]], then the first k. Bounded: cut back to k at
     * 2k rows, and a row behind the k-th kept one (k distinct row_ids) is
     * dropped on arrival, so a long stream costs O(n log k), not a sort. */
-  private[graft] final class TopK(k: Int) {
+  private final class TopK(k: Int) extends Serializable {
     private val buf = mutable.ArrayBuffer.empty[(Long, Double)]
     private var kth: (Long, Double) = null
     private def compact(): Unit = {
@@ -1698,19 +1728,11 @@ object DiskannIndex {
       qRows: Array[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int, rescore: Int, tombstones: Set[Long],
       metrics: Option[SearchMetrics]): DataFrame = {
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    def localDf(hits: Seq[(Long, Long, Double)]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(
-        hits.map(h => Row(h._1, h._2, h._3)): _*), resultSchema)
-
     // all warm: a LocalRelation of the driver's answer (the window merge
     // below costs a job + shuffle: single-query p50 ~190 ms vs low-ms)
     val warm = searchWarm(path0, plan, qRows, k, searchListSize, rescore,
       tombstones, metrics)
-    if (warm.isDefined) return localDf(warm.get)
+    if (warm.isDefined) return localDf(spark, warm.get)
 
     val SearchPlan(path, meta, probeOf, neededShards) = plan
     val metric = Metric(meta.metric)
@@ -1732,7 +1754,7 @@ object DiskannIndex {
     val coldShards = neededShards.filterNot(warmSet)
     val warmPartial: Option[DataFrame] =
       if (warmPairs.isEmpty) None
-      else Some(localDf(searchOnDriver(warmPairs, plan, qRows, k,
+      else Some(localDf(spark, searchOnDriver(warmPairs, plan, qRows, k,
         searchListSize, rescore, tombstones, metrics)))
 
     val coldPartial: Option[DataFrame] = if (coldShards.isEmpty) None else {
@@ -1752,14 +1774,14 @@ object DiskannIndex {
           metrics.foreach(_.add(st))
           hits.iterator
         }
-      }(org.apache.spark.sql.Encoders.row(resultSchema)))
+      }(org.apache.spark.sql.Encoders.row(ResultSchema)))
     }
 
     val partial = (warmPartial, coldPartial) match {
       case (Some(w), Some(c)) => w.unionByName(c)
       case (Some(w), None) => w
       case (None, Some(c)) => c
-      case (None, None) => localDf(Seq.empty)
+      case (None, None) => localDf(spark, Seq.empty)
     }
 
     // final top-k merge per query
@@ -2182,10 +2204,7 @@ object DiskannIndex {
         (st, v) => agg.reduce(st, v), (a, b) => agg.merge(a, b))
       .flatMap { case (qid, st) =>
         st.ids.indices.iterator.map(i => Row(qid, st.ids(i), st.dists(i))) }
-    spark.createDataFrame(merged, StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false))))
+    spark.createDataFrame(merged, ResultSchema)
   }
 
   /**
@@ -2354,96 +2373,74 @@ object DiskannIndex {
   }
 
   /**
-   * [[rangeSearchDistributed]] + delta freshness — the radius twin of
-   * [[searchDistributedFresh]], same role flip: the query table is the big
-   * side and stays distributed, the (compaction-bounded) delta collects
-   * once and BROADCASTS; every query partition adds an exact map-side
-   * radius pass over it (tombstone-masked, label-filtered with the
-   * searchWithDelta rules). A row transiently in both main and delta
-   * (compact mid-flight) is collapsed by (qid, row_id) min-dist.
+   * [[rangeSearchDistributed]] + delta freshness, the radius twin of
+   * [[searchDistributedFresh]]: `delta` (row_id, vec [, labels]) is
+   * collected once ([[collectDelta]]) and every query partition adds an
+   * exact radius pass over a broadcast of it ([[deltaMapSide]]). A row
+   * transiently in both main and delta (compact mid-flight) appears once.
    */
   def rangeSearchDistributedFresh(spark: SparkSession, path0: String,
       queries: DataFrame, delta: DataFrame, radius: Double,
       searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty, maxResults: Int = 65536,
-      strict: Boolean = true): DataFrame = {
-    val meta = loadMeta(spark, resolveRoot(spark, path0))
-    val report = reportDistFn(Metric(meta.metric))
-    // SNAPSHOT the delta before the main search resolves its generation
-    // (the race-with-compact invariant — see searchDistributedFresh)
-    val deltaRows = collectDelta(spark, delta, "rangeSearchDistributedFresh")
+      strict: Boolean = true): DataFrame =
+    rangeSearchDistributedWithRows(spark, path0, queries,
+      collectDelta(spark, delta, "rangeSearchDistributedFresh"), radius,
+      searchListSize, rescore, tombstones, maxResults, strict)
+
+  /** [[rangeSearchDistributedFresh]] over delta rows read before this call
+    * resolves the generation (the race-with-compact invariant). */
+  private[graft] def rangeSearchDistributedWithRows(spark: SparkSession,
+      path0: String, queries: DataFrame, rows: Array[DeltaRow],
+      radius: Double, searchListSize: Int, rescore: Int,
+      tombstones: Set[Long], maxResults: Int, strict: Boolean): DataFrame = {
     val main = rangeSearchDistributed(spark, path0, queries, radius,
       searchListSize, rescore, tombstones, maxResults, strict)
-    val dBc = spark.sparkContext.broadcast(deltaRows)
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val hasQLabels = queries.columns.contains("qlabels")
-    val q3 = queries.select(col("qid"), col("qvec"),
-      (if (hasQLabels) col("qlabels")
-       else lit(null).cast(ArrayType(ShortType))).as("qlabels"))
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    val deltaHits = q3.mapPartitions { it =>
-      val tomb = tombBc.value
-      val dr = dBc.value
-      it.flatMap { r =>
-        val qid = r.getAs[Long]("qid")
-        val qv0 = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-        val ql = Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull
-        dr.iterator.flatMap { case (rid, v, lbs) =>
-          deltaScore(rid, v, lbs, qv0, ql, tomb.contains, report)
-            .filter(_ <= radius).map(d => Row(qid, rid, d)).iterator
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(resultSchema))
-    main.unionByName(deltaHits)
-      .groupBy(col("qid"), col("row_id")).agg(min(col("dist")).as("dist"))
+    if (rows.isEmpty) main
+    else mergeFrames(spark, main, deltaMapSide(spark, rows, queryRdd(queries),
+      Int.MaxValue, Some(radius), tombstones, reportOf(spark, path0)),
+      Int.MaxValue)
   }
 
   /**
    * Search main index + an unindexed delta (micro-batch appends, §3.3 / G9):
-   * the delta side is answered by exact brute force and merged into the final
-   * top-k. `delta` has columns (row_id, vec [, labels]).
+   * `delta` (row_id, vec [, labels]) is collected once ([[collectDelta]]),
+   * answered by exact brute force and merged into the final top-k.
    */
   def searchWithDelta(spark: SparkSession, path: String, queries: DataFrame,
       delta: DataFrame, k: Int, searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty,
-      metrics: Option[SearchMetrics] = None, nProbe: Int = 0): DataFrame = {
-    // the queries are collected ONCE, for the main search and the delta pass
+      metrics: Option[SearchMetrics] = None, nProbe: Int = 0): DataFrame =
+    searchWithRows(spark, path, queries,
+      collectDelta(spark, delta, "searchWithDelta"), k, searchListSize,
+      rescore, tombstones, metrics, nProbe)
+
+  /** [[searchWithDelta]] over delta rows read before this call resolves the
+    * generation. Up to [[MaxWarmBatch]] queries score the delta on the
+    * driver, and with every probed shard warm the whole answer is a local
+    * relation merged there; larger sets score it map-side. */
+  private[graft] def searchWithRows(spark: SparkSession, path0: String,
+      queries: DataFrame, rows: Array[DeltaRow], k: Int, searchListSize: Int,
+      rescore: Int, tombstones: Set[Long], metrics: Option[SearchMetrics],
+      nProbe: Int): DataFrame = {
     val qRows = queryRows(queries)
-    val plan = planSearch(spark, path, qRows, nProbe)
+    val plan = planSearch(spark, path0, qRows, nProbe)
+    def main = searchRows(spark, path0, plan, qRows, k, searchListSize,
+      rescore, tombstones, metrics)
+    if (rows.isEmpty) return main
     val report = reportDistFn(Metric(plan.meta.metric))
-    val main = searchRows(spark, path, plan, qRows, k, searchListSize, rescore,
-      tombstones, metrics)
-    val hasDLabels = delta.columns.contains("labels")
-    val qBc = spark.sparkContext.broadcast(qRows)
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-
-    val deltaHits = delta.mapPartitions { it =>
-      val tomb = tombBc.value
-      liveDeltaRows(it, hasDLabels, tomb).flatMap { case (rid, v, lbs) =>
-        qBc.value.iterator.flatMap { case (qid, qv0, ql) =>
-          deltaScore(rid, v, lbs, qv0, ql, tomb.contains, report)
-            .map(Row(qid, rid, _)).iterator
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(resultSchema))
-
-    main.unionByName(deltaHits)
-      // a row may transiently exist in BOTH the main graph and the delta
-      // (compaction folded the delta in, its file delete not yet visible);
-      // collapse by row_id so the top-k never contains duplicates
-      .groupBy(col("qid"), col("row_id")).agg(min(col("dist")).as("dist"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col("row_id"))))
-      .filter(col("rnk") <= k)
-      .drop("rnk")
+    def onDriver = deltaOnDriver(rows, qRows, k, None, tombstones, report)
+    searchWarm(path0, plan, qRows, k, searchListSize, rescore, tombstones,
+      metrics) match {
+      case Some(warm) => localDf(spark, mergeByQuery(warm ++ onDriver, k))
+      case None =>
+        val deltaHits =
+          if (qRows.length <= MaxWarmBatch)
+            spark.sparkContext.parallelize(onDriver, 1)
+          else deltaMapSide(spark, rows, spark.sparkContext.parallelize(qRows),
+            k, None, tombstones, report)
+        mergeFrames(spark, main, deltaHits, k)
+    }
   }
 
   /** Score one delta row against one query — THE definition of the
@@ -2454,7 +2451,7 @@ object DiskannIndex {
     * has no labels column) never matches a labeled query; a null query
     * vector searches the zero vector (labels/mod.rs:214-216). `lbs` and
     * `ql` must already be normalized. Returns the REPORT distance. */
-  private[graft] def deltaScore(rid: Long, v: Array[Float],
+  private def deltaScore(rid: Long, v: Array[Float],
       lbs: Array[Short], qv0: Array[Float], ql: Array[Short],
       tombstoned: Long => Boolean,
       report: (Array[Float], Array[Float]) => Double): Option[Double] =
@@ -2463,31 +2460,84 @@ object DiskannIndex {
       None
     else Some(report(v, if (qv0 == null) new Array[Float](v.length) else qv0))
 
-  /** Decode a delta scan's (row_id, vec [, labels]) rows for [[deltaScore]],
-    * skipping tombstoned rows BEFORE materializing the vector and labels: a
-    * heavily-tombstoned delta would otherwise pay an array copy + label
-    * normalize per masked row for no output. */
-  private[graft] def liveDeltaRows(it: Iterator[Row], hasDLabels: Boolean,
-      tomb: Set[Long]): Iterator[(Long, Array[Float], Array[Short])] =
-    it.filterNot(r => tomb.contains(r.getAs[Long]("row_id"))).map { r =>
-      (r.getAs[Long]("row_id"),
-        Option(r.getAs[mutable.Seq[Float]]("vec")).map(_.toArray).orNull,
-        if (hasDLabels) LabelSets.normalize(
-          Option(r.getAs[mutable.Seq[Short]]("labels")).map(_.toArray).orNull)
-        else null)
+  /** The delta rows query `q` (labels normalized) sees, as (qid, row_id,
+    * dist) under [[deltaScore]]: its k best, or with `radius` every one
+    * within it (k = Int.MaxValue), each row_id once at its minimum distance
+    * ([[TopK]]: a replayed micro-batch appends a row twice). */
+  private def scoreDelta(rows: Array[DeltaRow],
+      q: (Long, Array[Float], Array[Short]), k: Int, radius: Option[Double],
+      tomb: Set[Long],
+      report: (Array[Float], Array[Float]) => Double): Seq[(Long, Long, Double)] = {
+    val top = new TopK(k)
+    val dead: Long => Boolean = tomb.contains
+    rows.foreach { case (rid, v, lbs) =>
+      deltaScore(rid, v, lbs, q._2, q._3, dead, report)
+        .foreach(d => if (radius.forall(d <= _)) top.add((rid, d)))
     }
+    top.result.map { case (rid, d) => (q._1, rid, d) }
+  }
 
-  /** The pending delta as driver rows for [[deltaScore]], null-vector rows
-    * (which never match) dropped. Enforced, not advisory (the knnGraph guard
-    * discipline): the limit caps what can reach the driver, and one extra
-    * row proves oversize and fails by the knob's name. */
+  /** The driver's delta scorer: [[scoreDelta]] for each of `qRows`, one
+    * query per core. */
+  private[graft] def deltaOnDriver(rows: Array[DeltaRow],
+      qRows: Seq[(Long, Array[Float], Array[Short])], k: Int,
+      radius: Option[Double], tomb: Set[Long],
+      report: (Array[Float], Array[Float]) => Double): Seq[(Long, Long, Double)] = {
+    import scala.collection.parallel.CollectionConverters._
+    if (qRows.length <= 1)
+      qRows.flatMap(scoreDelta(rows, _, k, radius, tomb, report))
+    else qRows.par.flatMap(scoreDelta(rows, _, k, radius, tomb, report)).seq
+  }
+
+  /** The map-side delta scorer: [[scoreDelta]] for each of `queries`
+    * against a broadcast of `rows`. */
+  private def deltaMapSide(spark: SparkSession, rows: Array[DeltaRow],
+      queries: org.apache.spark.rdd.RDD[(Long, Array[Float], Array[Short])],
+      k: Int, radius: Option[Double], tomb: Set[Long],
+      report: (Array[Float], Array[Float]) => Double)
+      : org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
+    val dBc = spark.sparkContext.broadcast(rows)
+    val tombBc = spark.sparkContext.broadcast(tomb)
+    queries.mapPartitions(_.flatMap(
+      scoreDelta(dBc.value, _, k, radius, tombBc.value, report)))
+  }
+
+  /** Per qid, `main`'s (qid, row_id, dist) rows and `delta`'s under
+    * [[TopK]]: the k best, each row_id once at its minimum distance. */
+  private def mergeFrames(spark: SparkSession, main: DataFrame,
+      delta: org.apache.spark.rdd.RDD[(Long, Long, Double)], k: Int): DataFrame = {
+    val merged = main.rdd.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
+      .union(delta.map { case (qid, rid, d) => (qid, (rid, d)) })
+      .aggregateByKey(new TopK(k))((top, h) => { top.add(h); top },
+        (a, b) => { b.result.foreach(a.add); a })
+      .flatMap { case (qid, top) =>
+        top.result.iterator.map { case (rid, d) => Row(qid, rid, d) } }
+    spark.createDataFrame(merged, ResultSchema)
+  }
+
+  /** The report distance of `path0`'s current generation. */
+  private[graft] def reportOf(spark: SparkSession,
+      path0: String): (Array[Float], Array[Float]) => Double =
+    reportDistFn(Metric(loadMeta(spark, path0).metric))
+
+  /** A (row_id, vec [, labels]) delta frame as driver rows for
+    * [[deltaScore]], the same rows [[WriteOnceFiles.deltaRows]] decodes:
+    * null-vector rows (which never match) dropped, labels normalized.
+    * Enforced, not advisory (the knnGraph guard discipline): the limit caps
+    * what can reach the driver, and one extra row proves oversize and fails
+    * by the knob's name. */
   private[graft] def collectDelta(spark: SparkSession, delta: DataFrame,
-      caller: String): Array[(Long, Array[Float], Array[Short])] = {
+      caller: String): Array[DeltaRow] = {
+    val hasLabels = delta.columns.contains("labels")
     val collected = delta.filter(col("vec").isNotNull)
       .limit(maxDeltaRows(spark) + 1).collect()
     requireDeltaFits(spark, caller, collected.length)
-    liveDeltaRows(collected.iterator, delta.columns.contains("labels"),
-      Set.empty).toArray
+    collected.map { r =>
+      (r.getAs[Long]("row_id"), r.getAs[mutable.Seq[Float]]("vec").toArray,
+        if (hasLabels) LabelSets.normalize(
+          Option(r.getAs[mutable.Seq[Short]]("labels")).map(_.toArray).orNull)
+        else null)
+    }
   }
 
   /** Fail by the knob's name when `rows` pending delta rows exceed
@@ -2507,126 +2557,37 @@ object DiskannIndex {
     spark.conf.get("graft.delta.maxBroadcastRows", "2000000").toInt
 
   /**
-   * Exact radius pass over an UNINDEXED delta (the radius twin of
-   * [[searchWithDelta]]'s delta kernel): every delta row within `radius`
-   * of the query in REPORT distance, tombstone-masked, label-filtered with
-   * the same empty-set/null rules as the graph traversal
-   * (labels/mod.rs:188-204). One map-side job over the (small-by-the-
-   * compaction-contract) delta snapshot; the result collects because the
-   * caller ([[graft.streaming.StreamingIngest.rangeSearchFresh]]) merges
-   * it with the driver-side graph hits — both are bounded by the
-   * maxResults discipline above this.
-   */
-  private[graft] def rangeOverDelta(spark: SparkSession, path: String,
-      delta: DataFrame, qvec: Array[Float], radius: Double,
-      qlabels: Array[Short] = null,
-      tombstones: Set[Long] = Set.empty,
-      /** driver-boundedness: the collect below is capped at maxResults + 1
-        * rows (a Spark-side limit, so overflow never reaches the driver) —
-        * one extra row lets [[graft.streaming.StreamingIngest
-        * .rangeSearchFresh]] detect the overflow and return unconfirmed
-        * (its caller's exact-scan bail), the same loud-truncation
-        * discipline as the graph side's cap. 0 = uncapped (tests). */
-      maxResults: Int = 0): Seq[(Long, Double)] = {
-    val meta = loadMeta(spark, path)
-    val report = reportDistFn(Metric(meta.metric))
-    val hasDLabels = delta.columns.contains("labels")
-    val nq = Option(qlabels).map(l => LabelSets.normalize(l.clone())).orNull
-    val tombBc = spark.sparkContext.broadcast(tombstones)
-    val qv0 = qvec
-    val hitsDs = delta.mapPartitions { it =>
-      val tomb = tombBc.value
-      liveDeltaRows(it, hasDLabels, tomb).flatMap { case (rid, v, lbs) =>
-        deltaScore(rid, v, lbs, qv0, nq, tomb.contains, report)
-          .filter(_ <= radius).map(rid -> _).iterator
-      }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaDouble))
-    (if (maxResults > 0) hitsDs.limit(maxResults + 1) else hitsDs)
-      .collect().toSeq
-  }
-
-  /**
    * [[searchDistributed]] + delta freshness — the offline BATCH twin of
    * [[searchWithDelta]], closing the freshness gap where a large offline
-   * job had to run `compact()` first to see recent appends. The roles flip
-   * versus the online path: there the (small) query batch broadcasts and
-   * the delta is scanned; here the query table is the big side, so the
-   * delta — small versus the index by the compaction contract — collects
-   * once and BROADCASTS, and every query partition scores it map-side with
-   * a bounded per-query top-k heap. No extra shuffle of the query table;
-   * the only added wide op is the final ≤2k-rows-per-query re-merge
-   * through the same mergeable [[graft.operators.Similarity.TopKAggregator]].
-   * A delta too large to broadcast is the signal to compact, not to
-   * distribute this differently.
+   * job had to run `compact()` first to see recent appends. The query table
+   * is the big side and stays distributed; the delta — small versus the
+   * index by the compaction contract — collects once ([[collectDelta]]) and
+   * BROADCASTS, and every query partition scores it map-side
+   * ([[deltaMapSide]]). The only added wide op is the final per-query
+   * re-merge ([[mergeFrames]]). A delta too large to broadcast is the
+   * signal to compact, not to distribute this differently.
    */
   def searchDistributedFresh(spark: SparkSession, path0: String,
       queries: DataFrame, delta: DataFrame, k: Int,
       searchListSize: Int = 100, rescore: Int = 50,
-      tombstones: Set[Long] = Set.empty, nProbe: Int = 0): DataFrame = {
-    // SNAPSHOT the delta BEFORE the main search resolves its generation
-    // (the race-with-compact invariant, see StreamingIngest.searchFresh): a
-    // compact landing after this collect moves these same rows into the
-    // generation the main search then resolves — duplicates collapse below,
-    // nothing is lost. Collecting after resolving can lose rows.
-    val hasQLabels = queries.columns.contains("qlabels")
-    // sort + dedup by row_id: foreachBatch ingest is at-least-once, so a
-    // retried micro-batch appends the same row twice — without the dedup,
-    // both copies enter the bounded heap and can evict a DISTINCT true
-    // neighbor from the top-k (the online twin collapses by row_id before
-    // ranking and is immune)
-    val deltaRows = collectDelta(spark, delta, "searchDistributedFresh")
-      .filterNot { case (rid, _, _) => tombstones.contains(rid) }
-      .sortBy(_._1).distinctBy(_._1)
+      tombstones: Set[Long] = Set.empty, nProbe: Int = 0): DataFrame =
+    searchDistributedWithRows(spark, path0, queries,
+      collectDelta(spark, delta, "searchDistributedFresh"), k,
+      searchListSize, rescore, tombstones, nProbe)
 
-    val meta = loadMeta(spark, path0)
-    val report = reportDistFn(Metric(meta.metric))
+  /** [[searchDistributedFresh]] over delta rows read before this call
+    * resolves the generation (the race-with-compact invariant: a compact
+    * landing after the read moves these rows into the generation the main
+    * search then resolves, where they collapse with their delta copies). */
+  private[graft] def searchDistributedWithRows(spark: SparkSession,
+      path0: String, queries: DataFrame, rows: Array[DeltaRow], k: Int,
+      searchListSize: Int, rescore: Int, tombstones: Set[Long],
+      nProbe: Int): DataFrame = {
     val main = searchDistributed(spark, path0, queries, k, searchListSize,
       rescore, tombstones, nProbe)
-    val dBc = spark.sparkContext.broadcast(deltaRows)
-    val resultSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("row_id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    val deltaHits = queries.mapPartitions { it =>
-      val d = dBc.value
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      it.flatMap { r =>
-        val qid = r.getAs[Long]("qid")
-        val qv0 = Option(r.getAs[mutable.Seq[Float]]("qvec")).map(_.toArray).orNull
-        val ql = if (hasQLabels) Option(r.getAs[mutable.Seq[Short]]("qlabels"))
-          .map(s => LabelSets.normalize(s.toArray)).orNull else null
-        // bounded per-query heap: only k delta rows leave the partition
-        val heap = mutable.PriorityQueue.empty[(Double, Long)](ord)
-        d.foreach { case (rid, v, lbs) =>
-          // tombstones were masked at collect time
-          deltaScore(rid, v, lbs, qv0, ql, _ => false, report).foreach { dist =>
-            if (heap.size < k) heap.enqueue((dist, rid))
-            else if (ord.lt((dist, rid), heap.head)) {
-              heap.dequeue(); heap.enqueue((dist, rid))
-            }
-          }
-        }
-        heap.iterator.map { case (dist, rid) => Row(qid, rid, dist) }
-      }
-    }(org.apache.spark.sql.Encoders.row(resultSchema))
-
-    // collapse transient main∩delta duplicates (min dist per (qid, row_id)),
-    // then the same bounded mergeable top-k merge as searchDistributed —
-    // no sort, ~k rows/query; run as RDD ops with the same TopKAggregator
-    // insert kernel (round 16): the typed groupBy/groupByKey form re-paid
-    // two Catalyst plans + AQE stage materializations per query
-    val agg = new graft.operators.Similarity.TopKAggregator(k)
-    val merged = main.rdd.union(deltaHits.rdd)
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
-      .reduceByKey((a, b) => math.min(a, b))
-      .map { case ((qid, rid), d) => (qid, (rid, d)) }
-      .aggregateByKey(agg.zero)(
-        (st, v) => agg.reduce(st, v), (a, b) => agg.merge(a, b))
-      .flatMap { case (qid, st) =>
-        st.ids.indices.iterator.map(i => Row(qid, st.ids(i), st.dists(i))) }
-    spark.createDataFrame(merged, resultSchema)
+    if (rows.isEmpty) main
+    else mergeFrames(spark, main, deltaMapSide(spark, rows, queryRdd(queries),
+      k, None, tombstones, reportOf(spark, path0)), k)
   }
 
   /** Index introspection (V2, vacuum.rs:138-157 page-count analog): size and

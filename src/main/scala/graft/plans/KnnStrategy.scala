@@ -37,8 +37,10 @@ object KnnCatalog {
 
   private val registry = TrieMap.empty[String, Entry]
 
+  // Hadoop's normal form, the one a scan's relation path is in: `//`
+  // collapsed and a trailing `/` dropped
   private def norm(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
+    new org.apache.hadoop.fs.Path(p).toString.replaceFirst("^file:", "")
 
   def register(sourcePath: String, entry: Entry): Unit =
     registry.put(norm(sourcePath), entry.copy(sourcePath = norm(sourcePath)))
@@ -807,7 +809,7 @@ case class KnnIndexScanExec(outAttrs: Seq[AttributeReference], spark: SparkSessi
  * cannot be re-checked above — the heap may still hold the rows
  * physically), and pending micro-batch appends are merged in by
  * [[graft.streaming.StreamingIngest.rangeSearchFresh]] — an exact radius
- * pass over ONLY the (small) delta files, the searchWithDelta discipline
+ * pass over ONLY the (small) delta rows, the searchWithDelta discipline
  * applied to the radius shape, so the reference's every-scan-sees-inserts
  * semantics (build.rs:464-535) hold on this scan shape too. nProbe routing
  * is deliberately NOT honored here: a radius answer must see every shard,

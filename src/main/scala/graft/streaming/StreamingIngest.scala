@@ -149,89 +149,22 @@ object StreamingIngest {
       indexPath: String): Array[org.apache.hadoop.fs.Path] =
     graft.index.WriteOnceFiles.list(spark, s"$indexPath/delta").map(_.getPath)
 
-  /**
-   * Snapshot the delta as one DataFrame, or None when it is empty.
-   *
-   * List-then-read race defense: `ignoreMissingFiles` only skips files that
-   * vanish DURING execution — Spark's plan-time path resolution
-   * (`DataSource.checkAndGlobPathIfNecessary`) still throws when any
-   * explicitly listed file was already deleted by a concurrent compact
-   * between [[deltaFiles]] and the read. So a plan-time failure RE-LISTS
-   * and retries: the compact that consumed the files either leaves a
-   * smaller (or empty) delta, or the race repeats with fresh files. Files
-   * that persistently list but never resolve (a real corruption, not the
-   * race) surface the last error instead of being silently treated as
-   * empty.
-   *
-   * `eager = true` additionally localCheckpoints the snapshot — lineage
-   * truncation, so a lost partition FAILS loud rather than silently
-   * recomputing-to-empty from deleted files (see [[searchFresh]]).
-   */
-  private def readDeltaSnapshot(spark: SparkSession, indexPath: String,
-      eager: Boolean): Option[DataFrame] =
-    if (eager) snapshotDelta(spark, indexPath, "")(_.localCheckpoint(true))
-    else snapshotDelta(spark, indexPath, "#lazy")(identity)
-
-  // per-JVM memo of the delta snapshots (the EAGER checkpointed frame and
-  // the lazy read), keyed by the session instance + form + the delta
-  // listing's fingerprint (names + sizes + mtimes — delta files are
-  // write-once, renamed in): every fresh-serving query was re-reading and
-  // re-checkpointing an UNCHANGED delta — one eager Spark job of fixed
-  // overhead per query. An append or compact changes the listing, so the
-  // fingerprint invalidates naturally; a superseded entry's checkpoint
-  // blocks are freed by the ContextCleaner once unreachable. Index STATE
-  // memoization (the GraphSearcher-cache class) — never query results.
-  // round-16 hardening (ADVICE): keyed on applicationId (unique per
-  // context; identityHashCode can be reused after a GC'd session and would
-  // serve a checkpointed DataFrame bound to a dead context) and bounded —
-  // an unbounded map pins one localCheckpointed snapshot per dead
-  // (session, index) pair on the driver for the JVM's life.
-  private val deltaSnapshotCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (String, AnyRef)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
-        size() > 16
-    })
-
-  /** Read the current delta listing and turn it into one snapshot `form`
-    * (`materialize` runs once per listing fingerprint), or None when the
-    * delta is empty; the re-list-on-AnalysisException loop documented at
-    * [[readDeltaSnapshot]]. Each form is memoized under its own key. */
-  private def snapshotDelta[T <: AnyRef](spark: SparkSession,
-      indexPath: String, form: String)(
-      materialize: DataFrame => T): Option[T] = {
-    val maxAttempts = 4
-    var lastErr: Throwable = null
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val sts = graft.index.WriteOnceFiles.list(spark, s"$indexPath/delta")
-      if (sts.isEmpty) return None
-      val files = sts.map(_.getPath)
-      // each form is cached under its own key: the eager entry is a
-      // localCheckpointed DataFrame, the lazy one (round 16) is just the
-      // RESOLVED read — un-memoized, every distributed fresh search re-paid
-      // the schema-inference Spark job + file-index build for an UNCHANGED
-      // delta. A hit requires the CURRENT listing to match, so the
-      // race-with-compact window is identical to a fresh list-then-read.
-      val key = s"${spark.sparkContext.applicationId}#$indexPath$form"
-      val fp = sts.map(s =>
-          s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString("|")
-      val hit = deltaSnapshotCache.get(key)
-      if (hit != null && hit._1 == fp) return Some(hit._2.asInstanceOf[T])
-      try {
-        val snap = materialize(spark.read.option("ignoreMissingFiles", "true")
-          .parquet(files.map(_.toString).toIndexedSeq: _*))
-        deltaSnapshotCache.put(key, (fp, snap))
-        return Some(snap)
-      } catch {
-        // plan-time path-not-exist from the list-then-read race; re-list
-        case e: org.apache.spark.sql.AnalysisException => lastErr = e
-      }
-    }
-    throw lastErr
-  }
+  /** The index's own pending delta as driver rows, read through
+    * [[graft.index.WriteOnceFiles.deltaRows]] (each write-once file decoded
+    * once, on the driver, no Spark job); empty when no row is pending.
+    * The delta's summed footer row count is checked against
+    * `graft.delta.maxBroadcastRows` before any new file is decoded, failing
+    * by `caller`'s name. Every fresh read path takes it BEFORE it resolves
+    * the generation: a compaction landing in between moves the delta rows
+    * INTO the generation the later resolve picks up, and a delta file it
+    * consumed before its decode is skipped — so every row is visible on at
+    * least one side, and the main∪delta row_id collapse removes doubles.
+    * The reverse order can lose rows: old generation + deleted delta
+    * files. */
+  private def pendingDelta(spark: SparkSession, indexPath: String,
+      caller: String): Array[graft.index.WriteOnceFiles.DeltaRow] =
+    graft.index.WriteOnceFiles.deltaRows(spark, indexPath)(
+      DiskannIndex.requireDeltaFits(spark, caller, _)).getOrElse(Array.empty)
 
   /** True iff un-compacted micro-batch appends are pending — the signal the
     * SQL-planned scan uses to route through the delta-merging search. */
@@ -247,7 +180,7 @@ object StreamingIngest {
     * the GENERATION row count the same caller reads (the compact moved
     * them into main); appends landing after the count are invisible to
     * this query's snapshot anyway. */
-  // Per-file footer counts come from WriteOnceFiles, the memo the point
+  // Per-file footer counts come from WriteOnceFiles, the memo every fresh
   // path decodes delta files into: warm, one LIST and no footer open. The
   // count feeds an EXHAUSTION bound, so only over-counting is safe: a
   // transiently unreadable footer (store throttle, listing race that isn't
@@ -261,20 +194,12 @@ object StreamingIngest {
 
   /** Search main graph + current delta (exact over the delta side).
     *
-    * Race-with-compact invariant: the delta is SNAPSHOTTED — eagerly
-    * localCheckpoint'ed, which truncates lineage — BEFORE the main
-    * generation is resolved. A compaction landing in between moves the
-    * delta rows INTO the generation the later resolve then picks up, and
-    * the re-listing snapshot tolerates the already-consumed delta files —
-    * so every row is visible on at least one side, and the main∪delta
-    * row_id collapse removes doubles. The reverse order (resolve first,
-    * read delta lazily) can lose rows: old generation + deleted delta
-    * files. localCheckpoint over persist for two reasons: a lost cached
-    * partition cannot silently recompute-to-empty from deleted files (no
-    * lineage ⇒ the query FAILS loud instead of dropping rows), and its
-    * blocks are released by the ContextCleaner when the result is
-    * garbage-collected, so per-micro-batch serving loops accumulate no
-    * cache registry. */
+    * The delta is the driver rows of [[pendingDelta]], read before the
+    * main generation resolves (its race-with-compact invariant), and
+    * merged under [[DiskannIndex.searchWithDelta]]'s rule. Up to 128
+    * queries score it on the driver; with every probed shard warm the
+    * answer is then a local relation and starts no Spark job. A pending
+    * delta above `graft.delta.maxBroadcastRows` fails by the knob's name. */
   def searchFresh(spark: SparkSession, indexPath: String, queries: DataFrame,
       k: Int, searchListSize: Int = 100, rescore: Int = 50,
       tombstones: Set[Long] = Set.empty,
@@ -284,14 +209,9 @@ object StreamingIngest {
     // [[DiskannIndex.deleteRows]] stay invisible here without the caller
     // having to thread the set through (scan.rs:229-235 visibility)
     val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
-    readDeltaSnapshot(spark, indexPath, eager = true) match {
-      case Some(delta) =>
-        DiskannIndex.searchWithDelta(spark, indexPath, queries, delta, k,
-          searchListSize, rescore, tombs, metrics, nProbe)
-      case None =>
-        DiskannIndex.search(spark, indexPath, queries, k, searchListSize,
-          rescore, tombs, metrics, nProbe)
-    }
+    DiskannIndex.searchWithRows(spark, indexPath, queries,
+      pendingDelta(spark, indexPath, "searchFresh"), k, searchListSize,
+      rescore, tombs, metrics, nProbe)
   }
 
   /**
@@ -300,13 +220,12 @@ object StreamingIngest {
    * exact results. It runs no Spark job, also right after a write:
    * tombstones and delta rows come from [[graft.index.WriteOnceFiles]],
    * which decodes on the driver only the files written since the last read
-   * (warm, one listing per directory), and the delta is scored on the
+   * (warm, one listing per directory), and the delta ([[pendingDelta]],
+   * read before searchPoint resolves the generation) is scored on the
    * driver and merged under [[DiskannIndex.searchWithDelta]]'s rule. The
    * `graft.delta.maxBroadcastRows` cap is checked on the delta's summed
    * footer row counts (null-vector and replayed rows included) before any
-   * new file is decoded. The delta is snapshotted BEFORE searchPoint
-   * resolves the generation ([[searchFresh]]'s race-with-compact
-   * invariant). The pair (searchPoint for raw speed,
+   * new file is decoded. The pair (searchPoint for raw speed,
    * searchPointFresh for read-your-writes) mirrors the reference's scan
    * visibility semantics (scan.rs:229-235) at the point-query API.
    */
@@ -315,46 +234,49 @@ object StreamingIngest {
       rescore: Int = 50, nProbe: Int = 0, qlabels: Array[Short] = null,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
-    val delta = graft.index.WriteOnceFiles.deltaRows(spark, indexPath)(
-      DiskannIndex.requireDeltaFits(spark, "searchPointFresh", _))
+    val delta = pendingDelta(spark, indexPath, "searchPointFresh")
     val (main, metric) = DiskannIndex.searchPointResolved(spark, indexPath,
       qvec, k, searchListSize, rescore, nProbe, qlabels, tombs)
-    delta.fold(main) { rows =>
-      val report = DiskannIndex.reportDistFn(metric)
-      val ql = Option(qlabels).map(graft.index.LabelSets.normalize).orNull
-      val hits = rows.iterator.flatMap { case (rid, v, lbs) =>
-        DiskannIndex.deltaScore(rid, v, lbs, qvec, ql, tombs.contains, report)
-          .map(rid -> _)
-      }
-      DiskannIndex.mergeTopK(main.iterator ++ hits, k)
-    }
+    if (delta.isEmpty) main
+    else DiskannIndex.mergeTopK(main.iterator ++ pointDelta(delta, qvec,
+      qlabels, k, None, tombs, DiskannIndex.reportDistFn(metric)), k)
+  }
+
+  /** The delta rows one point query sees, as (row_id, dist): the k best, or
+    * with `radius` every one within it. */
+  private def pointDelta(rows: Array[graft.index.WriteOnceFiles.DeltaRow],
+      qvec: Array[Float], qlabels: Array[Short], k: Int,
+      radius: Option[Double], tombs: Set[Long],
+      report: (Array[Float], Array[Float]) => Double): Iterator[(Long, Double)] = {
+    val ql = Option(qlabels).map(graft.index.LabelSets.normalize).orNull
+    DiskannIndex.deltaOnDriver(rows, Seq((0L, qvec, ql)), k, radius, tombs,
+      report).iterator.map(h => (h._2, h._3))
   }
 
   /**
    * Freshness-aware twin of [[DiskannIndex.rangeSearchWithStatus]] — the
    * radius scan that SEES pending micro-batch appends: the graph side runs
    * the normal escalate-until-stable range traversal, the delta side is an
-   * exact radius pass over ONLY the (small) un-compacted delta files
-   * ([[DiskannIndex.rangeOverDelta]] — the searchWithDelta discipline
-   * applied to the radius shape), and the union collapses by row_id. This
+   * exact radius pass on the driver over [[pendingDelta]]'s rows (the
+   * searchWithDelta discipline applied to the radius shape), and the union
+   * collapses by row_id. This
    * closes the last scan shape where a pending delta forced an O(corpus)
    * fallback: the reference's index serves inserted rows on EVERY scan
    * (build.rs:464-535), so a streaming table's radius queries must too.
    *
-   * Race-with-compact invariant (same as [[searchFresh]]): the delta is
-   * snapshotted — eagerly, lineage-truncated — BEFORE the graph search
-   * resolves its generation, so a compact landing in between can only
-   * surface a row on both sides (collapsed below), never on neither.
+   * Race-with-compact invariant ([[pendingDelta]]): the delta is read
+   * BEFORE the graph search resolves its generation, so a compact landing
+   * in between can only surface a row on both sides (collapsed below),
+   * never on neither.
    *
    * Returns (hits, confirmed): `confirmed = false` means either the graph
    * traversal could not prove exhaustiveness (its own maxResults contract)
    * or the merged result overflowed `maxResults` — in both cases the
    * result may be incomplete and exactness-needing callers
    * ([[graft.plans.KnnRangeScanExec]]) must fall back to the exact scan.
-   * When unconfirmed BECAUSE the delta-side collect truncated, the
-   * returned prefix is an ARBITRARY subset of the delta's in-radius rows
-   * (Spark `limit` order, not nearest-first) — unconfirmed hits are a
-   * fallback trigger, not a best-effort answer; do not rank or serve them.
+   * Unconfirmed hits are a fallback trigger, not a best-effort answer; do
+   * not rank or serve them. A pending delta above
+   * `graft.delta.maxBroadcastRows` fails by the knob's name.
    */
   def rangeSearchFresh(spark: SparkSession, indexPath: String,
       qvec: Array[Float], radius: Double, searchListSize: Int = 100,
@@ -362,27 +284,19 @@ object StreamingIngest {
       tombstones: Set[Long] = Set.empty,
       maxResults: Int = 65536): (Seq[(Long, Double)], Boolean) = {
     val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
-    val deltaSnap = readDeltaSnapshot(spark, indexPath, eager = true)
+    val delta = pendingDelta(spark, indexPath, "rangeSearchFresh")
     val (mainHits, confirmed) = DiskannIndex.rangeSearchWithStatus(spark,
       indexPath, qvec, radius, searchListSize, rescore, qlabels, tombs,
       nProbe = 0, maxResults = maxResults)
-    deltaSnap match {
-      case None => (mainHits, confirmed)
-      case _ if !confirmed => (mainHits, false)
-      case Some(delta) =>
-        val deltaHits = DiskannIndex.rangeOverDelta(spark, indexPath, delta,
-          qvec, radius, qlabels, tombs, maxResults)
-        // a row can transiently exist in BOTH main and delta (compaction
-        // folded it, file delete not yet visible) — collapse by row_id.
-        // deltaHits arriving ABOVE maxResults means its capped collect
-        // truncated (rows past the cap never reached the driver), so the
-        // merge below may be missing rows even if collapsing shrinks it
-        // under the cap — unconfirmed, like any other cap-forced exit
-        val merged =
-          DiskannIndex.mergeTopK((mainHits ++ deltaHits).iterator, Int.MaxValue)
-        if (merged.length > maxResults || deltaHits.size > maxResults)
-          (merged.take(maxResults), false)
-        else (merged, true)
+    if (delta.isEmpty || !confirmed) (mainHits, confirmed)
+    else {
+      // a row can transiently exist in BOTH main and delta (compaction
+      // folded it, file delete not yet visible) — collapse by row_id
+      val merged = DiskannIndex.mergeTopK(mainHits.iterator ++ pointDelta(
+        delta, qvec, qlabels, Int.MaxValue, Some(radius), tombs,
+        DiskannIndex.reportOf(spark, indexPath)), Int.MaxValue)
+      if (merged.length > maxResults) (merged.take(maxResults), false)
+      else (merged, true)
     }
   }
 
@@ -455,92 +369,61 @@ object StreamingIngest {
    * Freshness-aware twin of [[DiskannIndex.servePointBatch]] — read-your-
    * writes for batch serving. The compacted generations answer through
    * [[DiskannIndex.servePointBatch]] (on the driver when its shards are
-   * warm there, else the executor pool); pending delta rows are
-   * brute-force scored against the batch in one pass over the delta files
-   * (bounded by the compaction contract) and merged driver-side under
-   * [[DiskannIndex.mergeTopK]], so results are identical to a
-   * post-compaction query. The durable tombstone registry folds in
-   * automatically, like every fresh path.
+   * warm there, else the executor pool); [[pendingDelta]]'s rows, read
+   * before the generation resolves, are scored against the batch on the
+   * driver, one query per core, and merged under
+   * [[DiskannIndex.mergeByQuery]], so results are identical to a
+   * post-compaction query. With every probed shard warm the call starts no
+   * Spark job. The durable tombstone registry folds in automatically, like
+   * every fresh path.
    */
   def servePointBatchFresh(spark: SparkSession, indexPath: String,
       queries: Seq[(Long, Array[Float], Array[Short])], k: Int,
       searchListSize: Int = 100, rescore: Int = 50, nProbe: Int = 0,
       tombstones: Set[Long] = Set.empty): Seq[(Long, Long, Double)] = {
+    val delta = pendingDelta(spark, indexPath, "servePointBatchFresh")
     val pool = DiskannIndex.servePointBatch(spark, indexPath, queries, k,
       searchListSize, rescore, nProbe, tombstones)
-    readDeltaSnapshot(spark, indexPath, eager = false) match {
-      case None => pool
-      case Some(delta) =>
-        val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
-        val meta = DiskannIndex.loadMeta(spark, indexPath)
-        val report = DiskannIndex.reportDistFn(
-          graft.index.Metric(meta.metric))
-        val hasDLabels = delta.columns.contains("labels")
-        val qArr = queries.map { case (qid, qv, ql) =>
-          (qid, qv, Option(ql).map(graft.index.LabelSets.normalize).orNull)
-        }.toArray
-        val qBc = spark.sparkContext.broadcast(qArr)
-        val tombBc = spark.sparkContext.broadcast(tombs)
-        // distributed brute force with a PER-PARTITION bounded top-k per
-        // query (each row_id once, at its minimum distance: a replayed
-        // micro-batch appends a row twice): the collect is ≤ partitions ×
-        // |batch| × k rows no matter how large the pending delta grows
-        val deltaHits = delta.rdd.mapPartitions { it =>
-          val qs = qBc.value
-          val best = qs.map(_ => new DiskannIndex.TopK(k))
-          DiskannIndex.liveDeltaRows(it, hasDLabels, tombBc.value).foreach {
-            case (rid, v, lbs) => qs.indices.foreach { i =>
-              DiskannIndex.deltaScore(rid, v, lbs, qs(i)._2, qs(i)._3,
-                _ => false, report).foreach(d => best(i).add((rid, d)))
-            }
-          }
-          qs.indices.iterator.flatMap(i =>
-            best(i).result.map { case (rid, d) => (qs(i)._1, rid, d) })
-        }.collect()
-        DiskannIndex.mergeByQuery(pool ++ deltaHits, k)
+    if (delta.isEmpty) pool
+    else {
+      val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
+      val report = DiskannIndex.reportOf(spark, indexPath)
+      val qRows = queries.map { case (qid, qv, ql) =>
+        (qid, qv, Option(ql).map(graft.index.LabelSets.normalize).orNull)
+      }
+      DiskannIndex.mergeByQuery(pool ++
+        DiskannIndex.deltaOnDriver(delta, qRows, k, None, tombs, report), k)
     }
   }
 
   /** Distributed twin of [[searchFresh]] for offline batch query tables:
-    * main-index results come from the shard-aligned zip path, the delta is
-    * broadcast and scored map-side ([[DiskannIndex.searchDistributedFresh]])
-    * — an offline job no longer needs a `compact()` first to see appends. */
+    * main-index results come from the shard-aligned zip path, and
+    * [[pendingDelta]]'s rows are broadcast and scored map-side
+    * ([[DiskannIndex.searchDistributedFresh]]) — an offline job no longer
+    * needs a `compact()` first to see appends. */
   def searchFreshDistributed(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, searchListSize: Int = 100,
       rescore: Int = 50, tombstones: Set[Long] = Set.empty,
       nProbe: Int = 0): DataFrame = {
     val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
-    // same race-with-compact invariant as [[searchFresh]]; here the
-    // snapshot is the eager driver collect inside searchDistributedFresh,
-    // which happens before ITS main search resolves the generation
-    readDeltaSnapshot(spark, indexPath, eager = false) match {
-      case Some(delta) =>
-        DiskannIndex.searchDistributedFresh(spark, indexPath, queries, delta,
-          k, searchListSize, rescore, tombs, nProbe)
-      case None =>
-        DiskannIndex.searchDistributed(spark, indexPath, queries, k,
-          searchListSize, rescore, tombs, nProbe)
-    }
+    DiskannIndex.searchDistributedWithRows(spark, indexPath, queries,
+      pendingDelta(spark, indexPath, "searchFreshDistributed"), k,
+      searchListSize, rescore, tombs, nProbe)
   }
 
   /** One-call BATCH radius with freshness — the radius twin of
-    * [[searchFreshDistributed]]: snapshots the index's own pending delta
-    * and routes through [[DiskannIndex.rangeSearchDistributedFresh]]'s
-    * broadcast-delta merge; with no delta pending it is exactly
+    * [[searchFreshDistributed]]: [[pendingDelta]]'s rows go through
+    * [[DiskannIndex.rangeSearchDistributedFresh]]'s broadcast-delta merge;
+    * with no delta pending it is exactly
     * [[DiskannIndex.rangeSearchDistributed]]. */
   def rangeSearchFreshDistributed(spark: SparkSession, indexPath: String,
       queries: DataFrame, radius: Double, searchListSize: Int = 100,
       rescore: Int = 50, tombstones: Set[Long] = Set.empty,
       maxResults: Int = 65536, strict: Boolean = true): DataFrame = {
     val tombs = DiskannIndex.loadTombstones(spark, indexPath, tombstones)
-    readDeltaSnapshot(spark, indexPath, eager = false) match {
-      case Some(delta) =>
-        DiskannIndex.rangeSearchDistributedFresh(spark, indexPath, queries,
-          delta, radius, searchListSize, rescore, tombs, maxResults, strict)
-      case None =>
-        DiskannIndex.rangeSearchDistributed(spark, indexPath, queries,
-          radius, searchListSize, rescore, tombs, maxResults, strict)
-    }
+    DiskannIndex.rangeSearchDistributedWithRows(spark, indexPath, queries,
+      pendingDelta(spark, indexPath, "rangeSearchFreshDistributed"), radius,
+      searchListSize, rescore, tombs, maxResults, strict)
   }
 
   /**
@@ -592,17 +475,33 @@ object StreamingIngest {
       // O(corpus) retraining rebuild — the single cost this threshold
       // exists to ration. (Unique ids already present in main still count
       // once — bounded bias, and the fold consumes them either way.) The
-      // distinct count is paid only on fold-due batches, over the bounded
-      // delta.
-      val stale = staleFraction > 0 && trained > 0 && {
-        val uniqueDelta = readDeltaSnapshot(spark, indexPath, eager = false)
-          .fold(0L)(_.select("row_id").distinct().count())
-        (mainRows + uniqueDelta - trained).toDouble / trained >= staleFraction
-      }
+      // distinct count is paid only on fold-due batches, as a Spark count
+      // over the listed files: compaction is the remedy for a delta too
+      // large for the driver, so this count must not be capped.
+      val stale = staleFraction > 0 && trained > 0 &&
+        (mainRows + uniqueDeltaIds(spark, indexPath) - trained).toDouble /
+          trained >= staleFraction
       if (stale) compact(spark, indexPath, tune, force = true)
       else compact(spark, indexPath, tune)
     }
     due
+  }
+
+  /** Distinct row_ids in the delta's listed files. A file a concurrent
+    * compact consumes between the listing and the plan fails the plan
+    * (Spark checks explicitly listed paths); the count then re-lists,
+    * up to `attempts` times. */
+  private def uniqueDeltaIds(spark: SparkSession, indexPath: String,
+      attempts: Int = 4): Long = {
+    val files = deltaFiles(spark, indexPath)
+    if (files.isEmpty) 0L
+    else try spark.read.schema(DeltaSchema).option("ignoreMissingFiles", "true")
+      .parquet(files.map(_.toString).toIndexedSeq: _*)
+      .select("row_id").distinct().count()
+    catch {
+      case _: org.apache.spark.sql.AnalysisException if attempts > 1 =>
+        uniqueDeltaIds(spark, indexPath, attempts - 1)
+    }
   }
 
   /** Fold the delta into the main graph: rebuild from nodes ∪ delta, then

@@ -678,7 +678,7 @@ class DiskannIndexSpec extends AnyFunSuite {
     // round 16 — a UUID minted per (re)build, so even a rebuild landing
     // within the same filesystem-timestamp second, or on a store whose
     // directory mtimes don't track children, invalidates exactly;
-    // readDeltaSnapshot keyed on the delta listing fingerprint) must never
+    // WriteOnceFiles keyed on the delta listing fingerprint) must never
     // serve stale index state: an append changes the delta fingerprint, a
     // wipe-and-rebuild at the SAME path mints a new buildId. The rebuild
     // below typically lands within the same second as the first build, so

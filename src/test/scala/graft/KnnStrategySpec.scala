@@ -775,6 +775,31 @@ class KnnStrategySpec extends AnyFunSuite {
     } finally KnnCatalog.unregister(freshSrc)
   }
 
+  test("a source registered as a path with `//` and a trailing `/` still index-plans and masks deletes") {
+    val src = "/tmp/graft_test_index/strategy_slash_src"
+    val idx = "/tmp/graft_test_index/strategy_slash_idx"
+    graft.tools.LocalFs.deleteRec(new java.io.File(idx))
+    spark.read.parquet(srcPath).select($"vec_id", $"embedding")
+      .write.mode("overwrite").parquet(src)
+    DiskannIndex.build(spark.read.parquet(src), "vec_id", "embedding", None,
+      idx, DiskannParams(metric = "cosine"))
+    Graft.enable(spark)
+    val registered = "/tmp/graft_test_index//strategy_slash_src/"
+    KnnCatalog.register(registered, KnnCatalog.Entry(idx, registered,
+      "vec_id", "embedding", None, "cosine"))
+    try {
+      DiskannIndex.deleteRows(spark, idx, Seq(0L))
+      val df = spark.sql(
+        s"""SELECT vec_id FROM parquet.`$src`
+           |ORDER BY vec_cosine_dist(embedding, $qvecSql) LIMIT 3""".stripMargin)
+      assert(df.queryExecution.executedPlan.collectFirst {
+        case s: graft.plans.KnnIndexScanExec => s }.isDefined,
+        df.queryExecution.executedPlan.toString)
+      val got = df.collect().map(_.getLong(0)).toSeq
+      assert(got.length == 3 && !got.contains(0L), s"tombstoned row served: $got")
+    } finally KnnCatalog.unregister(registered)
+  }
+
   test("computed SELECT projection (round of the distance) still index-plans") {
     setup
     // the exact shape Verify's SQL queries use: the analyzer puts a COMPUTED

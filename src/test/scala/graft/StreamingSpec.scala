@@ -1318,7 +1318,7 @@ class StreamingSpec extends AnyFunSuite {
       val q = spark.createDataFrame(java.util.Arrays.asList(Row(0L,
         Option(qv).map(_.toSeq).orNull, Option(ql).map(_.toSeq).orNull)),
         qSchema)
-      StreamingIngest.searchFresh(spark, path, q, k).collect()
+      viaSparkDelta(path, q, k)
         .map(r => (r.getLong(1), r.getDouble(2)))
         .sortBy { case (rid, d) => (d, rid) }.toSeq
     }
@@ -1432,8 +1432,23 @@ class StreamingSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** `searchFresh(...).collect()` of one query, ordered by (dist, row_id),
-    * with distances as bits (NaN equals NaN). */
+  /** The fresh answer with the delta decoded by Spark's parquet reader, an
+    * independent reference for the driver decode every fresh path reads:
+    * [[DiskannIndex.searchWithDelta]] over a read of the delta's files,
+    * with the durable tombstones. */
+  private def viaSparkDelta(path: String, q: org.apache.spark.sql.DataFrame,
+      k: Int): Array[org.apache.spark.sql.Row] = {
+    val tombs = DiskannIndex.loadTombstones(spark, path)
+    val files = StreamingIngest.deltaFiles(spark, path).map(_.toString)
+    (if (files.isEmpty) DiskannIndex.search(spark, path, q, k,
+      tombstones = tombs)
+    else DiskannIndex.searchWithDelta(spark, path, q,
+      spark.read.parquet(files.toIndexedSeq: _*), k, tombstones = tombs))
+      .collect()
+  }
+
+  /** [[viaSparkDelta]] of one query, ordered by (dist, row_id), with
+    * distances as bits (NaN equals NaN). */
   private def freshFrameBits(path: String, qv: Array[Float], ql: Array[Short],
       k: Int): Seq[(Long, Long)] = {
     import org.apache.spark.sql.Row
@@ -1443,7 +1458,7 @@ class StreamingSpec extends AnyFunSuite {
       StructField("qlabels", ArrayType(ShortType))))
     val q = spark.createDataFrame(java.util.Arrays.asList(Row(0L,
       Option(qv).map(_.toSeq).orNull, Option(ql).map(_.toSeq).orNull)), qSchema)
-    bits(StreamingIngest.searchFresh(spark, path, q, k).collect()
+    bits(viaSparkDelta(path, q, k)
       .map(r => (r.getLong(1), r.getDouble(2)))
       .sortBy { case (rid, d) => (d, rid) }.toSeq)
   }
@@ -1609,6 +1624,99 @@ class StreamingSpec extends AnyFunSuite {
     assert(WriteOnceFiles.memoized(spark, s"$path/delta") == live)
     assert(WriteOnceFiles.memoized(spark, s"$path/tombstones").isEmpty)
     assert(live.nonEmpty && (live & consumed).isEmpty)
+  }
+
+  test("servePointBatchFresh: a compact between its delta read and its main search serves an appended row exactly once") {
+    import graft.index.WriteOnceFiles
+    val path = "/tmp/graft_test_index/pool_fresh_race"
+    val rows = labeledPointIndex(path)
+    val (v, l) = rows(450L)
+    val q = Seq((0L, v, null: Array[Short]))
+    // every shard warm, then row 450 appended to the delta only
+    DiskannIndex.servePointBatch(spark, path, q, k = 5)
+    StreamingIngest.appendBatchToDelta(path)(
+      deltaBatch(Seq((450L, v, Array(l)))), 0L)
+    // the compact lands after the delta listing, before the file's decode
+    // and before the main search resolves the generation
+    var compacts = 0
+    WriteOnceFiles.beforeDecode = p =>
+      if (p.toString.contains(s"$path/delta/") && compacts == 0) {
+        compacts += 1
+        StreamingIngest.compact(spark, path)
+      }
+    val raced = try StreamingIngest.servePointBatchFresh(spark, path, q, k = 5)
+      finally WriteOnceFiles.beforeDecode = _ => ()
+    assert(compacts == 1, "the delta was not read through WriteOnceFiles")
+    assert(StreamingIngest.deltaFiles(spark, path).isEmpty)
+    assert(raced.count(_._2 == 450L) == 1,
+      s"row 450 must be served exactly once: $raced")
+    assert(raced.map(h => (h._2, h._3)) ==
+      StreamingIngest.searchPointFresh(spark, path, v, k = 5))
+  }
+
+  test("servePointBatchFresh, rangeSearchFresh and searchFresh start 0 Spark jobs with every shard warm and a delta pending") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val path = "/tmp/graft_test_index/fresh_zero_jobs"
+    val rows = labeledPointIndex(path)
+    def labeled(ids: Range) = ids.map(i => (i.toLong, rows(i)._1, Array(rows(i)._2)))
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(400 until 460)), 0L)
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch(labeled(440 until 460)), 1L)
+    DiskannIndex.deleteRows(spark, path, Seq(5L, 420L))
+    val k = 10
+    val batch = (0 until 64).map { i =>
+      val (v, l) = rows((i * 7 % 500).toLong)
+      (i.toLong, v, if (i % 2 == 0) null else Array(l))
+    }
+    val (qv, ql) = (rows(450L)._1, Array(rows(450L)._2))
+    val q1 = spark.createDataFrame(java.util.Arrays.asList(
+      Row(0L, qv.toSeq, ql.toSeq)), StructType(Seq(
+        StructField("qid", LongType, nullable = false),
+        StructField("qvec", ArrayType(FloatType)),
+        StructField("qlabels", ArrayType(ShortType)))))
+    val radius = StreamingIngest.searchPointFresh(spark, path, qv, k).last._2
+    // warm: the executor pool decodes every shard into this JVM's cache
+    DiskannIndex.serveBatch(spark, path, batch, k, 100, 50, 0, Set.empty,
+      onDriver = false)
+    def calls() = (StreamingIngest.servePointBatchFresh(spark, path, batch, k),
+      StreamingIngest.rangeSearchFresh(spark, path, qv, radius),
+      StreamingIngest.searchFresh(spark, path, q1, k).collect())
+    calls()
+    val ((pool, (inRadius, confirmed), frame), jobs) = countingJobs(calls())
+    assert(jobs == 0, s"the warm fresh calls started $jobs job(s)")
+    batch.foreach { case (qid, v, l) =>
+      assert(bits(pool.filter(_._1 == qid).map(h => (h._2, h._3))) ==
+        bits(StreamingIngest.searchPointFresh(spark, path, v, k, qlabels = l)),
+        s"query $qid")
+    }
+    val point = StreamingIngest.searchPointFresh(spark, path, qv, k)
+    assert(confirmed && point.map(_._1).toSet.subsetOf(inRadius.map(_._1).toSet)
+      && inRadius.exists(_._1 == 450L), s"$inRadius vs $point")
+    assert(bits(frame.map(r => (r.getLong(1), r.getDouble(2))).toSeq) ==
+      bits(StreamingIngest.searchPointFresh(spark, path, qv, k, qlabels = ql)))
+  }
+
+  test("searchFresh, rangeSearchFresh and servePointBatchFresh: a delta above graft.delta.maxBroadcastRows fails by the knob's name") {
+    val path = "/tmp/graft_test_index/fresh_paths_cap"
+    val rows = labeledPointIndex(path)
+    StreamingIngest.appendBatchToDelta(path)(deltaBatch((400 until 460)
+      .map(i => (i.toLong, rows(i)._1, Array(rows(i)._2)))), 0L)
+    val v = rows(450L)._1
+    val q = Seq((0L, v)).toDF("qid", "qvec")
+    val paths: Seq[(String, () => Any)] = Seq(
+      "searchFresh" -> (() => StreamingIngest.searchFresh(spark, path, q, 5)),
+      "rangeSearchFresh" -> (() =>
+        StreamingIngest.rangeSearchFresh(spark, path, v, 0.1)),
+      "servePointBatchFresh" -> (() => StreamingIngest.servePointBatchFresh(
+        spark, path, Seq((0L, v, null)), 5)))
+    // under the default cap the 60-row delta serves
+    paths.foreach(_._2())
+    spark.conf.set("graft.delta.maxBroadcastRows", "40")
+    try paths.foreach { case (name, call) =>
+      val err = intercept[IllegalArgumentException](call())
+      assert(err.getMessage.contains(s"$name: pending delta") &&
+        err.getMessage.contains("graft.delta.maxBroadcastRows"), err.getMessage)
+    } finally spark.conf.unset("graft.delta.maxBroadcastRows")
   }
 
   test("searchPointFresh: a new file over graft.delta.maxBroadcastRows fails by the knob's name before it is decoded") {
